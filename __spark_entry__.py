@@ -163,8 +163,8 @@ FROM spine s LEFT JOIN (SELECT sid, value FROM ranked WHERE rn = 1) r ON s.sid =
 
 
 def q_pit_merge_asof(spark, sf_dir):
-    """Same semantics via the cogrouped sorted-merge (Arrow merge_asof)
-    physical strategy — shares the join_dedup oracle."""
+    """Same query under the former ``merge_asof`` strategy name, which
+    now runs the same union-scan — shares the join_dedup oracle."""
     return q_pit_latest_click(spark, sf_dir, strategy="merge_asof")
 
 
@@ -1384,7 +1384,7 @@ def q_entityless_range(spark, sf_dir):
     """The same entityless as-of as `entityless`, on the fully
     distributed range_union physical strategy (range-partitioned
     union + per-partition carry-in — no single-task stage at ANY
-    spine size, closing the merge_asof path's documented one-group
+    spine size, where the default entityless scan has a one-task
     bound). Shares `entityless`'s oracle: the two driver rows
     together pin cross-strategy equivalence at the gate."""
     from feast_spark.operators.asof_join import point_in_time_join

@@ -48,9 +48,8 @@ SPINE_ROWS = int(os.environ.get("BENCH_SPINE_ROWS", "400000"))
 # scaling gate's default — fixed per-job overhead amortizes to <10%
 TP_SEQ_DOCS = int(os.environ.get("BENCH_TP_SEQ_DOCS", "500000"))
 TP_SPINE_ROWS = int(os.environ.get("BENCH_TP_SPINE_ROWS", "4000000"))
-# join_dedup (Catalyst-native) A/B-measured faster than merge_asof on
-# this box AND scales 0.94 from 2->8 cores; merge_asof remains the
-# per-query benchmark entry and the hot-key-fan-out scale path
+# kept for compatibility: every former strategy name (auto, join_dedup,
+# merge_asof, broadcast) runs the one union-scan as-of join
 STRATEGY = os.environ.get("BENCH_STRATEGY", "join_dedup")
 
 
@@ -62,11 +61,9 @@ def _noop_write(df) -> None:
 def headline_job(
     spark, seq_docs: int = SEQ_DOCS, spine_rows: int = SPINE_ROWS
 ) -> tuple[float, int]:
-    """PIT as-of join (strategy $BENCH_STRATEGY, default join_dedup —
-    the Catalyst conditional-join path; merge_asof is the opt-in
-    hot-key-fan-out variant) of the spine against the token-sequence
-    table + windowed feature engineering, materialized. Returns
-    (seconds, spine_rows)."""
+    """PIT as-of join (the union-scan; $BENCH_STRATEGY is passed through)
+    of the spine against the token-sequence table + windowed feature
+    engineering, materialized. Returns (seconds, spine_rows)."""
     from pyspark.sql import functions as F
 
     from feast_spark.datagen import spark_entity_spine, spark_token_sequences

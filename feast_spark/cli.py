@@ -143,7 +143,9 @@ def build_parser() -> argparse.ArgumentParser:
     g.add_argument("--created-col", default=None)
     g.add_argument("--ttl-days", type=int, default=None)
     g.add_argument("--strategy", default="join_dedup",
-                   choices=["join_dedup", "merge_asof", "broadcast"])
+                   choices=["join_dedup", "merge_asof", "broadcast"],
+                   help="accepted for compatibility: every name runs the "
+                        "one union-scan as-of join")
     g.add_argument("--prefix", default="",
                    help="prefix for output feature columns (avoids spine collisions)")
     g.set_defaults(fn=cmd_get_historical_features)

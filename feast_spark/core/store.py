@@ -6,17 +6,17 @@ SparkComputeEngine DAG compute.py:218-254 / feature_builder.py:85-146)
 as one Spark-first plan builder:
 
     per view:  load → [transform udf] → [filter] → [aggregate] → PIT join
-    finally:   fan-in left joins on the spine row id → [ODFV mapInPandas]
+               onto the spine grown by the views before it
+    finally:   [ODFV mapInPandas]
 
 Differences from the reference, deliberate:
 * no SQL templating / temp-view staging — one lazy DataFrame plan end to
   end, so Catalyst sees everything (pushdown, join reorder, AQE);
 * ODFV transforms run distributed via ``mapInPandas`` instead of
   driver-side pandas (offline_store.py:155-167);
-* the synthetic string row id (spark.py:683-688) is replaced by an
-  internal content-derived id (xxhash64 + within-hash row_number) that
-  is deterministic across plan branches — see
-  ``operators.asof_join._with_row_id``.
+* no synthetic row id (spark.py:683-688) and no fan-in join: each
+  view's as-of join is a union-scan that carries the whole spine row
+  through (``operators.asof_join``), so the views simply chain.
 """
 
 from __future__ import annotations
@@ -34,7 +34,7 @@ from feast_spark.core.feature_view import (
     FeatureView,
     OnDemandFeatureView,
 )
-from feast_spark.operators.asof_join import SPINE_ROW_ID, _with_row_id, point_in_time_join
+from feast_spark.operators.asof_join import point_in_time_join
 from feast_spark.operators.windows import agg_fn, tumbling_agg
 
 TIMESTAMP_TYPES = ("timestamp", "timestamp_ntz")
@@ -273,12 +273,10 @@ class FeatureStore:
             ).first()
             bounds = (row["lo"], row["hi"])
 
-        # Stamp the deterministic row id ONCE on the raw entity_df; every
-        # view joins against this narrow `base` (never the accumulated
-        # frame — re-deriving ids on a post-shuffle accumulator silently
-        # mis-joined features under the shuffle-join regime).
-        base = _with_row_id(entity_df)
-        acc = base
+        # each view's as-of join runs on the spine as grown by the views
+        # before it: the union-scan carries whole spine rows through, so
+        # there is no row id to stamp and nothing to join back
+        out = entity_df
         for view_name, wanted in refs.items():
             if view_name in self._odfvs:
                 continue  # applied post-join below
@@ -332,8 +330,15 @@ class FeatureStore:
                 )
 
             cols = wanted or view.feature_cols
-            res = point_in_time_join(
-                base,
+            prefix = f"{view_name}__" if full_feature_names else ""
+            dup = {prefix + c for c in cols or ()} & (set(out.columns) - set(entity_df.columns))
+            if dup:
+                raise ValueError(
+                    f"feature columns {sorted(dup)} from view {view_name!r} collide "
+                    "with columns already retrieved — pass full_feature_names=True"
+                )
+            out = point_in_time_join(
+                out,
                 fdf,
                 view.join_keys,
                 cols,
@@ -342,21 +347,8 @@ class FeatureStore:
                 created_col=created,
                 ttl_seconds=view.ttl_seconds,
                 strategy=strategy,
+                feature_prefix=prefix,
             )
-            out_cols = [c for c in res.columns if c not in base.columns]
-            sel = res.select(SPINE_ROW_ID, *out_cols)
-            if full_feature_names:
-                for c in out_cols:
-                    sel = sel.withColumnRenamed(c, f"{view_name}__{c}")
-                out_cols = [f"{view_name}__{c}" for c in out_cols]
-            dup = set(out_cols) & set(acc.columns)
-            if dup:
-                raise ValueError(
-                    f"feature columns {sorted(dup)} from view {view_name!r} collide "
-                    "with columns already retrieved — pass full_feature_names=True"
-                )
-            acc = acc.join(sel, on=SPINE_ROW_ID, how="left")
-        out = acc.drop(SPINE_ROW_ID)
 
         # ODFV transforms, distributed (mapInPandas) not driver-side
         for name, wanted in refs.items():

@@ -12,285 +12,148 @@ For each spine row ``(entity keys, event_timestamp)``:
 * if ``ttl > 0``: additionally ``feature.ts >= spine.event_timestamp - ttl``,
 * among candidates keep the one with the greatest ``ts``; ties broken by
   greatest ``created`` timestamp (backfill semantics,
-  test_universal_historical_retrieval.py:546-641),
+  test_universal_historical_retrieval.py:546-641), then by the greatest
+  ``tie_breaker_cols``,
 * spine rows with no candidate keep NULL feature values (left-join
-  preservation, dask.py:736-756),
+  preservation, dask.py:736-756); so do spine rows whose ts or any join
+  key is NULL (NULL never equals a key),
 * output has exactly one row per spine row (multiplicity preserved).
 
-Physical strategies (selectable, all produce identical results):
+Algorithm — one union-scan (Databricks Labs tempo's ``asofJoin``):
 
-* ``join_dedup`` — conditional equi-join on keys + θ time filter, then
-  ``row_number()`` window dedup per spine row. Catalyst-native: the time
-  bounds push into the scan, AQE handles skew. Mirrors the reference's
-  SQL-template plan but as DataFrame ops.
-* ``merge_asof`` — cogrouped sorted-merge: both sides shuffled once by
-  entity key, then a vectorized Arrow-batched ``pd.merge_asof`` per
-  cogroup. One shuffle per side, no join explosion on hot keys with many
-  candidate rows. This is the scale path (the Ray store's windowed
-  sorted-merge, ray.py:799-920, reimagined on Spark cogroup).
-* ``broadcast`` — ``join_dedup`` with an explicit broadcast hint on the
-  feature side for small dimension tables (Ray's 100 MB threshold path,
-  ray.py:437-448).
+1. Every feature row with a non-NULL ts and non-NULL join keys becomes
+   one tagged struct ``(ts, created, tie-breaks, payload)``.
+2. Those rows are unioned with the whole spine rows; feature rows fill
+   only the join-key columns, spine rows carry a NULL struct.
+3. The union is partitioned by the join keys and ordered by ts, with
+   features before spine rows at equal ts (the inclusive bound), then
+   created and tie-breaks ascending, NULLs first.
+4. At each spine row the running ``last(struct, ignorenulls)`` is the
+   greatest (ts, created, tie-breaks) feature at or before it; it is
+   NULLed when the spine ts is NULL or the match is older than
+   ``spine ts - ttl``.
 
-Scale notes (100 TB design): both sides arrive partitioned by entity
-key; ``merge_asof`` performs exactly one hash shuffle per input and a
-linear merge per group — no quadratic blow-up when a hot doc_id has
-thousands of feature versions in the TTL window. ``join_dedup``'s
-intermediate is |matches| rows, which AQE skew-split handles; prefer
-``merge_asof`` when feature-version fan-out per key is large.
+That is one hash Exchange and one Sort per join: no spine row id, no
+conditional join and no join back, and a hot key costs a linear pass,
+never a spine × versions pair set. Spine multiplicity holds by
+construction, since each spine row is one row of the union.
+
+Zero join keys (an entityless view) is the same scan over an
+unpartitioned window: linear, but one task. ``strategy="range_union"``
+is the distributed entityless path: the union is range-partitioned on
+ts and each range partition receives the last feature of the ranges
+before it as a carry-in.
 """
 
 from __future__ import annotations
 
 from typing import Iterable, Sequence
 
-import pandas as pd
-
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-SPINE_ROW_ID = "__feast_spine_row_id"
-_ENTITY_TS_TAG = "__feast_entity_ts"
-DUMMY_ENTITY_COL = "__dummy_id"
+# names of former physical strategies; every one now runs the union-scan
+_UNION_SCAN_NAMES = ("auto", "join_dedup", "merge_asof", "broadcast")
 
-
-def _hashable_orderable(dt) -> bool:
-    """True when ``xxhash64``/``orderBy`` accept the type (everything but
-    MapType, recursively)."""
-    from pyspark.sql import types as T
-
-    if isinstance(dt, T.MapType):
-        return False
-    if isinstance(dt, T.ArrayType):
-        return _hashable_orderable(dt.elementType)
-    if isinstance(dt, T.StructType):
-        return all(_hashable_orderable(f.dataType) for f in dt.fields)
-    return True
+_INTERNAL = "__asof_"  # prefix of every working column of the union
+_TS = _INTERNAL + "ts"
+_F = _INTERNAL + "f"
+_M = _INTERNAL + "m"
 
 
-def _with_row_id(spine: DataFrame, assume_unique: bool | str | None = None) -> DataFrame:
-    """Attach a unique internal row id preserving spine multiplicity.
-
-    Idempotent: a pre-stamped spine is returned unchanged, so the id is
-    derived ONCE and every downstream plan branch agrees on it.
-
-    The id is CONTENT-DERIVED, so re-evaluating the expression in
-    independent plan branches (Spark does not share subplans) yields
-    identical row→id assignments even when the spine's lineage contains
-    nondeterministic shuffles (round-robin ``repartition``,
-    AQE-coalesced reads, task retries). ``monotonically_increasing_id``
-    is NOT safe here: it numbers rows by partition/position, and two
-    evaluations of a post-shuffle plan can see different row orders —
-    features silently attach to wrong spine rows (the reference avoids
-    this with a content-concat ``entity_row_unique_id``,
-    spark.py:683-688; we keep its content-derivation property without
-    the string-of-every-column blowup).
-
-    Three physical forms (same contract — every row gets a globally
-    unique, content-deterministic id):
-
-    * GLOBAL WINDOW (default) — ``h`` plus ``row_number`` among
-      equal-hash rows ordered by the full row, so duplicate rows get
-      distinct (interchangeable) ids and hash-colliding distinct rows
-      stay distinguishable. One hash shuffle + sort of the (narrow)
-      spine per plan-branch evaluation. An interleaved A/B (7
-      alternations, bench headline at local[32], see
-      BENCH/BASELINE.md "Row-id A/B") measured this within noise of
-      the map-only form at 400k spine rows — Spark's narrow-row window
-      is NOT the bench bottleneck, so the default keeps the
-      probe-free, duplicate-safe form.
-    * UNIQUE-ROWS FAST PATH (``assume_unique=True``) — the id is two
-      independent ``xxhash64`` values of the row (128 effective bits:
-      P[any collision] ≈ n²/2¹²⁹ ≈ 10⁻¹⁵ at 10¹² rows — a single
-      64-bit hash is NOT enough there, ~27k expected colliding pairs
-      would silently cross-attach features). Pure map-side codegen: NO
-      shuffle, NO sort. At 10¹² spine rows the window form's
-      per-branch full-spine shuffle+sort becomes real money — callers
-      that constructed the spine (e.g. a ``distinct()`` output, a
-      generated grid) should pass the flag. UNSAFE if fully-duplicate
-      rows exist: copies share an id and join-backs explode.
-    * SPLIT PATH (``assume_unique="probe"``) — for huge, ALMOST-unique
-      spines where the flag can't be asserted: one probe aggregation
-      (``groupBy(h) → count > 1``, map-side combinable) finds the
-      duplicated-hash set (tiny), which is broadcast; non-duplicated
-      rows take the map-only fast id and only duplicated rows go
-      through the window — a shuffle of |dup rows|, not |spine|. Fast
-      ids are ``h-h2``, window ids ``h-rownum``; they can never
-      collide because a fast row's ``h`` is by construction not shared
-      with any window row. The probe is an eager job at plan-build
-      time and the union scans the spine twice per branch — measured a
-      net LOSS at bench scale (5.27 s vs 4.06 s median), so it is
-      opt-in for the regime it exists for: spine lineage cheap to
-      re-scan, spine too large to window-sort per branch. CACHING
-      NOTE: the duplicated-hash set is persisted (the returned lazy
-      plan references it from every branch and cannot unpersist it);
-      like the dedup-pipeline persists, batch drivers issuing many
-      probe-stamped joins per session should
-      ``spark.catalog.clearCache()`` between jobs.
-    """
-    if SPINE_ROW_ID in spine.columns:
-        return spine
-    cols = [f.name for f in spine.schema.fields if _hashable_orderable(f.dataType)]
-    if not cols:  # degenerate: no hashable column at all
-        return spine.withColumn(SPINE_ROW_ID, F.monotonically_increasing_id().cast("string"))
-    h = F.xxhash64(*[F.col(c) for c in cols])
-    h2 = F.xxhash64(F.lit(-6742718), *[F.col(c) for c in cols])
-    fast_id = F.concat_ws("-", h.cast("string"), h2.cast("string"))
-    w = Window.partitionBy(h).orderBy(*[F.col(c) for c in cols])
-    window_id = F.concat_ws("-", h.cast("string"), F.row_number().over(w).cast("string"))
-    if assume_unique is True:
-        return spine.withColumn(SPINE_ROW_ID, fast_id)
-    if assume_unique is None or assume_unique is False:
-        return spine.withColumn(SPINE_ROW_ID, window_id)
-    if assume_unique != "probe":
-        raise ValueError(f"assume_unique must be True/False/None/'probe', got {assume_unique!r}")
-    # probe: hashes shared by >1 row. Deterministic regardless of spine
-    # lineage (it is a pure aggregate of row content), so re-evaluating
-    # it inside plan branches can never disagree; persisted because the
-    # broadcast side is referenced by every branch of the caller's plan.
-    max_dup_hashes = 4_000_000  # ~32 MB of longs — broadcastable
-    dup = (
-        spine.groupBy(h.alias("__feast_dup_h"))
-        .agg(F.count(F.lit(1)).alias("__c"))
-        .filter(F.col("__c") > 1)
-        .select("__feast_dup_h")
-        .persist()
-    )
-    n_dup = dup.count()
-    if n_dup == 0:
-        dup.unpersist()
-        return spine.withColumn(SPINE_ROW_ID, fast_id)
-    if n_dup > max_dup_hashes:
-        dup.unpersist()
-        return spine.withColumn(SPINE_ROW_ID, window_id)
-    marked = spine.join(
-        F.broadcast(dup), h == F.col("__feast_dup_h"), "left"
-    )
-    fast = (
-        marked.filter(F.col("__feast_dup_h").isNull())
-        .drop("__feast_dup_h")
-        .withColumn(SPINE_ROW_ID, fast_id)
-    )
-    slow = (
-        marked.filter(F.col("__feast_dup_h").isNotNull())
-        .drop("__feast_dup_h")
-        .withColumn(SPINE_ROW_ID, window_id)
-    )
-    return fast.unionByName(slow)
-
-
-def _entityless_range_union(
+def _tagged_union(
     spine: DataFrame,
     features: DataFrame,
-    feature_cols: Sequence[str],
+    join_keys: list[str],
+    feature_cols: list[str],
     *,
     spine_ts_col: str,
     feature_ts_col: str,
     created_col: str | None,
-    ttl_seconds: int | None,
-    include_feature_ts: bool,
-    tie_breaker_cols: Sequence[str],
-) -> DataFrame:
-    """Entityless as-of join with NO single-task stage — the
-    10⁹-row-spine scale path (``strategy="range_union"``).
+    tie_breaker_cols: list[str],
+) -> tuple[DataFrame, list[Column]]:
+    """The union of tagged feature rows and spine rows, plus the scan
+    order within a partition. Feature join keys are cast to the spine's
+    key types; both timestamps are compared as the spine's ts type, or
+    as ``timestamp`` when the two types differ."""
+    s_types = {f.name: f.dataType for f in spine.schema.fields}
+    f_types = {f.name: f.dataType for f in features.schema.fields}
+    ts_type = s_types[spine_ts_col]
+    if f_types[feature_ts_col] != ts_type:
+        ts_type = T.TimestampType()
 
-    Algorithm: tag feature and spine rows, union them, range-partition
-    the union by timestamp, and within each range partition take the
-    running ``last(feature, ignorenulls)`` in (ts, kind, created,
-    tie-break) order — features sort before spine rows at equal ts
-    (inclusive upper bound) and ascending created/tie-breaks make the
-    last feature the max-created one. Rows whose partition starts
-    after the last feature of earlier partitions get a CARRY-IN: one
+    fields = [F.col(feature_ts_col).alias("__fts")]
+    if created_col:
+        fields.append(F.col(created_col).alias("__created"))
+    fields += [F.col(c).alias(f"__tb{i}") for i, c in enumerate(tie_breaker_cols)]
+    fields += [F.col(c).alias(f"__v{i}") for i, c in enumerate(feature_cols)]
+
+    def spine_slot(c: str) -> Column:
+        if c not in join_keys:
+            return F.lit(None).cast(s_types[c]).alias(c)
+        k = F.col(c)
+        return (k if f_types[c] == s_types[c] else k.cast(s_types[c])).alias(c)
+
+    matchable = F.col(feature_ts_col).isNotNull()
+    for k in join_keys:
+        matchable = matchable & F.col(k).isNotNull()
+    feats = features.filter(matchable).select(
+        *[spine_slot(c) for c in spine.columns],
+        F.col(feature_ts_col).cast(ts_type).alias(_TS),
+        F.struct(*fields).alias(_F),
+    )
+    rows = spine.select(
+        *spine.columns,
+        F.col(spine_ts_col).cast(ts_type).alias(_TS),
+        F.lit(None).cast(feats.schema[_F].dataType).alias(_F),
+    )
+    order = [F.col(_TS).asc_nulls_first(), F.col(_F).isNull().asc()]
+    if created_col:
+        order.append(F.col(f"{_F}.__created").asc_nulls_first())
+    order += [F.col(f"{_F}.__tb{i}").asc_nulls_first() for i in range(len(tie_breaker_cols))]
+    return feats.unionByName(rows), order
+
+
+def _range_union_scan(u: DataFrame, order: list[Column], tie_breaks: int, created: bool) -> DataFrame:
+    """Entityless scan with NO single-task stage (``strategy="range_union"``).
+
+    The union is range-partitioned on ts and each range partition runs
+    the running ``last`` on its own. Spine rows whose partition starts
+    after the last feature of the earlier partitions get a CARRY-IN: one
     max-by row per partition (a ≤ #partitions frame), cumulated with a
     tiny single-task window (bounded by the partition count, never by
-    data), broadcast back. TTL is a final null-out on the carried
-    feature timestamp. Every stage is bounded: the big frames see one
-    range shuffle + one per-partition window; no group ever holds more
-    than its time slice. Output values are invariant to the (sampled,
-    possibly nondeterministic) range boundaries — a carry-in is
-    exactly what the window would have seen in a coarser partitioning.
-    Ties beyond (ts, created, tie_breaker_cols) are resolved
-    arbitrarily — the same tie class as the join/window strategies."""
-    reserved = ("__ts", "__f", "__row", "__pid", "__last", "__carry", "__best")
-    clash = [c for c in spine.columns if c in reserved]
-    if clash:
-        raise ValueError(f"spine columns {clash} collide with range_union internals")
-    tbs = list(tie_breaker_cols or [])
-    order_fields = [F.col(feature_ts_col).alias("__fts")]
-    if created_col:
-        order_fields.append(F.col(created_col).alias("__created"))
-    order_fields += [F.col(c).alias(f"__tb{i}") for i, c in enumerate(tbs)]
-    payload = [F.col(c).alias(f"__v_{c}") for c in feature_cols]
-    feats = features.filter(F.col(feature_ts_col).isNotNull()).select(
-        F.col(feature_ts_col).alias("__ts"),
-        F.struct(*order_fields, *payload).alias("__f"),
-    )
-    spine_cols = list(spine.columns)
-    sp = spine.select(
-        F.col(spine_ts_col).alias("__ts"),
-        F.struct(*[F.col(c) for c in spine_cols]).alias("__row"),
-    )
-    u = feats.withColumn(
-        "__row", F.lit(None).cast(sp.schema["__row"].dataType)
-    ).unionByName(sp.withColumn("__f", F.lit(None).cast(feats.schema["__f"].dataType)))
-    u = u.repartitionByRange(F.col("__ts")).withColumn(
-        "__pid", F.spark_partition_id()
-    )
-    order_cols = [F.col("__ts").asc(), F.col("__f").isNull().cast("int").asc()]
-    if created_col:
-        order_cols.append(F.col("__f.__created").asc_nulls_first())
-    for i in range(len(tbs)):
-        order_cols.append(F.col(f"__f.__tb{i}").asc_nulls_first())
-    w = Window.partitionBy("__pid").orderBy(*order_cols).rowsBetween(
+    data), broadcast back. Output values do not depend on the sampled
+    range boundaries: a carry-in is exactly what the window would have
+    seen in a coarser partitioning."""
+    pid, last, carry = (_INTERNAL + n for n in ("pid", "last", "carry"))
+    u = u.repartitionByRange(F.col(_TS)).withColumn(pid, F.spark_partition_id())
+    w = Window.partitionBy(pid).orderBy(*order).rowsBetween(
         Window.unboundedPreceding, Window.currentRow
     )
-    u = u.withColumn("__last", F.last("__f", ignorenulls=True).over(w))
+    u = u.withColumn(last, F.last(_F, ignorenulls=True).over(w))
     okey = F.struct(
-        F.col("__ts"),
-        *([F.col("__f.__created")] if created_col else []),
-        *[F.col(f"__f.__tb{i}") for i in range(len(tbs))],
+        F.col(_TS),
+        *([F.col(f"{_F}.__created")] if created else []),
+        *[F.col(f"{_F}.__tb{i}") for i in range(tie_breaks)],
     )
     per_pid = (
-        u.filter(F.col("__f").isNotNull())
-        .groupBy("__pid")
-        .agg(F.max_by("__f", okey).alias("__m"))
+        u.filter(F.col(_F).isNotNull()).groupBy(pid).agg(F.max_by(_F, okey).alias(_M))
     )
     # carry frame: ONE row per range partition — its single-task window
     # is bounded by spark.sql.shuffle.partitions, not by the data
-    cw = Window.orderBy("__pid").rowsBetween(Window.unboundedPreceding, -1)
-    carry = (
-        u.select("__pid")
+    cw = Window.orderBy(pid).rowsBetween(Window.unboundedPreceding, -1)
+    carries = (
+        u.select(pid)
         .distinct()
-        .join(per_pid, "__pid", "left")
-        .withColumn("__carry", F.last("__m", ignorenulls=True).over(cw))
-        .select("__pid", "__carry")
+        .join(per_pid, pid, "left")
+        .select(pid, F.last(_M, ignorenulls=True).over(cw).alias(carry))
     )
-    out = (
-        u.filter(F.col("__row").isNotNull())
-        .join(F.broadcast(carry), "__pid", "left")
-        .withColumn("__best", F.coalesce("__last", "__carry"))
+    return (
+        u.filter(F.col(_F).isNull())
+        .join(F.broadcast(carries), pid, "left")
+        .withColumn(_M, F.coalesce(last, carry))
     )
-    valid = F.col("__best").isNotNull()
-    if ttl_seconds and ttl_seconds > 0:
-        valid = valid & (
-            F.col("__best.__fts")
-            >= F.col("__ts") - F.expr(f"INTERVAL {int(ttl_seconds)} SECONDS")
-        )
-    best = F.when(valid, F.col("__best"))
-    sel = [F.col("__row").getField(c).alias(c) for c in spine_cols]
-    sel += [best.getField(f"__v_{c}").alias(c) for c in feature_cols]
-    if include_feature_ts:
-        sel.append(best.getField("__fts").alias("__feature_ts"))
-    return out.select(*sel)
-
-
-def _ttl_lower_bound(ts_col: str, entity_ts: Column, ttl_seconds: int | None) -> Column:
-    cond = F.col(ts_col) <= entity_ts
-    if ttl_seconds and ttl_seconds > 0:
-        cond = cond & (
-            F.col(ts_col) >= entity_ts - F.expr(f"INTERVAL {int(ttl_seconds)} SECONDS")
-        )
-    return cond
 
 
 def point_in_time_join(
@@ -317,376 +180,68 @@ def point_in_time_join(
     (key, ts, created) rows exist and bit-exact reproducibility matters.
     ``feature_prefix`` renames output feature columns (``prefix + name``)
     — required when a feature column name already exists on the spine.
-    ``spine_assume_unique`` routes the internal row-id stamp (see
-    ``_with_row_id``): None/False (default) = duplicate-safe window,
-    True = caller guarantees no fully-duplicate spine rows (map-only
-    stamp, no shuffle — the 10¹²-row escape hatch), "probe" = probe +
-    split (window only the duplicated rows).
+    ``strategy``: ``"auto"``, ``"join_dedup"``, ``"merge_asof"`` and
+    ``"broadcast"`` (names of former physical strategies) all run the
+    union-scan; ``"range_union"`` runs the distributed entityless scan
+    and needs zero join keys; any other value raises ``ValueError``.
+    ``spine_assume_unique`` is accepted and ignored: the union-scan
+    stamps no spine row id, so duplicate spine rows need no care.
     Returns spine columns + feature columns (+ ``feature_ts_col`` as
     ``__feature_ts`` when ``include_feature_ts``).
     """
     join_keys = list(join_keys)
-    if feature_prefix:
-        excluded0 = set(join_keys) | {feature_ts_col}
-        if created_col:
-            excluded0.add(created_col)
-        rename = {
-            c: feature_prefix + c
-            for c in (feature_cols if feature_cols is not None
-                      else [c for c in features.columns if c not in excluded0])
-        }
-        features = features.select(
-            *[F.col(c).alias(rename.get(c, c)) for c in features.columns]
-        )
-        feature_cols = [rename[c] for c in rename] if feature_cols is None else [
-            rename.get(c, c) for c in feature_cols
-        ]
-        tie_breaker_cols = [rename.get(c, c) for c in tie_breaker_cols]
-    _cols_now = feature_cols if feature_cols is not None else [
-        c for c in features.columns
-        if c not in set(join_keys) | {feature_ts_col, created_col}
-    ]
-    collisions = set(_cols_now) & set(spine.columns)
+    if strategy == "range_union":
+        if join_keys:
+            raise ValueError("strategy='range_union' is for entityless views (no join keys)")
+    elif strategy not in _UNION_SCAN_NAMES:
+        raise ValueError(f"unknown strategy {strategy!r}")
+    if feature_cols is None:
+        excluded = set(join_keys) | {feature_ts_col, created_col}
+        feature_cols = [c for c in features.columns if c not in excluded]
+    feature_cols = list(feature_cols)
+    out_names = [feature_prefix + c for c in feature_cols]
+    collisions = set(out_names) & set(spine.columns)
     if collisions:
         raise ValueError(
             f"feature columns {sorted(collisions)} collide with spine columns; "
             "pass feature_prefix=... or rename via field_mapping"
         )
-    if not join_keys:
-        # Entityless view (reference DUMMY_ENTITY, feature_view.py:49-58):
-        # degrade to an as-of join on timestamp alone via a constant key.
-        # STRATEGY OVERRIDE: the dummy entity is the ultimate hot key —
-        # every spine row and every feature row share it, so the
-        # conditional-join strategies materialize the full
-        # spine × features-within-TTL pair set on ONE task (quadratic:
-        # 20k spine × 4k in-window rows ≈ 80M pair rows at sf0.1, >60 s
-        # measured). The cogrouped Arrow merge_asof is linear for a
-        # single group (one sort + one merge pass, ~1 s on the same
-        # input), so entityless always routes there unless the caller
-        # explicitly forced a join strategy. A 10⁹-row spine would
-        # still serialize on the one group — pass
-        # strategy="range_union" for the fully distributed path
-        # (range-partitioned union + per-partition carry-in,
-        # _entityless_range_union below): no single-task stage at any
-        # spine size.
-        if strategy == "range_union":
-            return _entityless_range_union(
-                spine,
-                features,
-                _cols_now,
-                spine_ts_col=spine_ts_col,
-                feature_ts_col=feature_ts_col,
-                created_col=created_col,
-                ttl_seconds=ttl_seconds,
-                include_feature_ts=include_feature_ts,
-                tie_breaker_cols=tie_breaker_cols,
-            )
-        spine = spine.withColumn(DUMMY_ENTITY_COL, F.lit(""))
-        features = features.withColumn(DUMMY_ENTITY_COL, F.lit(""))
-        out = point_in_time_join(
-            spine,
-            features,
-            [DUMMY_ENTITY_COL],
-            feature_cols,
-            spine_ts_col=spine_ts_col,
-            feature_ts_col=feature_ts_col,
-            created_col=created_col,
-            ttl_seconds=ttl_seconds,
-            strategy="merge_asof" if strategy in ("auto", "join_dedup") else strategy,
-            include_feature_ts=include_feature_ts,
-            tie_breaker_cols=tie_breaker_cols,
-            spine_assume_unique=spine_assume_unique,
-        )
-        return out.drop(DUMMY_ENTITY_COL)
+    internal = [c for c in spine.columns if c.startswith(_INTERNAL)]
+    if internal:
+        raise ValueError(f"spine columns {internal} collide with as-of join internals")
 
-    excluded = set(join_keys) | {feature_ts_col}
-    if created_col:
-        excluded.add(created_col)
-    if feature_cols is None:
-        feature_cols = [c for c in features.columns if c not in excluded]
-    feature_cols = list(feature_cols)
-
-    if strategy == "auto":
-        strategy = _pick_strategy(features)
-    if strategy in ("join_dedup", "broadcast"):
-        return _pit_join_dedup(
-            spine,
-            features,
-            join_keys,
-            feature_cols,
-            spine_ts_col,
-            feature_ts_col,
-            created_col,
-            ttl_seconds,
-            broadcast=(strategy == "broadcast"),
-            include_feature_ts=include_feature_ts,
-            tie_breaker_cols=tie_breaker_cols,
-            spine_assume_unique=spine_assume_unique,
-        )
-    if strategy == "merge_asof":
-        return _pit_merge_asof(
-            spine,
-            features,
-            join_keys,
-            feature_cols,
-            spine_ts_col,
-            feature_ts_col,
-            created_col,
-            ttl_seconds,
-            include_feature_ts=include_feature_ts,
-            tie_breaker_cols=tie_breaker_cols,
-            spine_assume_unique=spine_assume_unique,
-        )
-    raise ValueError(f"unknown strategy {strategy!r}")
-
-
-BROADCAST_THRESHOLD_BYTES = 100 * 1024 * 1024  # Ray's default, ray.py:437-448
-
-
-def _pick_strategy(features: DataFrame) -> str:
-    """Auto physical-strategy choice: broadcast when Catalyst's size
-    estimate for the feature side is under the Ray store's 100 MB
-    threshold (ray.py:437-448); otherwise the Catalyst-native
-    join_dedup. The Arrow merge_asof path stays opt-in — it wins when
-    per-key version fan-out makes the conditional join's intermediate
-    explode, which a size estimate can't see (measured 3.5x faster on a
-    2M-version hot key; BENCH/BASELINE.md "Hot-key fan-out A/B")."""
-    try:
-        size = features._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-        if int(size.toString() if hasattr(size, "toString") else size) <= BROADCAST_THRESHOLD_BYTES:
-            return "broadcast"
-    except Exception:
-        pass
-    return "join_dedup"
-
-
-def _pit_join_dedup(
-    spine: DataFrame,
-    features: DataFrame,
-    join_keys: list[str],
-    feature_cols: list[str],
-    spine_ts_col: str,
-    feature_ts_col: str,
-    created_col: str | None,
-    ttl_seconds: int | None,
-    *,
-    broadcast: bool,
-    include_feature_ts: bool,
-    tie_breaker_cols: Sequence[str],
-    spine_assume_unique: bool | str | None = None,
-) -> DataFrame:
-    s = _with_row_id(spine, assume_unique=spine_assume_unique)
-    # Column pruning before the shuffle: keys + ts + features only
-    # (reference does the same via _get_column_names, utils.py:145-207).
-    f_needed = list(
-        dict.fromkeys(
-            join_keys
-            + [feature_ts_col]
-            + ([created_col] if created_col else [])
-            + feature_cols
-            + list(tie_breaker_cols)
-        )
+    tie_breaker_cols = list(tie_breaker_cols)
+    u, order = _tagged_union(
+        spine,
+        features,
+        join_keys,
+        feature_cols,
+        spine_ts_col=spine_ts_col,
+        feature_ts_col=feature_ts_col,
+        created_col=created_col,
+        tie_breaker_cols=tie_breaker_cols,
     )
-    f = features.select(*f_needed)
-    if broadcast:
-        f = F.broadcast(f)
-
-    spine_side = s.select(
-        *join_keys, F.col(spine_ts_col).alias(_ENTITY_TS_TAG), SPINE_ROW_ID
-    )
-    cond = _ttl_lower_bound(feature_ts_col, F.col(_ENTITY_TS_TAG), ttl_seconds)
-    joined = spine_side.join(f, on=join_keys, how="inner").filter(cond)
-
-    order = [F.col(feature_ts_col).desc()]
-    if created_col:
-        order.append(F.col(created_col).desc())
-    order += [F.col(c).desc() for c in tie_breaker_cols]
-    w = Window.partitionBy(SPINE_ROW_ID).orderBy(*order)
-    latest = (
-        joined.withColumn("__feast_rn", F.row_number().over(w))
-        .filter(F.col("__feast_rn") == 1)
-        .select(
-            SPINE_ROW_ID,
-            *feature_cols,
-            F.col(feature_ts_col).alias("__feature_ts"),
-        )
-    )
-    out = s.join(latest, on=SPINE_ROW_ID, how="left")
-    keep = spine.columns + feature_cols + (["__feature_ts"] if include_feature_ts else [])
-    return out.select(*keep)
-
-
-def _pit_merge_asof(
-    spine: DataFrame,
-    features: DataFrame,
-    join_keys: list[str],
-    feature_cols: list[str],
-    spine_ts_col: str,
-    feature_ts_col: str,
-    created_col: str | None,
-    ttl_seconds: int | None,
-    *,
-    include_feature_ts: bool,
-    tie_breaker_cols: Sequence[str],
-    spine_assume_unique: bool | str | None = None,
-) -> DataFrame:
-    """Cogrouped sorted-merge as-of join (Arrow-vectorized).
-
-    Physical design, tuned for wide payloads (token arrays):
-
-    * Cogrouping is on a HASH BUCKET of the join keys, not the raw keys:
-      with millions of doc_ids, per-key cogroups would mean millions of
-      tiny pandas invocations (measured 5x slower at sf0.1). Bucketing
-      to ~4x parallelism groups keeps Arrow batches large, and pandas
-      ``merge_asof(by=keys)`` does the per-key as-of logic vectorized
-      inside each bucket.
-    * The pandas stage matches on NARROW rows only — (keys, ts, row id)
-      — and returns (spine_row_id, matched __feature_ts). Feature
-      payloads (token arrays etc.) never cross the JVM↔Arrow↔pandas
-      boundary; they are re-attached JVM-side by joining the match back
-      on (keys, ts) against a per-(keys, ts) winner table (max created,
-      then tie-breaks — exactly the row the as-of semantics select).
-      For 300-byte token payloads this cuts the Python-side traffic
-      ~10x, and unlike a synthetic feature-row id it is deterministic
-      under nondeterministic shuffle lineage (no
-      ``monotonically_increasing_id`` evaluated in two plan branches).
-    * A hot key still lands in one bucket but shares it with ~K/B other
-      keys; the per-bucket merge is linear in bucket size.
-    """
-    from pyspark.sql import types as T
-
-    s = _with_row_id(spine, assume_unique=spine_assume_unique)
-
-    keys = list(join_keys)
-    tiebreaks = list(tie_breaker_cols)
-
-    def _micros(frame: DataFrame, col: str) -> Column:
-        """Epoch-microsecond long of a timestamp column. The pandas stage
-        and the payload re-attach join run entirely on these longs —
-        timestamps never round-trip JVM→pandas→JVM, so non-UTC session
-        timezones (DST-ambiguous local times) cannot shift a value and
-        silently miss the equi-join."""
-        c = F.col(col)
-        if frame.schema[col].dataType.typeName() == "timestamp_ntz":
-            c = c.cast("timestamp")
-        return F.unix_micros(c)
-
-    # the pandas stage only decides WHICH (keys, ts) wins per spine row;
-    # created/tie-break resolution happens in the JVM-side winner dedup,
-    # so narrow rows are just (keys, ts-micros)
-    narrow_s = s.select(
-        *keys, _micros(s, spine_ts_col).alias("__s_us"), SPINE_ROW_ID
-    )
-    narrow_f = features.select(
-        *keys, _micros(features, feature_ts_col).alias("__f_us")
-    )
-
-    out_schema = T.StructType(
-        [
-            T.StructField(SPINE_ROW_ID, T.StringType(), False),
-            T.StructField("__f_us", T.LongType(), True),
-        ]
-    )
-
-    ttl_us = int(ttl_seconds) * 1_000_000 if ttl_seconds else 0
-
-    def merge(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        if left.empty:
-            return pd.DataFrame(
-                {
-                    SPINE_ROW_ID: pd.Series([], dtype="object"),
-                    "__f_us": pd.array([], dtype="Int64"),
-                }
-            )
-        left = left.sort_values("__s_us", kind="mergesort")
-        if right.empty:
-            return pd.DataFrame(
-                {
-                    SPINE_ROW_ID: left[SPINE_ROW_ID],
-                    "__f_us": pd.array([None] * len(left), dtype="Int64"),
-                }
-            )
-        right = right.drop_duplicates([*keys, "__f_us"]).sort_values(
-            "__f_us", kind="mergesort"
-        )
-        merged = pd.merge_asof(
-            left[[*keys, "__s_us", SPINE_ROW_ID]],
-            right[[*keys, "__f_us"]],
-            left_on="__s_us",
-            right_on="__f_us",
-            by=keys,
-            direction="backward",
-            allow_exact_matches=True,
-            tolerance=ttl_us if ttl_us > 0 else None,
-        )
-        return pd.DataFrame(
-            {
-                SPINE_ROW_ID: merged[SPINE_ROW_ID],
-                "__f_us": merged["__f_us"].astype("Int64"),
-            }
+    if strategy == "range_union":
+        matched = _range_union_scan(u, order, len(tie_breaker_cols), bool(created_col))
+    else:
+        w = (Window.partitionBy(*join_keys) if join_keys else Window).orderBy(*order)
+        w = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+        matched = u.withColumn(_M, F.last(_F, ignorenulls=True).over(w)).filter(
+            F.col(_F).isNull()
         )
 
-    n_buckets = spine.sparkSession.sparkContext.defaultParallelism * 4
-    s_b = narrow_s.withColumn("__b", F.pmod(F.hash(*keys), F.lit(n_buckets)))
-    # Prefix-rename the feature side: when spine and features derive from
-    # the same source relation, both sides carry attributes with equal
-    # exprIds and Spark's cogroup deduplication silently prunes the
-    # right-side copies. Fresh names guarantee fresh attributes; the
-    # pandas fn strips the prefix.
-    f_r = narrow_f.select(*[F.col(c).alias(f"__r_{c}") for c in narrow_f.columns])
-    f_b = f_r.withColumn(
-        "__b", F.pmod(F.hash(*[f"__r_{k}" for k in keys]), F.lit(n_buckets))
-    )
-    grouped = s_b.groupBy("__b").cogroup(f_b.groupBy("__b"))
-
-    def merge_bucket(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        right = right.drop(columns="__b", errors="ignore").rename(
-            columns=lambda c: c.removeprefix("__r_")
+    valid = F.col(_TS).isNotNull()
+    if ttl_seconds and ttl_seconds > 0:
+        valid = valid & (
+            F.col(f"{_M}.__fts").cast(u.schema[_TS].dataType)
+            >= F.col(_TS) - F.expr(f"INTERVAL {int(ttl_seconds)} SECONDS")
         )
-        return merge(left.drop(columns="__b", errors="ignore"), right)
-
-    matched = grouped.applyInPandas(
-        lambda left, right: merge_bucket(left, right), out_schema
-    )
-
-    # JVM-side payload re-attach: the as-of winner per (keys, ts) is the
-    # max-created (then tie-break) row — one window dedup, then an
-    # equi-join on (keys, matched ts-micros). Fully deterministic (no
-    # synthetic row id shared across plan branches, no timestamp
-    # round-trip).
-    order = ([F.col(created_col).desc()] if created_col else []) + [
-        F.col(c).desc() for c in tiebreaks
-    ]
-    if not order:
-        order = [F.lit(1)]
-    wwin = Window.partitionBy(*keys, feature_ts_col).orderBy(*order)
-    winner = (
-        features.select(
-            *dict.fromkeys(
-                keys
-                + [feature_ts_col]
-                + ([created_col] if created_col else [])
-                + tiebreaks
-                + list(feature_cols)
-            )
-        )
-        .withColumn("__feast_rn", F.row_number().over(wwin))
-        .filter(F.col("__feast_rn") == 1)
-        .select(
-            *keys,
-            _micros(features, feature_ts_col).alias("__f_us"),
-            F.col(feature_ts_col).alias("__feature_ts"),
-            *feature_cols,
-        )
-    )
-    out = (
-        s.join(matched, on=SPINE_ROW_ID, how="left")
-        .join(winner, on=[*keys, "__f_us"], how="left")
-    )
-    keep = spine.columns + list(feature_cols) + (
-        ["__feature_ts"] if include_feature_ts else []
-    )
-    return out.select(*keep)
+    best = matched.withColumn(_M, F.when(valid, F.col(_M)))
+    sel = [F.col(c) for c in spine.columns]
+    sel += [F.col(f"{_M}.__v{i}").alias(n) for i, n in enumerate(out_names)]
+    if include_feature_ts:
+        sel.append(F.col(f"{_M}.__fts").alias("__feature_ts"))
+    return best.select(*sel)
 
 
 def multi_view_pit_join(
@@ -701,17 +256,16 @@ def multi_view_pit_join(
 
     ``views`` yields ``(features_df, join_keys, opts)`` where ``opts`` may
     carry ``feature_cols``, ``feature_ts_col``, ``created_col``,
-    ``ttl_seconds``, ``prefix``. Results are accumulated on the spine via
-    the internal row id — the fan-out/fan-in plan of the reference's
-    SparkJoinNode (compute_engines/spark/nodes.py:150-211) without the
-    string row-key artifact.
+    ``ttl_seconds``, ``prefix`` (output names become ``prefix__name``)
+    and ``strategy``. Each view's as-of join runs on the spine as grown
+    by the views before it, so the views chain without a row id or a
+    fan-in join. ``spine_assume_unique`` is accepted and ignored.
     """
-    acc = _with_row_id(spine, assume_unique=spine_assume_unique)
-    base = acc
+    out = spine
     for features, join_keys, opts in views:
         prefix = opts.get("prefix")
-        res = point_in_time_join(
-            base,
+        out = point_in_time_join(
+            out,
             features,
             join_keys,
             opts.get("feature_cols"),
@@ -720,11 +274,6 @@ def multi_view_pit_join(
             created_col=opts.get("created_col"),
             ttl_seconds=opts.get("ttl_seconds"),
             strategy=opts.get("strategy", strategy),
+            feature_prefix=f"{prefix}__" if prefix else "",
         )
-        new_cols = [c for c in res.columns if c not in base.columns]
-        sel = res.select(SPINE_ROW_ID, *new_cols)
-        if prefix:
-            for c in new_cols:
-                sel = sel.withColumnRenamed(c, f"{prefix}__{c}")
-        acc = acc.join(sel, on=SPINE_ROW_ID, how="left")
-    return acc.drop(SPINE_ROW_ID)
+    return out

@@ -311,8 +311,8 @@ def pack_sequences(
     stream_cols = list(stream_cols)
     shard = False
     if max_stream_rows is not None and "shard" in df.columns:
-        # mirror the SPINE_ROW_ID idempotency care: silently overwriting a
-        # user 'shard' column would change the grouping semantics
+        # silently overwriting a user 'shard' column would change the
+        # grouping semantics
         raise ValueError(
             "input already has a 'shard' column, which pack_sequences "
             "reserves when max_stream_rows is set — rename it or pass "

@@ -6,6 +6,8 @@ TTL expiry, latest-before + created tie-break (backfill), left-join NULL
 preservation, exact token-array equality per row.
 """
 
+from datetime import datetime, timedelta
+
 import numpy as np
 import pandas as pd
 import pytest
@@ -213,3 +215,98 @@ def test_composite_key_pit(spark):
             .sort_values(["tenant", "doc_id"])
         )
         assert got["val"].fillna(-1).tolist() == [2, 3, 4, -1], strategy
+
+
+def test_null_keys_never_match(spark):
+    """NULL never equals a key: spine rows with a NULL join key get NULL
+    features even when feature rows with a NULL key exist (the
+    conditional join's inner-join semantics); a NULL in ONE of two keys
+    is enough. Feature rows with a NULL ts never match either."""
+    ts = datetime(2024, 1, 5)
+    feats = spark.createDataFrame(
+        [
+            (None, "x", ts, 1),
+            ("a", None, ts, 2),
+            ("a", "x", ts, 3),
+            ("a", "x", None, 4),
+            ("b", "x", None, 5),
+        ],
+        "doc_id string, tenant string, event_timestamp timestamp, val int",
+    )
+    spine = spark.createDataFrame(
+        [
+            (None, "x", ts + timedelta(hours=1)),
+            ("a", None, ts + timedelta(hours=1)),
+            ("a", "x", ts + timedelta(hours=1)),
+            ("b", "x", ts + timedelta(hours=1)),
+            ("a", "x", None),
+        ],
+        "doc_id string, tenant string, event_timestamp timestamp",
+    )
+    for keys in (["doc_id", "tenant"], ["doc_id"]):
+        got = point_in_time_join(spine, feats, keys, ["val"]).toPandas()
+        assert len(got) == 5
+        by_row = {
+            (r.doc_id, r.tenant, pd.isna(r.event_timestamp)): r.val
+            for r in got.itertuples()
+        }
+        assert pd.isna(by_row[(None, "x", False)]), keys
+        assert pd.isna(by_row[("b", "x", False)]), keys
+        assert pd.isna(by_row[("a", "x", True)]), keys  # NULL spine ts
+        assert by_row[("a", "x", False)] == 3, keys
+        if len(keys) == 2:
+            assert pd.isna(by_row[("a", None, False)])
+        else:  # tenant is not a key: the latest doc_id='a' row matches
+            assert by_row[("a", None, False)] == 3
+
+
+def test_duplicate_spine_rows_keep_multiplicity(spark):
+    ts = datetime(2024, 1, 5)
+    feats = spark.createDataFrame(
+        [("a", ts, 1)], "doc_id string, event_timestamp timestamp, val int"
+    )
+    spine = spark.createDataFrame(
+        [("a", ts)] * 3 + [("z", ts)] * 2, "doc_id string, event_timestamp timestamp"
+    )
+    got = point_in_time_join(spine, feats, ["doc_id"], ["val"]).toPandas()
+    assert sorted(got["val"].fillna(-1).tolist()) == [-1, -1, 1, 1, 1]
+
+
+def test_strategy_names_and_ignored_options(spark):
+    ts = datetime(2024, 1, 5)
+    feats = spark.createDataFrame(
+        [("a", ts, 1)], "doc_id string, event_timestamp timestamp, val int"
+    )
+    spine = spark.createDataFrame([("a", ts)], "doc_id string, event_timestamp timestamp")
+    for unique in (None, True, False, "probe"):
+        got = point_in_time_join(
+            spine, feats, ["doc_id"], ["val"], spine_assume_unique=unique
+        ).toPandas()
+        assert got["val"].tolist() == [1]
+    with pytest.raises(ValueError, match="unknown strategy"):
+        point_in_time_join(spine, feats, ["doc_id"], ["val"], strategy="sort_merge")
+    with pytest.raises(ValueError, match="range_union"):
+        point_in_time_join(spine, feats, ["doc_id"], ["val"], strategy="range_union")
+
+
+def test_multi_view_pit_join_chains_views(spark, data):
+    """Two views chained onto one spine equal two independent joins;
+    ``prefix`` names the outputs ``prefix__name``."""
+    from feast_spark.operators.asof_join import multi_view_pit_join
+
+    spine_df, feats_df, spine_pd, feats_pd = data
+    opts = {"created_col": "created", "ttl_seconds": TTL}
+    got = multi_view_pit_join(
+        spine_df,
+        [
+            (feats_df, ["doc_id"], {**opts, "feature_cols": ["n_tok"], "prefix": "a"}),
+            (feats_df, ["doc_id"], {**opts, "feature_cols": ["source"]}),
+        ],
+    ).toPandas()
+    assert len(got) == len(spine_pd)
+    exp = _expected(spine_pd, feats_pd, TTL)
+    got = got.rename(columns={"a__n_tok": "n_tok"})
+    got["tokens"] = None
+    key = ["doc_id", "event_timestamp", "n_tok", "source"]
+    gotn = _normalize(got)
+    pd.testing.assert_frame_equal(gotn[key], exp[key], check_dtype=False)

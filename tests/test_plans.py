@@ -1,8 +1,9 @@
 """Plan-shape regression tests: the optimizations we rely on at scale
 must actually appear in the physical plan — filter pushdown to the
-parquet scan, broadcast joins for small sides, bounded shuffle counts
-for the merge_asof path."""
+parquet scan, broadcast joins for small sides, one shuffle and one sort
+per as-of join."""
 
+import re
 from datetime import timedelta
 
 import pytest
@@ -59,36 +60,60 @@ def test_spine_bounds_push_into_scan(spark, ev):
     assert "GreaterThanOrEqual(ts" in plan
 
 
-def test_broadcast_strategy_broadcasts(spark, ev):
+def _assert_union_scan(out) -> None:
+    """ONE hash shuffle of spine + feature rows on the join key and ONE
+    sort feeding the running window — no row-id stamp, conditional join
+    or join back, no Arrow cogroup and no broadcast."""
+    plan = _plan(out)
+    assert len(re.findall(r"\bExchange hashpartitioning\(user_id", plan)) == 1, plan
+    assert len(re.findall(r"\bExchange\b", plan)) == 1, plan
+    assert len(re.findall(r"\bSort \[", plan)) == 1, plan
+    assert "FlatMapCoGroupsIn" not in plan
+    assert "BroadcastExchange" not in plan
+
+
+def _clicks_asof(ev, strategy: str):
     spine = ev.filter("event_type = 'purchase'").select(
         "user_id", F.col("ts").alias("event_timestamp")
     )
     feats = ev.filter("event_type = 'click'").select(
         "user_id", F.col("ts").alias("event_timestamp"), "value"
     )
-    out = point_in_time_join(
-        spine, feats, ["user_id"], ["value"], ttl_seconds=86400, strategy="broadcast"
+    return point_in_time_join(
+        spine, feats, ["user_id"], ["value"], ttl_seconds=86400, strategy=strategy
     )
-    assert "BroadcastHashJoin" in _plan(out)
+
+
+@pytest.mark.parametrize("strategy", ["auto", "join_dedup", "broadcast"])
+def test_point_in_time_join_one_exchange_one_sort(spark, ev, strategy):
+    """Every accepted strategy name runs the one union-scan."""
+    _assert_union_scan(_clicks_asof(ev, strategy))
 
 
 def test_merge_asof_shuffle_count(spark, ev):
-    """The scale path must shuffle each side exactly once (hash on the
-    key bucket) + one for the row-id–free output — no hidden extra
-    exchanges."""
+    """strategy='merge_asof' runs the union-scan too: one shuffle, no
+    Arrow cogroup."""
+    _assert_union_scan(_clicks_asof(ev, "merge_asof"))
+
+
+def test_entityless_store_retrieval_has_no_arrow_cogroup(spark, ev):
+    """An entityless view is retrieved by the same union-scan over an
+    unpartitioned window — no JVM↔Python round trip."""
+    store = FeatureStore(spark)
+    store.apply(
+        FeatureView(
+            name="all_clicks",
+            source=ParquetSource(f"{SF}/events.parquet", timestamp_field="ts"),
+            ttl=timedelta(days=7),
+            udf=lambda df: df.filter(F.col("event_type") == "click").select("ts", "value"),
+        )
+    )
     spine = ev.filter("event_type = 'purchase'").select(
         "user_id", F.col("ts").alias("event_timestamp")
     )
-    feats = ev.filter("event_type = 'click'").select(
-        "user_id", F.col("ts").alias("event_timestamp"), "value"
-    )
-    out = point_in_time_join(
-        spine, feats, ["user_id"], ["value"], ttl_seconds=86400, strategy="merge_asof"
-    )
-    plan = _plan(out)
-    n_exchanges = plan.count("Exchange hashpartitioning(__b")
-    assert n_exchanges == 2, f"expected 2 bucket shuffles, got {n_exchanges}:\n{plan[:3000]}"
-    assert "FlatMapCoGroupsInPandas" in plan
+    plan = _plan(store.get_historical_features(spine, ["all_clicks:value"]).to_spark_df())
+    assert "FlatMapCoGroupsIn" not in plan, plan
+    assert "Window [last(" in plan, plan
 
 
 def test_column_pruning_reaches_scan(spark):
@@ -127,59 +152,6 @@ def test_iceberg_conf_wiring(spark):
     ddl = create_sequences_table_ddl("feast.db.seqs")
     assert "PARTITIONED BY (days(event_timestamp), bucket(64, doc_id))" in ddl
     assert iceberg_available(spark) in (True, False)  # gated, no jar here
-
-
-def test_auto_strategy_broadcasts_small_side(spark, ev):
-    """strategy='auto' picks broadcast under the 100 MB estimate
-    (Ray heuristic, ray.py:437-448)."""
-    spine = ev.filter("event_type = 'purchase'").select(
-        "user_id", F.col("ts").alias("event_timestamp")
-    )
-    feats = ev.filter("event_type = 'click'").select(
-        "user_id", F.col("ts").alias("event_timestamp"), "value"
-    )
-    out = point_in_time_join(
-        spine, feats, ["user_id"], ["value"], ttl_seconds=86400, strategy="auto"
-    )
-    assert "BroadcastHashJoin" in _plan(out)
-
-
-def test_bucketed_feature_table_skips_feature_shuffle(spark, ev, tmp_path):
-    """A bucketBy(keys)+sortBy table joins without a feature-side
-    Exchange — at 10^12 rows that shuffle is the dominant PIT cost.
-    (Broadcast/AQE disabled to force SMJ so exchanges are visible.)"""
-    from feast_spark.materialize.bucketed import (
-        read_feature_table,
-        write_bucketed_feature_table,
-    )
-
-    feats = ev.filter("event_type = 'click'").select(
-        "user_id", F.col("ts").alias("event_timestamp"), "value"
-    )
-    spine = ev.filter("event_type = 'purchase'").select(
-        "user_id", F.col("ts").alias("event_timestamp")
-    )
-    spark.sql("DROP TABLE IF EXISTS clicks_bucketed_test")
-    write_bucketed_feature_table(feats, "clicks_bucketed_test", ["user_id"], n_buckets=4)
-    old_thr = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    old_aqe = spark.conf.get("spark.sql.adaptive.enabled")
-    try:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-        bt = read_feature_table(spark, "clicks_bucketed_test")
-        bucketed = point_in_time_join(
-            spine, bt, ["user_id"], ["value"], ttl_seconds=86400
-        )
-        plain = point_in_time_join(
-            spine, feats, ["user_id"], ["value"], ttl_seconds=86400
-        )
-        nb = _plan(bucketed).count("Exchange hashpartitioning(user_id")
-        np_ = _plan(plain).count("Exchange hashpartitioning(user_id")
-        assert nb == np_ - 1, (nb, np_)
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old_thr)
-        spark.conf.set("spark.sql.adaptive.enabled", old_aqe)
-        spark.sql("DROP TABLE IF EXISTS clicks_bucketed_test")
 
 
 def test_per_row_curation_ops_have_no_exchange(spark):

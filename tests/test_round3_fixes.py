@@ -7,9 +7,7 @@ VERDICT r02 scale/perf items that changed observable behavior.
 * connected_components rejects max_iters < 1 and its convergence check
   rides the checkpoint action (observe) — no behavior change, covered
   by existing test_graph tests,
-* pack_sequences auto-shards a giant stream by a coarse time bucket,
-* _with_row_id unique-rows fast path: map-only stamp (no window
-  shuffle), unique and deterministic.
+* pack_sequences auto-shards a giant stream by a coarse time bucket.
 """
 
 import os
@@ -25,7 +23,6 @@ from feast_spark.core.feature_view import Entity, FeatureView, Field
 from feast_spark.core.source import ParquetSource
 from feast_spark.core.store import FeatureStore
 from feast_spark.online import LocalOnlineStore
-from feast_spark.operators.asof_join import SPINE_ROW_ID, _with_row_id
 from feast_spark.pipeline.graph import connected_components
 from feast_spark.pipeline.sampling import pack_sequences
 
@@ -179,85 +176,6 @@ def test_pack_sequences_auto_shards_giant_stream(spark):
     a = plain.sort_values(["source", "block_id"]).reset_index(drop=True)
     b = off.sort_values(["source", "block_id"]).reset_index(drop=True)
     assert a["n_tokens"].tolist() == b["n_tokens"].tolist()
-
-
-# ------------------------------------------------------ row-id fast path
-def test_row_id_probe_split_no_global_window_for_unique_spine(spark):
-    pdf = pd.DataFrame(
-        {
-            "doc_id": [f"d{i}" for i in range(500)],
-            "event_timestamp": pd.to_datetime("2024-01-01")
-            + pd.to_timedelta(range(500), unit="s"),
-        }
-    )
-    spine = datagen.to_spark(spark, pdf).repartition(8)
-    stamped = _with_row_id(spine, assume_unique="probe")
-    plan = stamped._jdf.queryExecution().optimizedPlan().toString()
-    assert "row_number" not in plan.lower(), plan[:2000]
-    a = stamped.toPandas()
-    b = stamped.toPandas()
-    assert a[SPINE_ROW_ID].is_unique
-    key = ["doc_id", SPINE_ROW_ID]
-    pd.testing.assert_frame_equal(
-        a.sort_values(key).reset_index(drop=True)[key],
-        b.sort_values(key).reset_index(drop=True)[key],
-    )
-
-
-def test_row_id_probe_split_handles_duplicates(spark):
-    """A mixed spine (mostly-unique + duplicated rows) under "probe"
-    must window ONLY the duplicated rows and keep every id unique and
-    evaluation-deterministic."""
-    pdf = pd.DataFrame(
-        {
-            "doc_id": [f"d{i}" for i in range(100)] + ["dup"] * 5,
-            "event_timestamp": pd.to_datetime("2024-01-01"),
-        }
-    )
-    spine = datagen.to_spark(spark, pdf).repartition(8)
-    stamped = _with_row_id(spine, assume_unique="probe")
-    a = stamped.toPandas()
-    b = stamped.toPandas()
-    assert a[SPINE_ROW_ID].is_unique and b[SPINE_ROW_ID].is_unique
-    assert len(a) == 105
-    key = ["doc_id", SPINE_ROW_ID]
-    pd.testing.assert_frame_equal(
-        a.sort_values(key).reset_index(drop=True)[key],
-        b.sort_values(key).reset_index(drop=True)[key],
-    )
-
-
-def test_row_id_default_windows_and_handles_duplicates(spark):
-    pdf = pd.DataFrame(
-        {"doc_id": ["dup"] * 5, "event_timestamp": pd.to_datetime("2024-01-01")}
-    )
-    spine = datagen.to_spark(spark, pdf)
-    stamped = _with_row_id(spine)  # default: duplicate-safe window
-    got = stamped.toPandas()
-    assert got[SPINE_ROW_ID].is_unique  # multiplicity preserved
-
-
-def test_row_id_rejects_bad_mode(spark):
-    pdf = pd.DataFrame(
-        {"doc_id": ["a"], "event_timestamp": pd.to_datetime("2024-01-01")}
-    )
-    spine = datagen.to_spark(spark, pdf)
-    with pytest.raises(ValueError, match="assume_unique"):
-        _with_row_id(spine, assume_unique="yes")
-
-
-def test_row_id_assume_unique_skips_probe_and_window(spark):
-    pdf = pd.DataFrame(
-        {
-            "doc_id": [f"d{i}" for i in range(50)],
-            "event_timestamp": pd.to_datetime("2024-01-01"),
-        }
-    )
-    spine = datagen.to_spark(spark, pdf)
-    stamped = _with_row_id(spine, assume_unique=True)
-    plan = stamped._jdf.queryExecution().optimizedPlan().toString()
-    assert "row_number" not in plan.lower()
-    assert stamped.toPandas()[SPINE_ROW_ID].is_unique
 
 
 # --------------------------------------------- code-review round-3 fixes

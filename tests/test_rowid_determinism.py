@@ -1,15 +1,15 @@
-"""Regression tests for the deterministic spine row id (VERDICT r01 #1,
+"""Regression tests for spine-lineage independence (VERDICT r01 #1,
 ADVICE high).
 
-The failure mode being guarded: the internal spine row id used to be
-``monotonically_increasing_id``, which is evaluated independently in
-each plan branch — with a nondeterministic shuffle in the spine lineage
+The failure mode being guarded: an internal spine row id numbered by
+``monotonically_increasing_id`` was evaluated independently in each
+plan branch — with a nondeterministic shuffle in the spine lineage
 (round-robin repartition, AQE-coalesced reads) or with the accumulated
-multi-view frame reused as a spine, the two evaluations can disagree
-and features silently attach to wrong rows. ADVICE confirmed 1778/2000
-wrong rows for the 2nd view under the shuffle-join regime
-(autoBroadcastJoinThreshold=-1). The id is now content-derived
-(xxhash64 + within-hash row_number) and ``_with_row_id`` is idempotent.
+multi-view frame reused as a spine, the two evaluations disagreed and
+features silently attached to wrong rows (1778/2000 wrong rows for the
+2nd view under the shuffle-join regime, autoBroadcastJoinThreshold=-1).
+The as-of join now carries whole spine rows through one union-scan, so
+no id exists to disagree; these end-to-end cases keep it that way.
 """
 
 from datetime import timedelta
@@ -23,43 +23,8 @@ from feast_spark import datagen
 from feast_spark.core.feature_view import Entity, FeatureView
 from feast_spark.core.source import DataFrameSource
 from feast_spark.core.store import FeatureStore
-from feast_spark.operators.asof_join import (
-    SPINE_ROW_ID,
-    _with_row_id,
-    point_in_time_join,
-)
+from feast_spark.operators.asof_join import point_in_time_join
 from tests.oracle import expected_pit_df
-
-
-def test_with_row_id_idempotent(spark):
-    pdf = pd.DataFrame({"doc_id": ["a", "b"], "event_timestamp": pd.to_datetime(["2024-01-01", "2024-01-02"])})
-    df = datagen.to_spark(spark, pdf)
-    once = _with_row_id(df)
-    twice = _with_row_id(once)
-    assert twice is once  # no re-stamping
-    assert once.columns.count(SPINE_ROW_ID) == 1
-
-
-def test_row_id_unique_and_deterministic_after_shuffle(spark):
-    """Ids must be unique per row (duplicates included) and identical
-    across two independent evaluations of a round-robin-repartitioned
-    (nondeterministic-order) spine."""
-    pdf = pd.DataFrame(
-        {
-            "doc_id": [f"d{i % 7}" for i in range(200)] + ["dup"] * 5,
-            "event_timestamp": pd.to_datetime("2024-01-01"),
-        }
-    )
-    spine = datagen.to_spark(spark, pdf).repartition(8)  # round-robin
-    stamped = _with_row_id(spine)
-    a = stamped.toPandas()
-    b = stamped.toPandas()  # independent evaluation
-    assert a[SPINE_ROW_ID].is_unique and b[SPINE_ROW_ID].is_unique
-    key = ["doc_id", SPINE_ROW_ID]
-    pd.testing.assert_frame_equal(
-        a.sort_values(key).reset_index(drop=True)[key],
-        b.sort_values(key).reset_index(drop=True)[key],
-    )
 
 
 @pytest.mark.parametrize("strategy", ["join_dedup", "merge_asof"])

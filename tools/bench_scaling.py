@@ -113,8 +113,8 @@ partition-count-independent), two fresh local JVMs.
 **scaling efficiency = {result['throughput_4N']} / (4 x {result['throughput_N']})
 = {result['scaling_efficiency']}** (target >= 0.8: {"PASS" if result['pass'] else "FAIL"})
 
-Headline job: PIT as-of join (strategy per $BENCH_STRATEGY, default
-join_dedup — Catalyst conditional-join + window dedup) of a
+Headline job: PIT as-of join (the union-scan: one shuffle of spine and
+feature rows on doc_id, one running window) of a
 {result['rows']:,}-row spine against ~{os.environ.get('BENCH_SEQ_DOCS', '100000')}x{os.environ.get('BENCH_SEQ_VERSIONS', '6')}
 token-sequence rows (TTL 3d, created tie-break), then lag/lead +
 trailing-24h rolling sum + inactivity-gap sessionization, materialized

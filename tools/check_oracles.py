@@ -3,7 +3,11 @@
 the given sf dir; compare row count, column names, and order-insensitive
 values.
 
-Usage: python tools/check_oracles.py [sf_dir] [query ...]
+Usage: python tools/check_oracles.py [--conf k=v ...] [sf_dir] [query ...]
+
+``--conf`` (repeatable) sets a Spark conf for the run, to check that
+results do not depend on physical choices, e.g.
+``--conf spark.sql.shuffle.partitions=7 --conf spark.sql.adaptive.enabled=false``.
 """
 
 from __future__ import annotations
@@ -62,14 +66,34 @@ def compare(name: str, got: pd.DataFrame, exp: pd.DataFrame) -> list[str]:
     return problems
 
 
+def pop_confs(argv: list[str]) -> dict[str, str]:
+    """Remove every ``--conf k=v`` pair from ``argv`` (in place) and
+    return them as a dict."""
+    confs, rest, it = {}, [], iter(argv)
+    for arg in it:
+        if arg != "--conf":
+            rest.append(arg)
+            continue
+        pair = next(it, "")
+        key, sep, value = pair.partition("=")
+        if not (key and sep):
+            raise SystemExit(f"--conf expects k=v, got {pair!r}")
+        confs[key] = value
+    argv[:] = rest
+    return confs
+
+
 def main() -> int:
+    confs = pop_confs(sys.argv)
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
 
     import __spark_entry__ as entrymod
     from feast_spark.session import get_spark
 
-    spark = get_spark("check_oracles", parallelism=8)
+    spark = get_spark("check_oracles", parallelism=8, extra_conf=confs)
+    for k in confs:
+        print(f"conf {k}={spark.conf.get(k)}")
     spark.sparkContext.setLogLevel("ERROR")
 
     con = duckdb.connect()
