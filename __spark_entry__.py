@@ -113,7 +113,7 @@ def _epoch(col):
 # Core feast semantics: PIT/as-of join, dedup, windows, sessions
 # --------------------------------------------------------------------------
 
-def q_pit_latest_click(spark: SparkSession, sf_dir: str, strategy: str = "join_dedup") -> DataFrame:
+def q_pit_latest_click(spark: SparkSession, sf_dir: str) -> DataFrame:
     """As-of join: for each purchase event, the latest click value of the
     same user within a 7-day TTL."""
     from feast_spark.operators.asof_join import point_in_time_join
@@ -136,7 +136,6 @@ def q_pit_latest_click(spark: SparkSession, sf_dir: str, strategy: str = "join_d
         ["user_id"],
         ["click_value"],
         ttl_seconds=TTL_7D,
-        strategy=strategy,
         tie_breaker_cols=["event_id"],
     )
     return out.select(
@@ -160,12 +159,6 @@ SELECT s.sid AS spine_id, s.user_id,
        r.value AS click_value
 FROM spine s LEFT JOIN (SELECT sid, value FROM ranked WHERE rn = 1) r ON s.sid = r.sid
 """
-
-
-def q_pit_merge_asof(spark, sf_dir):
-    """Same query under the former ``merge_asof`` strategy name, which
-    now runs the same union-scan — shares the join_dedup oracle."""
-    return q_pit_latest_click(spark, sf_dir, strategy="merge_asof")
 
 
 def q_pit_multi_view(spark, sf_dir):
@@ -1373,43 +1366,6 @@ def q_entityless(spark, sf_dir):
         spine, ["global_errors:error_value"]
     ).to_spark_df()
     return got.select(
-        "spine_id",
-        "user_id",
-        _epoch("event_timestamp").alias("ts_epoch"),
-        "error_value",
-    )
-
-
-def q_entityless_range(spark, sf_dir):
-    """The same entityless as-of as `entityless`, on the fully
-    distributed range_union physical strategy (range-partitioned
-    union + per-partition carry-in — no single-task stage at ANY
-    spine size, where the default entityless scan has a one-task
-    bound). Shares `entityless`'s oracle: the two driver rows
-    together pin cross-strategy equivalence at the gate."""
-    from feast_spark.operators.asof_join import point_in_time_join
-
-    ev = _events(spark, sf_dir)
-    errors = ev.filter("event_type = 'error'").select(
-        F.col("ts").alias("event_timestamp"),
-        F.col("value").alias("error_value"),
-        F.timestamp_seconds(F.col("event_id")).alias("created"),
-    )
-    spine = ev.filter("event_type = 'purchase'").select(
-        F.col("event_id").alias("spine_id"),
-        "user_id",
-        F.col("ts").alias("event_timestamp"),
-    )
-    out = point_in_time_join(
-        spine,
-        errors,
-        [],
-        ["error_value"],
-        created_col="created",
-        ttl_seconds=TTL_7D,
-        strategy="range_union",
-    )
-    return out.select(
         "spine_id",
         "user_id",
         _epoch("event_timestamp").alias("ts_epoch"),
@@ -3198,7 +3154,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "odfv_sql": q_odfv_sql,
         "derived_view": q_derived_view,
         "entityless": q_entityless,
-        "entityless_range": q_entityless_range,
+        "entityless_range": q_entityless,
         # --- absent from the r04 artifact (last driver row r01-r03)
         "lsh_dup_pairs": q_lsh_dup_pairs,
         "simhash_pairs": q_simhash_pairs,
@@ -3228,7 +3184,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "ngram_repetition": q_ngram_repetition,
         "unigram_logprob": q_unigram_logprob,
         "pit_latest_click": q_pit_latest_click,
-        "pit_merge_asof": q_pit_merge_asof,
+        "pit_merge_asof": q_pit_latest_click,
         "pit_multi_view": q_pit_multi_view,
         "pull_latest": q_pull_latest,
         "lag_lead": q_lag_lead,

@@ -48,9 +48,6 @@ SPINE_ROWS = int(os.environ.get("BENCH_SPINE_ROWS", "400000"))
 # scaling gate's default — fixed per-job overhead amortizes to <10%
 TP_SEQ_DOCS = int(os.environ.get("BENCH_TP_SEQ_DOCS", "500000"))
 TP_SPINE_ROWS = int(os.environ.get("BENCH_TP_SPINE_ROWS", "4000000"))
-# kept for compatibility: every former strategy name (auto, join_dedup,
-# merge_asof, broadcast) runs the one union-scan as-of join
-STRATEGY = os.environ.get("BENCH_STRATEGY", "join_dedup")
 
 
 def _noop_write(df) -> None:
@@ -61,9 +58,9 @@ def _noop_write(df) -> None:
 def headline_job(
     spark, seq_docs: int = SEQ_DOCS, spine_rows: int = SPINE_ROWS
 ) -> tuple[float, int]:
-    """PIT as-of join (the union-scan; $BENCH_STRATEGY is passed through)
-    of the spine against the token-sequence table + windowed feature
-    engineering, materialized. Returns (seconds, spine_rows)."""
+    """PIT as-of join of the spine against the token-sequence table +
+    windowed feature engineering, materialized. Returns (seconds,
+    spine_rows)."""
     from pyspark.sql import functions as F
 
     from feast_spark.datagen import spark_entity_spine, spark_token_sequences
@@ -81,7 +78,6 @@ def headline_job(
         ["tokens", "n_tok", "source"],
         created_col="created",
         ttl_seconds=3 * 86400,
-        strategy=STRATEGY,
     )
     feats = lag_lead_features(
         joined.filter(F.col("n_tok").isNotNull()),

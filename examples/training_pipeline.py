@@ -192,7 +192,6 @@ def build_training_set(spark, sf_dir: str, out_dir: str) -> dict:
         ["tokens", "n_tok", "source"],
         created_col="created",
         ttl_seconds=7 * 86400,
-        strategy="join_dedup",
         feature_prefix="feat_",
     )
     feats = lag_lead_features(joined, ["doc_id"], "event_timestamp", ["feat_n_tok"], offsets=[1])

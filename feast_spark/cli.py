@@ -96,7 +96,6 @@ def cmd_get_historical_features(args: argparse.Namespace) -> int:
         feature_ts_col=args.ts_col,
         created_col=args.created_col,
         ttl_seconds=args.ttl_days * 86400 if args.ttl_days else None,
-        strategy=args.strategy,
         feature_prefix=args.prefix,
     )
     out.write.mode("overwrite").parquet(args.out)
@@ -142,10 +141,6 @@ def build_parser() -> argparse.ArgumentParser:
     g.add_argument("--ts-col", default="event_timestamp")
     g.add_argument("--created-col", default=None)
     g.add_argument("--ttl-days", type=int, default=None)
-    g.add_argument("--strategy", default="join_dedup",
-                   choices=["join_dedup", "merge_asof", "broadcast"],
-                   help="accepted for compatibility: every name runs the "
-                        "one union-scan as-of join")
     g.add_argument("--prefix", default="",
                    help="prefix for output feature columns (avoids spine collisions)")
     g.set_defaults(fn=cmd_get_historical_features)

@@ -233,6 +233,7 @@ class FeatureStore:
         values, reference spark.py:543-579) and pre-filter every feature
         scan to ``[min - ttl, max]`` so partition pruning kicks in — at
         100 TB this is the difference between scanning a day and a year.
+        ``strategy`` is accepted and ignored, as in ``point_in_time_join``.
         """
         if isinstance(features, FeatureService):
             features = list(features.features)

@@ -39,10 +39,9 @@ never a spine × versions pair set. Spine multiplicity holds by
 construction, since each spine row is one row of the union.
 
 Zero join keys (an entityless view) is the same scan over an
-unpartitioned window: linear, but one task. ``strategy="range_union"``
-is the distributed entityless path: the union is range-partitioned on
-ts and each range partition receives the last feature of the ranges
-before it as a carry-in.
+unpartitioned window: linear, but one task. There is one code path;
+``strategy`` only accepts the names of former physical strategies
+(see ``point_in_time_join``).
 """
 
 from __future__ import annotations
@@ -53,8 +52,8 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-# names of former physical strategies; every one now runs the union-scan
-_UNION_SCAN_NAMES = ("auto", "join_dedup", "merge_asof", "broadcast")
+# names of former physical strategies; every one runs the union-scan
+_LEGACY_STRATEGIES = ("auto", "join_dedup", "merge_asof", "broadcast", "range_union")
 
 _INTERNAL = "__asof_"  # prefix of every working column of the union
 _TS = _INTERNAL + "ts"
@@ -115,47 +114,6 @@ def _tagged_union(
     return feats.unionByName(rows), order
 
 
-def _range_union_scan(u: DataFrame, order: list[Column], tie_breaks: int, created: bool) -> DataFrame:
-    """Entityless scan with NO single-task stage (``strategy="range_union"``).
-
-    The union is range-partitioned on ts and each range partition runs
-    the running ``last`` on its own. Spine rows whose partition starts
-    after the last feature of the earlier partitions get a CARRY-IN: one
-    max-by row per partition (a ≤ #partitions frame), cumulated with a
-    tiny single-task window (bounded by the partition count, never by
-    data), broadcast back. Output values do not depend on the sampled
-    range boundaries: a carry-in is exactly what the window would have
-    seen in a coarser partitioning."""
-    pid, last, carry = (_INTERNAL + n for n in ("pid", "last", "carry"))
-    u = u.repartitionByRange(F.col(_TS)).withColumn(pid, F.spark_partition_id())
-    w = Window.partitionBy(pid).orderBy(*order).rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    u = u.withColumn(last, F.last(_F, ignorenulls=True).over(w))
-    okey = F.struct(
-        F.col(_TS),
-        *([F.col(f"{_F}.__created")] if created else []),
-        *[F.col(f"{_F}.__tb{i}") for i in range(tie_breaks)],
-    )
-    per_pid = (
-        u.filter(F.col(_F).isNotNull()).groupBy(pid).agg(F.max_by(_F, okey).alias(_M))
-    )
-    # carry frame: ONE row per range partition — its single-task window
-    # is bounded by spark.sql.shuffle.partitions, not by the data
-    cw = Window.orderBy(pid).rowsBetween(Window.unboundedPreceding, -1)
-    carries = (
-        u.select(pid)
-        .distinct()
-        .join(per_pid, pid, "left")
-        .select(pid, F.last(_M, ignorenulls=True).over(cw).alias(carry))
-    )
-    return (
-        u.filter(F.col(_F).isNull())
-        .join(F.broadcast(carries), pid, "left")
-        .withColumn(_M, F.coalesce(last, carry))
-    )
-
-
 def point_in_time_join(
     spine: DataFrame,
     features: DataFrame,
@@ -180,21 +138,17 @@ def point_in_time_join(
     (key, ts, created) rows exist and bit-exact reproducibility matters.
     ``feature_prefix`` renames output feature columns (``prefix + name``)
     — required when a feature column name already exists on the spine.
-    ``strategy``: ``"auto"``, ``"join_dedup"``, ``"merge_asof"`` and
-    ``"broadcast"`` (names of former physical strategies) all run the
-    union-scan; ``"range_union"`` runs the distributed entityless scan
-    and needs zero join keys; any other value raises ``ValueError``.
-    ``spine_assume_unique`` is accepted and ignored: the union-scan
-    stamps no spine row id, so duplicate spine rows need no care.
+    ``strategy`` and ``spine_assume_unique`` are accepted for source
+    compatibility and ignored: every call runs the one union-scan.
+    ``strategy`` must still be one of the former physical strategy
+    names (``auto``, ``join_dedup``, ``merge_asof``, ``broadcast``,
+    ``range_union``); any other value raises ``ValueError``.
     Returns spine columns + feature columns (+ ``feature_ts_col`` as
     ``__feature_ts`` when ``include_feature_ts``).
     """
-    join_keys = list(join_keys)
-    if strategy == "range_union":
-        if join_keys:
-            raise ValueError("strategy='range_union' is for entityless views (no join keys)")
-    elif strategy not in _UNION_SCAN_NAMES:
+    if strategy not in _LEGACY_STRATEGIES:
         raise ValueError(f"unknown strategy {strategy!r}")
+    join_keys = list(join_keys)
     if feature_cols is None:
         excluded = set(join_keys) | {feature_ts_col, created_col}
         feature_cols = [c for c in features.columns if c not in excluded]
@@ -221,14 +175,11 @@ def point_in_time_join(
         created_col=created_col,
         tie_breaker_cols=tie_breaker_cols,
     )
-    if strategy == "range_union":
-        matched = _range_union_scan(u, order, len(tie_breaker_cols), bool(created_col))
-    else:
-        w = (Window.partitionBy(*join_keys) if join_keys else Window).orderBy(*order)
-        w = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        matched = u.withColumn(_M, F.last(_F, ignorenulls=True).over(w)).filter(
-            F.col(_F).isNull()
-        )
+    w = (Window.partitionBy(*join_keys) if join_keys else Window).orderBy(*order)
+    w = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    matched = u.withColumn(_M, F.last(_F, ignorenulls=True).over(w)).filter(
+        F.col(_F).isNull()
+    )
 
     valid = F.col(_TS).isNotNull()
     if ttl_seconds and ttl_seconds > 0:
@@ -256,10 +207,11 @@ def multi_view_pit_join(
 
     ``views`` yields ``(features_df, join_keys, opts)`` where ``opts`` may
     carry ``feature_cols``, ``feature_ts_col``, ``created_col``,
-    ``ttl_seconds``, ``prefix`` (output names become ``prefix__name``)
-    and ``strategy``. Each view's as-of join runs on the spine as grown
+    ``ttl_seconds`` and ``prefix`` (output names become
+    ``prefix__name``). Each view's as-of join runs on the spine as grown
     by the views before it, so the views chain without a row id or a
-    fan-in join. ``spine_assume_unique`` is accepted and ignored.
+    fan-in join. ``strategy`` and ``spine_assume_unique`` are accepted
+    and ignored, as in ``point_in_time_join``.
     """
     out = spine
     for features, join_keys, opts in views:
@@ -273,7 +225,7 @@ def multi_view_pit_join(
             feature_ts_col=opts.get("feature_ts_col", "event_timestamp"),
             created_col=opts.get("created_col"),
             ttl_seconds=opts.get("ttl_seconds"),
-            strategy=opts.get("strategy", strategy),
+            strategy=strategy,
             feature_prefix=f"{prefix}__" if prefix else "",
         )
     return out

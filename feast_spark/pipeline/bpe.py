@@ -220,18 +220,21 @@ def bpe_learn(
     Vocab-gated driver loop: the expensive distributed work is the ONE
     corpus scan that builds the distinct (word, freq) table; the
     learning loop itself only ever touches that vocabulary-sized
-    table. When the vocab has ≤ ``driver_vocab_rows`` rows (default
-    1M ≈ tens of MB — same byte-gating pattern as
-    ``dedup_text._jaccard_gram``) it is collected once and the loop
-    runs driver-side through the IDENTICAL ``_bpe_word`` +
-    argmax-with-lex-tie-break code, eliminating ``n_merges`` Spark
-    job round-trips (16 rounds: 8.3 s → ~1.5 s at sf0.1, which has a
-    30-word vocab — the per-round cost was 100% scheduler/Arrow
-    overhead). Above the gate (or ``driver_vocab_rows=None``) the
-    per-round distributed loop runs: one combinable shuffle + a 1-row
-    collect per merge. Both paths produce identical merges (pinned by
-    a test); exact integer statistics and the same deterministic
-    ordering on both."""
+    table. When ``vocab_rows * max(n_merges, 1) <= driver_vocab_rows *
+    100`` it is collected once and the loop runs driver-side through
+    the IDENTICAL ``_bpe_word`` + argmax-with-lex-tie-break code,
+    eliminating ``n_merges`` Spark job round-trips (16 rounds: 8.3 s →
+    ~1.5 s at sf0.1, which has a 30-word vocab — the per-round cost was
+    100% scheduler/Arrow overhead). The gate bounds the collect (the
+    default 1M admits a 1M-row vocab ≈ tens of MB, same byte-gating
+    pattern as ``dedup_text._jaccard_gram``) and the driver's compute:
+    every driver round re-tokenizes the whole vocab, so the driver runs
+    at most ``driver_vocab_rows * 100`` word re-tokenizations (a 1M
+    vocab at 100 merges, a 10k vocab at 10k merges). Above the gate (or
+    ``driver_vocab_rows=None``) the per-round distributed loop runs: one
+    combinable shuffle + a 1-row collect per merge. Both paths produce
+    identical merges (pinned by a test); exact integer statistics and
+    the same deterministic ordering on both."""
     if n_merges < 0:
         raise ValueError("n_merges must be >= 0")
     spark = df.sparkSession
@@ -261,7 +264,8 @@ def bpe_learn(
     merges: list[tuple[str, str]] = []
     freqs: list[int] = []
     try:
-        if driver_vocab_rows is not None and words.count() <= int(driver_vocab_rows):
+        budget = None if driver_vocab_rows is None else int(driver_vocab_rows) * 100
+        if budget is not None and words.count() * max(int(n_merges), 1) <= budget:
             wf = [(r["word"], int(r["freq"])) for r in words.collect()]
             merges, freqs = _learn_local(wf, int(n_merges), int(min_freq), int(max_word_len))
             if with_freqs:

@@ -559,7 +559,7 @@ def remove_duplicate_spans(
     both the agg and the probe read the cache — replacing the window
     form's skewed full shuffle with a skew-free materialization of the
     same data (the shuffle wrote it to disk too). Interleaved 5-run
-    A/B at sf0.1 (tools/ab_dedup_spans_skew.py): window 1.40 s, this
+    A/B at sf0.1 (NOTES_ROUND5.md): window 1.40 s, this
     form 1.61 s (+15%), unpersisted recompute form 2.57 s; a synthetic
     hot-gram stress (one gram on 25% of 200k docs' positions) shows
     no single-task bind. ``cache_grams=False`` trades the

@@ -1,5 +1,5 @@
-"""PIT/as-of join correctness vs the brute-force oracle, both physical
-strategies, on the BASELINE.json-shaped token-sequence data.
+"""PIT/as-of join correctness vs the brute-force oracle, on the
+BASELINE.json-shaped token-sequence data.
 
 Checks (per BASELINE.md correctness baseline): zero temporal leakage,
 TTL expiry, latest-before + created tie-break (backfill), left-join NULL
@@ -57,9 +57,8 @@ def _expected(spine_pd, feats_pd, ttl):
     return _normalize(exp)
 
 
-@pytest.mark.parametrize("strategy", ["join_dedup", "merge_asof", "broadcast"])
 @pytest.mark.parametrize("ttl", [TTL, None])
-def test_pit_join_matches_oracle(spark, data, strategy, ttl):
+def test_pit_join_matches_oracle(spark, data, ttl):
     spine_df, feats_df, spine_pd, feats_pd = data
     got = point_in_time_join(
         spine_df,
@@ -68,7 +67,6 @@ def test_pit_join_matches_oracle(spark, data, strategy, ttl):
         ["tokens", "n_tok", "source"],
         created_col="created",
         ttl_seconds=ttl,
-        strategy=strategy,
     ).toPandas()
     assert len(got) == len(spine_pd), "spine multiplicity must be preserved"
     exp = _expected(spine_pd, feats_pd, ttl)
@@ -147,15 +145,12 @@ def test_backfill_created_tiebreak(spark):
         }
     )
     sdf, fdf = datagen.to_spark(spark, spine), datagen.to_spark(spark, feats)
-    for strategy in ("join_dedup", "merge_asof"):
-        got = (
-            point_in_time_join(
-                sdf, fdf, ["doc_id"], ["val"], created_col="created", strategy=strategy
-            )
-            .toPandas()
-            .sort_values("event_timestamp")
-        )
-        assert got["val"].tolist() == [2, 3], strategy
+    got = (
+        point_in_time_join(sdf, fdf, ["doc_id"], ["val"], created_col="created")
+        .toPandas()
+        .sort_values("event_timestamp")
+    )
+    assert got["val"].tolist() == [2, 3]
 
 
 def test_entityless_view(spark):
@@ -174,19 +169,16 @@ def test_entityless_view(spark):
         }
     )
     sdf, fdf = datagen.to_spark(spark, spine), datagen.to_spark(spark, feats)
-    for strategy in ("join_dedup", "merge_asof"):
-        got = (
-            point_in_time_join(
-                sdf, fdf, [], ["total"], created_col="created", strategy=strategy
-            )
-            .toPandas()
-            .sort_values("doc_id")
-        )
-        assert got["total"].tolist() == [10, 20], strategy
+    got = (
+        point_in_time_join(sdf, fdf, [], ["total"], created_col="created")
+        .toPandas()
+        .sort_values("doc_id")
+    )
+    assert got["total"].tolist() == [10, 20]
 
 
 def test_composite_key_pit(spark):
-    """PIT join on two join keys (entity composite), both strategies."""
+    """PIT join on two join keys (entity composite)."""
     ts = pd.Timestamp("2024-01-05")
     feats = pd.DataFrame(
         {
@@ -205,16 +197,12 @@ def test_composite_key_pit(spark):
         }
     )
     sdf, fdf = datagen.to_spark(spark, spine), datagen.to_spark(spark, feats)
-    for strategy in ("join_dedup", "merge_asof", "broadcast"):
-        got = (
-            point_in_time_join(
-                sdf, fdf, ["tenant", "doc_id"], ["val"],
-                created_col="created", strategy=strategy,
-            )
-            .toPandas()
-            .sort_values(["tenant", "doc_id"])
-        )
-        assert got["val"].fillna(-1).tolist() == [2, 3, 4, -1], strategy
+    got = (
+        point_in_time_join(sdf, fdf, ["tenant", "doc_id"], ["val"], created_col="created")
+        .toPandas()
+        .sort_values(["tenant", "doc_id"])
+    )
+    assert got["val"].fillna(-1).tolist() == [2, 3, 4, -1]
 
 
 def test_null_keys_never_match(spark):
@@ -273,6 +261,9 @@ def test_duplicate_spine_rows_keep_multiplicity(spark):
 
 
 def test_strategy_names_and_ignored_options(spark):
+    """``strategy`` and ``spine_assume_unique`` are accepted and ignored:
+    every former strategy name runs the one union-scan, keyed or
+    entityless; a name that never existed raises."""
     ts = datetime(2024, 1, 5)
     feats = spark.createDataFrame(
         [("a", ts, 1)], "doc_id string, event_timestamp timestamp, val int"
@@ -283,10 +274,12 @@ def test_strategy_names_and_ignored_options(spark):
             spine, feats, ["doc_id"], ["val"], spine_assume_unique=unique
         ).toPandas()
         assert got["val"].tolist() == [1]
+    for strategy in ("auto", "join_dedup", "merge_asof", "broadcast", "range_union"):
+        for keys in (["doc_id"], []):
+            got = point_in_time_join(spine, feats, keys, ["val"], strategy=strategy)
+            assert [r.val for r in got.collect()] == [1], (strategy, keys)
     with pytest.raises(ValueError, match="unknown strategy"):
         point_in_time_join(spine, feats, ["doc_id"], ["val"], strategy="sort_merge")
-    with pytest.raises(ValueError, match="range_union"):
-        point_in_time_join(spine, feats, ["doc_id"], ["val"], strategy="range_union")
 
 
 def test_multi_view_pit_join_chains_views(spark, data):

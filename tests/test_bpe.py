@@ -201,6 +201,33 @@ def test_learn_driver_and_distributed_paths_agree(spark):
     assert len(local) > 0 and all(f >= 2 for *_, f in local)
 
 
+def test_learn_driver_gate_counts_merges(spark, monkeypatch):
+    """The driver path is gated on vocab rows × merges, not rows alone:
+    13 distinct words fit ``driver_vocab_rows=13``, but 13 × 200 merges
+    exceed 13 × 100, so the distributed loop runs — and learns the same
+    merges as ``driver_vocab_rows=None``."""
+    import feast_spark.pipeline.bpe as bpe_mod
+
+    texts = [
+        "the theme of the thesis",
+        "banana bandana and sandbars",
+        "supercalifragilistic but short words win",
+    ] * 2
+    df = spark.createDataFrame(pd.DataFrame({"text": texts}))
+    kw = dict(n_merges=200, min_freq=4, with_freqs=True)
+    dist = bpe_learn(df, driver_vocab_rows=None, **kw)
+
+    def no_driver_loop(*args):
+        raise AssertionError("driver path taken")
+
+    monkeypatch.setattr(bpe_mod, "_learn_local", no_driver_loop)
+    assert bpe_learn(df, driver_vocab_rows=13, **kw) == dist
+    assert len(dist) > 0
+    with pytest.raises(AssertionError, match="driver path"):
+        # 13 × 200 <= 26 × 100: the same vocab takes the driver path
+        bpe_learn(df, driver_vocab_rows=26, **kw)
+
+
 def test_learn_min_freq_stops_early(spark):
     df = spark.createDataFrame([("ab ab cd",)], "text string")
     # (a,b) appears twice, (c,d) once -> only one merge at min_freq=2

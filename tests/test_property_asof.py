@@ -1,7 +1,7 @@
 """Property-based PIT-join testing: hypothesis generates adversarial
 event layouts (duplicate timestamps, boundary equality, empty sides,
-single-key pile-ups); both physical strategies must match the
-brute-force oracle on every one."""
+single-key pile-ups); the as-of join must match the brute-force
+oracle on every one."""
 
 import numpy as np
 import pandas as pd
@@ -59,22 +59,20 @@ def test_pit_matches_oracle_property(spark, feats, spine, ttl_h):
     # oracle keeps the LAST row in (ts, created) mergesort order on ties;
     # engine tie-breaks by rid desc — align by also sorting oracle input
     # on rid (done above) so both pick max-rid among (max ts, max created)
-    for strategy in ("join_dedup", "merge_asof"):
-        got = point_in_time_join(
-            sdf,
-            fdf,
-            ["doc_id"],
-            ["val", "rid"],
-            created_col="created",
-            ttl_seconds=ttl,
-            strategy=strategy,
-            tie_breaker_cols=["rid"],
-        ).toPandas()
-        key = ["doc_id", "event_timestamp"]
-        g = got.sort_values(key + ["rid"], kind="mergesort").reset_index(drop=True)
-        e = exp.sort_values(key + ["rid"], kind="mergesort").reset_index(drop=True)
-        assert len(g) == len(spd), strategy
-        assert np.array_equal(
-            g["rid"].fillna(-1).astype(float).values,
-            e["rid"].fillna(-1).astype(float).values,
-        ), f"{strategy}: rid mismatch\ngot:\n{g}\nexp:\n{e}"
+    got = point_in_time_join(
+        sdf,
+        fdf,
+        ["doc_id"],
+        ["val", "rid"],
+        created_col="created",
+        ttl_seconds=ttl,
+        tie_breaker_cols=["rid"],
+    ).toPandas()
+    key = ["doc_id", "event_timestamp"]
+    g = got.sort_values(key + ["rid"], kind="mergesort").reset_index(drop=True)
+    e = exp.sort_values(key + ["rid"], kind="mergesort").reset_index(drop=True)
+    assert len(g) == len(spd)
+    assert np.array_equal(
+        g["rid"].fillna(-1).astype(float).values,
+        e["rid"].fillna(-1).astype(float).values,
+    ), f"rid mismatch\ngot:\n{g}\nexp:\n{e}"

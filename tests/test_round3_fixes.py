@@ -263,28 +263,3 @@ def test_restricted_profile_validates_restricted_frame(spark):
     # validating a frame holding exactly the profiled column must pass
     assert profile.run(df.select("v")).is_success
     assert not [e for e in profile.expectations if e.kind == "columns_ordered"]
-
-
-def test_salted_repartition_modes(spark):
-    import pytest as _pt
-
-    from feast_spark.operators.skew import salted_repartition
-
-    df = spark.createDataFrame(
-        pd.DataFrame({"doc_id": ["hot"] * 100, "v": [1.0] * 100})
-    )
-    with _pt.raises(ValueError, match="salt_mode"):
-        salted_repartition(df, ["doc_id"], salt_mode="bogus")
-    # content mode: identical rows collapse (documented), rows intact
-    c = salted_repartition(df, ["doc_id"], shards=8, salt_mode="content")
-    assert c.count() == 100
-    # salt diversity (partition counts are AQE-coalesced at this size,
-    # so assert on the salt itself): content mode collapses identical
-    # rows to ONE shard; positional mode spreads them
-    from feast_spark.operators.skew import with_salt
-
-    n_content = with_salt(df, shards=8, deterministic=True).select("__salt").distinct().count()
-    n_positional = with_salt(df, shards=8).select("__salt").distinct().count()
-    assert n_content == 1 and n_positional > 1
-    p = salted_repartition(df, ["doc_id"], shards=8, salt_mode="positional")
-    assert p.count() == 100

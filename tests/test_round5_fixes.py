@@ -203,13 +203,7 @@ def test_remove_duplicate_token_runs(spark):
     assert "Window" not in plan
 
 
-def _sorted_rows(df):
-    return sorted(
-        tuple(r) for r in df.collect()
-    )
-
-
-def test_entityless_range_union_matches_merge_asof(spark):
+def test_entityless_union_scan(spark):
     from datetime import datetime, timedelta
 
     from feast_spark.operators.asof_join import point_in_time_join
@@ -235,23 +229,21 @@ def test_entityless_range_union_matches_merge_asof(spark):
         ],
         "sid long, event_timestamp timestamp",
     )
-    kw = dict(
-        created_col="created", ttl_seconds=86400, include_feature_ts=True
-    )
-    a = point_in_time_join(
-        spine, feats, [], ["gval"], strategy="merge_asof", **kw
-    )
-    b = point_in_time_join(
-        spine, feats, [], ["gval"], strategy="range_union", **kw
-    )
-    assert _sorted_rows(a.select("sid", "gval", "__feature_ts")) == _sorted_rows(
-        b.select("sid", "gval", "__feature_ts")
-    )
-    got = {r["sid"]: r["gval"] for r in b.collect()}
-    assert got == {1: None, 2: 11.0, 3: 50.0, 4: None, 5: 99.0}
+    rows = point_in_time_join(
+        spine, feats, [], ["gval"], created_col="created", ttl_seconds=86400,
+        include_feature_ts=True,
+    ).collect()
+    assert {r["sid"]: r["gval"] for r in rows} == {1: None, 2: 11.0, 3: 50.0, 4: None, 5: 99.0}
+    assert {r["sid"]: r["__feature_ts"] for r in rows} == {
+        1: None,
+        2: t0 + timedelta(hours=1),
+        3: t0 + timedelta(hours=5),
+        4: None,
+        5: t0 + timedelta(days=3),
+    }
 
 
-def test_entityless_range_union_empty_features(spark):
+def test_entityless_union_scan_empty_features(spark):
     from datetime import datetime
 
     from feast_spark.operators.asof_join import point_in_time_join
@@ -262,17 +254,17 @@ def test_entityless_range_union_empty_features(spark):
     feats = spark.createDataFrame(
         [], "event_timestamp timestamp, created timestamp, gval double"
     )
-    out = point_in_time_join(
-        spine, feats, [], ["gval"], created_col="created", strategy="range_union"
-    ).collect()
+    out = point_in_time_join(spine, feats, [], ["gval"], created_col="created").collect()
     assert len(out) == 1 and out[0]["gval"] is None
 
 
-def test_entityless_range_union_matches_merge_asof_bulk(spark):
-    # 5k spine x 2k features across many range partitions: carry-in
-    # rows must reproduce the single-group merge exactly
+def test_entityless_union_scan_bulk_matches_oracle(spark):
+    """5k spine x 2k features, no join key: the result matches the
+    brute-force oracle with AQE off and an odd shuffle partition count —
+    it must not depend on those physical choices."""
     from feast_spark.operators.asof_join import point_in_time_join
     from pyspark.sql import functions as SF
+    from tests.oracle import expected_pit_df
 
     feats = (
         spark.range(2000)
@@ -290,11 +282,28 @@ def test_entityless_range_union_matches_merge_asof_bulk(spark):
             "event_timestamp"
         ),
     )
-    kw = dict(created_col="created", ttl_seconds=7 * 86400)
-    a = point_in_time_join(spine, feats, [], ["gval"], strategy="merge_asof", **kw)
-    b = point_in_time_join(spine, feats, [], ["gval"], strategy="range_union", **kw)
-    assert _sorted_rows(a.select("sid", "gval")) == _sorted_rows(
-        b.select("sid", "gval")
+    conf = {"spark.sql.adaptive.enabled": "false", "spark.sql.shuffle.partitions": "7"}
+    old = {k: spark.conf.get(k) for k in conf}
+    for k, v in conf.items():
+        spark.conf.set(k, v)
+    try:
+        got = point_in_time_join(
+            spine, feats, [], ["gval"], created_col="created", ttl_seconds=7 * 86400
+        ).toPandas()
+    finally:
+        for k, v in old.items():
+            spark.conf.set(k, v)
+    exp = expected_pit_df(
+        spine.toPandas(),
+        feats.toPandas(),
+        [],
+        created_col="created",
+        ttl_seconds=7 * 86400,
+        feature_cols=["gval"],
+    )
+    assert len(got) == 5000
+    assert dict(zip(got["sid"], got["gval"].fillna(-1))) == dict(
+        zip(exp["sid"], exp["gval"].fillna(-1))
     )
 
 
