@@ -57,8 +57,11 @@ def _expected(spine_pd, feats_pd, ttl):
     return _normalize(exp)
 
 
+@pytest.mark.parametrize("strategy", ["join_dedup", "merge_asof", "broadcast"])
 @pytest.mark.parametrize("ttl", [TTL, None])
-def test_pit_join_matches_oracle(spark, data, ttl):
+def test_pit_join_matches_oracle(spark, data, strategy, ttl):
+    """Every legacy strategy name is accepted, ignored, and gives the
+    oracle's rows."""
     spine_df, feats_df, spine_pd, feats_pd = data
     got = point_in_time_join(
         spine_df,
@@ -67,6 +70,7 @@ def test_pit_join_matches_oracle(spark, data, ttl):
         ["tokens", "n_tok", "source"],
         created_col="created",
         ttl_seconds=ttl,
+        strategy=strategy,
     ).toPandas()
     assert len(got) == len(spine_pd), "spine multiplicity must be preserved"
     exp = _expected(spine_pd, feats_pd, ttl)

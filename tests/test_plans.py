@@ -60,22 +60,41 @@ def test_spine_bounds_push_into_scan(spark, ev):
     assert "GreaterThanOrEqual(ts" in plan
 
 
-def test_point_in_time_join_one_exchange_one_sort(spark, ev):
+def _assert_union_scan(out) -> None:
     """ONE hash shuffle of spine + feature rows on the join key and ONE
     sort feeding the running window — no row-id stamp, conditional join
     or join back, no Arrow cogroup and no broadcast."""
+    plan = _plan(out)
+    assert len(re.findall(r"\bExchange hashpartitioning\(user_id", plan)) == 1, plan
+    assert len(re.findall(r"\bExchange\b", plan)) == 1, plan
+    assert len(re.findall(r"\bSort \[", plan)) == 1, plan
+    assert "FlatMapCoGroupsIn" not in plan
+    assert "BroadcastExchange" not in plan
+
+
+def _clicks_asof(ev, strategy: str):
     spine = ev.filter("event_type = 'purchase'").select(
         "user_id", F.col("ts").alias("event_timestamp")
     )
     feats = ev.filter("event_type = 'click'").select(
         "user_id", F.col("ts").alias("event_timestamp"), "value"
     )
-    plan = _plan(point_in_time_join(spine, feats, ["user_id"], ["value"], ttl_seconds=86400))
-    assert len(re.findall(r"\bExchange hashpartitioning\(user_id", plan)) == 1, plan
-    assert len(re.findall(r"\bExchange\b", plan)) == 1, plan
-    assert len(re.findall(r"\bSort \[", plan)) == 1, plan
-    assert "FlatMapCoGroupsIn" not in plan
-    assert "BroadcastExchange" not in plan
+    return point_in_time_join(
+        spine, feats, ["user_id"], ["value"], ttl_seconds=86400, strategy=strategy
+    )
+
+
+@pytest.mark.parametrize("strategy", ["auto", "join_dedup", "broadcast"])
+def test_point_in_time_join_one_exchange_one_sort(spark, ev, strategy):
+    """Every legacy strategy name is ignored: the plan is the one
+    union-scan."""
+    _assert_union_scan(_clicks_asof(ev, strategy))
+
+
+def test_merge_asof_shuffle_count(spark, ev):
+    """strategy='merge_asof' is ignored too: one shuffle, no Arrow
+    cogroup."""
+    _assert_union_scan(_clicks_asof(ev, "merge_asof"))
 
 
 def test_entityless_store_retrieval_has_no_arrow_cogroup(spark, ev):
