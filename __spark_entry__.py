@@ -241,6 +241,49 @@ FROM (
 """
 
 
+def q_materialize_readback(spark, sf_dir):
+    """Write path: materialize_view the first 7 days of events (latest
+    row per (user, day), tie-break max event_id) into a fresh directory,
+    read the files back, and carry each day's manifest row count so the
+    counts observed by the write job are checked too."""
+    import tempfile
+    from datetime import datetime
+
+    from feast_spark.materialize.jobs import (
+        MaterializationManifest,
+        materialize_view,
+        read_materialized,
+    )
+
+    out = tempfile.mkdtemp(prefix="materialize_readback_")
+    ev = _events(spark, sf_dir).select("user_id", "ts", "event_type", "value", "event_id")
+    materialize_view(
+        spark, ev, out, ["user_id"], ts_col="ts", created_col="event_id",
+        start=datetime(2024, 1, 1), end=datetime(2024, 1, 7, 23, 59, 59, 999999),
+    )
+    manifest = spark.createDataFrame(
+        [(day, e["rows"]) for day, e in MaterializationManifest(out).load().items()],
+        "day string, day_rows bigint",
+    )
+    back = read_materialized(spark, out).withColumn("day", F.col("day").cast("string"))
+    return back.join(manifest, "day").select(
+        "user_id", "day", _epoch("ts").alias("ts_epoch"), "event_type", "value",
+        "event_id", "day_rows",
+    )
+
+
+_MATERIALIZE_READBACK_ORACLE = """
+SELECT user_id, day, CAST(floor(epoch(ts)) AS BIGINT) ts_epoch, event_type, value,
+       event_id, COUNT(*) OVER (PARTITION BY day) AS day_rows
+FROM (
+  SELECT *, ROW_NUMBER() OVER (
+    PARTITION BY user_id, day ORDER BY ts DESC, event_id DESC) rn
+  FROM (SELECT *, strftime(ts, '%Y-%m-%d') AS day FROM events
+        WHERE ts >= TIMESTAMP '2024-01-01' AND ts < TIMESTAMP '2024-01-08')
+) WHERE rn = 1
+"""
+
+
 def q_lag_lead(spark, sf_dir):
     """lag/lead feature engineering per user over event time."""
     from feast_spark.operators.windows import lag_lead_features
@@ -3145,6 +3188,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # rest; the 16 rotated past 50 this round all carry fresh r04
         # green driver rows (most with r01-r04 history) and the local
         # tools/check_oracles.py gate re-verifies all 66 every round.
+        # --- never in any driver artifact
+        "materialize_readback": q_materialize_readback,
         # --- round-5 new (never in any driver artifact)
         "bpe_learn": q_bpe_learn,
         "decontaminate_ids": q_decontaminate_ids,
@@ -3237,6 +3282,7 @@ def oracle_sql() -> dict[str, str]:
     # made the sign bits engine-portable; recall@k vs brute force remains
     # golden-tested in tests/test_pipeline_similarity.py).
     return {
+        "materialize_readback": _MATERIALIZE_READBACK_ORACLE,
         "bpe_learn": _bpe_learn_oracle(),
         "decontaminate_ids": _decontaminate_ids_oracle(),
         "dedup_runs": _dedup_spans_oracle_sql(16, False),

@@ -579,8 +579,9 @@ class FeatureStore:
         path). ``features`` are the same ``view:feature`` refs as
         historical retrieval; each view reads its own
         ``{online_path}/{view_name}`` snapshot (written by
-        ``materialize_online``) and results accumulate on the request
-        keys."""
+        ``materialize_online``, one row per key) and is left-joined
+        straight onto the request rows, so the result has one row per
+        request row."""
         import os as _os
 
         from feast_spark.online import LocalOnlineStore
@@ -610,16 +611,15 @@ class FeatureStore:
                     f"online feature columns {sorted(dup)} from view "
                     f"{view_name!r} collide with columns already present"
                 )
-            res = store.get_online_features(
+            out = store.get_online_features(
                 self.spark,
-                out.select(*view.join_keys).distinct(),
+                out,
                 view.join_keys,
                 cols,
                 ttl_seconds=view.ttl_seconds or None,
                 now=now,
                 ts_col=view.timestamp_field,
             )
-            out = out.join(res, on=view.join_keys, how="left")
         return out
 
     # --------------------------------------------------------- saved datasets

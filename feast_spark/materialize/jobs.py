@@ -28,7 +28,7 @@ import json
 import os
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from feast_spark.operators.dedup import latest_row_dedup
@@ -151,7 +151,8 @@ def materialize_view(
     ``chunk_days`` chunks; each pending chunk is ONE job (time-range
     filter → latest-per-(key, day) window dedup in a single shuffle →
     ``partitionBy(day)`` dynamic-overwrite write), and each completed
-    day gets a manifest entry. A 3-year backfill is ~35 passes over the
+    day gets a manifest entry whose rows the write job itself counts
+    (``observe``, no re-read). A 3-year backfill is ~35 passes over the
     (time-pruned) input instead of ~1000, while a crash still resumes
     at chunk granularity — the passes/blast-radius trade-off is the
     ``chunk_days`` knob (1 = the reference-style per-day loop).
@@ -200,23 +201,18 @@ def materialize_view(
             part = latest_row_dedup(part, [*join_keys, "__day"], ts_col, created_col)
         if repartition:
             part = part.repartition(repartition, *join_keys)
+        obs = Observation()
         (
-            part.withColumnRenamed("__day", "day")
+            part.observe(obs, *[F.count_if(F.col("__day") == d).alias(d) for d in chunk])
+            .withColumnRenamed("__day", "day")
             .write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
             .partitionBy("day")
             .parquet(out_path)
         )
-        written = (
-            spark.read.option("basePath", out_path)
-            .parquet(*[os.path.join(out_path, f"day={d}") for d in chunk])
-        )
-        counts = {
-            str(r["day"]): r["cnt"]
-            for r in written.groupBy("day").agg(F.count(F.lit(1)).alias("cnt")).collect()
-        }
+        counts = obs.get
         for day in chunk:
-            cnt = counts.get(day, 0)
+            cnt = counts[day]
             manifest.record(day, cnt, _dir_bytes(os.path.join(out_path, f"day={day}")))
             res.written.append(day)
             res.rows += cnt

@@ -6,10 +6,11 @@ The reference serves online features from Redis/DynamoDB/etc. via
 deployment target is the offline/training side, but the loop is
 completed with a file-backed online snapshot:
 
-* ``push_online`` — latest-per-key dedup + bucketed parquet snapshot
-  (bucket by key hash → a lookup touches one bucket);
-* ``LocalOnlineStore.get_online_features`` — broadcast the (small)
-  request keys against the snapshot, one bucket-pruned scan.
+* ``push_online`` — one latest-per-key dedup + bucketed parquet snapshot
+  (bucket by key hash → a lookup touches one bucket); the write job
+  observes the row count, nothing is cached or re-counted;
+* ``LocalOnlineStore.get_online_features`` — one left join of the
+  request rows onto the bucket-pruned snapshot (one row per key).
 
 On a cluster, swap the parquet snapshot for a real KV store by passing
 a ``write_fn`` to ``materialize.writers.write_online_batch`` — the
@@ -23,7 +24,7 @@ import os
 from dataclasses import dataclass
 from typing import Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from feast_spark.operators.dedup import latest_row_dedup
@@ -44,22 +45,25 @@ class LocalOnlineStore:
         mode: str = "overwrite",
     ) -> int:
         """Materialize the latest row per entity into the online
-        snapshot, bucketed by key hash for pruned point lookups."""
-        latest = latest_row_dedup(df, list(join_keys), ts_col, created_col).persist()
-        try:
-            bucketed = latest.withColumn(
-                "__bucket", F.pmod(F.hash(*join_keys), F.lit(N_BUCKETS))
-            )
-            (
-                bucketed.repartition(N_BUCKETS, "__bucket")
-                .write.mode(mode)
-                .partitionBy("__bucket")
-                .parquet(self.path)
-            )
-            # count from the cache — not a second run of the dedup shuffle
-            return latest.count()
-        finally:
-            latest.unpersist()
+        snapshot, bucketed by key hash for pruned point lookups: one
+        dedup, one bucket shuffle (one file per ``__bucket=`` dir), and
+        one write job that also observes the returned row count. The
+        dedup goes first: a repartition below the window would block
+        Spark's map-side ``WindowGroupLimit``. The bucket shuffle has
+        one task per core, up to one per bucket: left to AQE, a small
+        snapshot coalesces into one task that writes every file."""
+        tasks = min(N_BUCKETS, df.sparkSession.sparkContext.defaultParallelism)
+        obs = Observation()
+        (
+            latest_row_dedup(df, list(join_keys), ts_col, created_col)
+            .withColumn("__bucket", F.pmod(F.hash(*join_keys), F.lit(N_BUCKETS)))
+            .repartition(tasks, "__bucket")
+            .observe(obs, F.count(F.lit(1)).alias("rows"))
+            .write.mode(mode)
+            .partitionBy("__bucket")
+            .parquet(self.path)
+        )
+        return obs.get["rows"]
 
     def push(
         self,

@@ -661,7 +661,7 @@ def remove_duplicate_token_runs(
     id_col: str = "doc_id",
     min_count: int = 2,
     out_col: str = "tokens_deduped",
-    cache_grams: bool = True,
+    cache_grams: bool = False,
 ) -> DataFrame:
     """Ids-space min-length ExactSubstr: remove every token inside a
     duplicated id run of length ≥ ``min_len`` (≥ ``min_count``
@@ -679,10 +679,10 @@ def remove_duplicate_token_runs(
     scrubbed array — ids stay ids).
 
     Plan for 100 TB: identical to ``remove_duplicate_spans``' round-5
-    skew-proof shape — codegen id-gram hashes over a persisted gram
-    stream (``cache_grams``), duplicate stats via a map-side-
-    combinable ``groupBy(gh)``, AQE broadcast/skew-split rejoin, one
-    per-doc hit fold."""
+    skew-proof shape — codegen id-gram hashes, duplicate stats via a
+    map-side-combinable ``groupBy(gh)``, AQE broadcast/skew-split
+    rejoin, one per-doc hit fold. ``cache_grams`` is off by default:
+    the gram stream is ``min_len``× the tokens and would stay cached."""
     if min_len < 2:
         raise ValueError("min_len must be >= 2")
     if min_count < 2:

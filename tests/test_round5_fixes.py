@@ -203,6 +203,22 @@ def test_remove_duplicate_token_runs(spark):
     assert "Window" not in plan
 
 
+def test_remove_duplicate_token_runs_leaves_nothing_cached(spark):
+    """The id-gram stream (min_len x the token count) is not persisted
+    by default, so repeated calls do not pile up cached copies."""
+    from feast_spark.pipeline.dedup_text import remove_duplicate_token_runs
+
+    df = spark.createDataFrame(
+        [("a", [1, 2, 3, 4, 5, 6]), ("b", [9, 2, 3, 4, 5, 8])],
+        "doc_id string, tokens array<int>",
+    )
+    cached = set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+    out = remove_duplicate_token_runs(df, min_len=4)
+    assert out.count() == 2
+    assert [r["tokens_deduped"] for r in out.orderBy("doc_id").collect()] == [[1, 6], [9, 8]]
+    assert set(spark.sparkContext._jsc.getPersistentRDDs().keys()) == cached
+
+
 def test_entityless_union_scan(spark):
     from datetime import datetime, timedelta
 
