@@ -1,5 +1,5 @@
 from feast_spark.operators.asof_join import multi_view_pit_join, point_in_time_join
-from feast_spark.operators.dedup import exact_dedup, latest_row_dedup, max_created_prepass
+from feast_spark.operators.dedup import latest_row_dedup
 from feast_spark.operators.windows import (
     lag_lead_features,
     rolling_agg,
@@ -9,10 +9,8 @@ from feast_spark.operators.windows import (
 )
 
 __all__ = [
-    "exact_dedup",
     "lag_lead_features",
     "latest_row_dedup",
-    "max_created_prepass",
     "multi_view_pit_join",
     "point_in_time_join",
     "rolling_agg",

@@ -42,29 +42,3 @@ def latest_row_dedup(
         .drop("__feast_rn")
     )
 
-
-def exact_dedup(df: DataFrame, cols: Sequence[str] | None = None) -> DataFrame:
-    """Exact duplicate removal on ``cols`` (default: all columns).
-
-    ``dropDuplicates`` compiles to a hash aggregate (map-side partial +
-    final) — one shuffle, no window sort.
-    """
-    return df.dropDuplicates(list(cols) if cols else None)
-
-
-def max_created_prepass(
-    df: DataFrame,
-    keys: Sequence[str],
-    ts_col: str,
-    created_col: str,
-) -> DataFrame:
-    """Drop rows superseded by a later ``created_col`` write for the same
-    (keys, event_ts) — the reference's dedup pre-pass
-    (spark_offline_store/spark.py:775-784). Folded into one window rather
-    than the reference's GROUP BY + rejoin (saves a shuffle)."""
-    w = Window.partitionBy(*keys, ts_col).orderBy(F.col(created_col).desc())
-    return (
-        df.withColumn("__feast_rn", F.row_number().over(w))
-        .filter(F.col("__feast_rn") == 1)
-        .drop("__feast_rn")
-    )

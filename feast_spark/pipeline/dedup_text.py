@@ -17,13 +17,21 @@ Four families, all DataFrame-native (no per-row Python):
 * **SimHash** — 32-bit sign-random-projection over word hashes; near
   duplicates have small Hamming distance.
 
+Plus span scrubbing — ExactSubstr dedup and benchmark decontamination
+over words or token ids — as five front ends on one n-gram span core
+(section at the end of this module).
+
 The portable hash (text.portable_hash64) keeps signatures identical
 across engines, so DuckDB can serve as an independent oracle for the
 signature computation itself.
 
 Caching note: the pair-finding functions persist intermediate frames
 (postings, banded signatures, candidates) that the RETURNED lazy plan
-still references — they cannot be unpersisted inside the function.
+still references — they cannot be unpersisted inside the function. Of
+the span operators, the two text-space dedup passes
+(``remove_duplicate_spans``, ``remove_duplicate_runs``) persist their
+gram stream the same way; the id-space passes and both decontamination
+scrubs persist nothing.
 Blocks are MEMORY_AND_DISK and LRU-evictable; batch drivers running
 many corpora per session should `spark.catalog.clearCache()` between
 jobs (bench.py does).
@@ -34,7 +42,12 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from feast_spark.pipeline.text import doc_fingerprint, normalize_text, portable_hash64
+from feast_spark.pipeline.text import (
+    doc_fingerprint,
+    normalize_text,
+    portable_hash64,
+    word_tokens,
+)
 
 MERSENNE31 = (1 << 31) - 1  # 2147483647, prime
 
@@ -510,6 +523,150 @@ def simhash_pairs(
     )
 
 
+# ---------------------------------------------------------------------------
+# Span scrubbing: ExactSubstr dedup and span decontamination
+# ---------------------------------------------------------------------------
+# One core under five front ends. A front end builds the element array
+# (whitespace words of the text, or the token-id array); the core makes
+# every ``ngram``-element gram, marks grams (repeated in the corpus, or
+# present in a benchmark) and scrubs the elements the marked grams cover.
+
+_ELEMS = "__words"  # the one internal element column: words or ids
+_WORD_SIZES = ("n_words", "n_removed_words")
+_TOKEN_SIZES = ("n_tok_in", "n_removed_tokens")
+
+
+def _check_span_args(ngram_name: str, ngram: int, min_count: int = 2) -> None:
+    if ngram < 2:
+        raise ValueError(f"{ngram_name} must be >= 2")
+    if min_count < 2:
+        raise ValueError("min_count must be >= 2 (1 would mark every span)")
+
+
+def _span_base(df: DataFrame, elems: Column) -> DataFrame:
+    """``df`` with the element array appended as ``__words``; an input
+    already carrying an internal column is refused."""
+    for c in (_ELEMS, "__starts", "__covered"):
+        if c in df.columns:
+            raise ValueError(f"input already has internal column {c!r}")
+    return df.withColumn(_ELEMS, elems)
+
+
+def _span_grams(base: DataFrame, id_col: str, ngram: int, sep: str) -> DataFrame:
+    """(__id, pos, gh) for every ``ngram``-element window of ``__words``:
+    gh is the portable 60-bit hash of the window's elements joined by
+    ``sep`` (" " for words; "," for ids, so '1,23' ≠ '12,3'). Codegen
+    throughout: the cast to ``array<string>`` is removed by the optimizer
+    on words and is a codegen array cast on ids. Only the window slice is
+    cast — casting the whole array before the explode would carry a
+    string copy of it on every gram row. A 60-bit collision can mark an
+    innocent span; at 10^12 grams expect ~10^-6 false marks."""
+    n = F.size(_ELEMS)
+    starts = F.when(n >= ngram, F.sequence(F.lit(0), n - ngram)).otherwise(
+        F.array().cast("array<int>")
+    )
+    window = F.slice(_ELEMS, F.col("pos") + 1, ngram).cast("array<string>")
+    return base.select(
+        F.col(id_col).alias("__id"), F.explode(starts).alias("pos"), _ELEMS
+    ).select("__id", "pos", portable_hash64(F.array_join(window, sep)).alias("gh"))
+
+
+def _repeated_grams(grams: DataFrame, min_count: int, keep_first: bool) -> DataFrame:
+    """(__id, pos) of every gram occurring ``min_count``+ times; with
+    ``keep_first`` the smallest ``(__id, pos)`` occurrence of each is
+    spared.
+
+    Skew-proof: a map-side-combinable ``groupBy(gh)`` emits one partial
+    row per distinct gram per map task, so a boilerplate gram occurring
+    10^8 times costs its reduce task #map-tasks rows, never 10^8 (a
+    window over ``gh`` serialized every occurrence onto one task). The
+    repeated-gram dictionary then rejoins the gram stream: AQE makes that
+    a broadcast-hash join when the dictionary is small and skew-splits
+    the probe side otherwise (``spark.sql.adaptive.skewJoin``, on in
+    ``session.get_spark``)."""
+    aggs = [F.count(F.lit(1)).alias("c")]
+    if keep_first:
+        aggs.append(F.min(F.struct("__id", "pos")).alias("first"))
+    stats = grams.groupBy("gh").agg(*aggs).filter(F.col("c") >= min_count)
+    marked = grams.join(stats, "gh")
+    if keep_first:
+        marked = marked.filter(
+            ~(
+                (F.col("__id") == F.col("first.__id"))
+                & (F.col("pos") == F.col("first.pos"))
+            )
+        )
+    return marked.select("__id", "pos")
+
+
+def _benchmark_grams(
+    grams: DataFrame, benchmark: DataFrame, elems: Column, ngram: int, sep: str
+) -> DataFrame:
+    """(__id, pos) of every gram that also occurs in ``benchmark``
+    (elements ``elems``). The benchmark's distinct gram hashes are
+    broadcast, so the corpus is matched map-side and never shuffles on
+    gram."""
+    bench = benchmark.select(F.lit(0).alias("__id"), elems.alias(_ELEMS))
+    hashes = _span_grams(bench, "__id", ngram, sep).select("gh").distinct()
+    return grams.join(F.broadcast(hashes), "gh").select("__id", "pos")
+
+
+def _span_scrub(
+    base: DataFrame,
+    marked: DataFrame,
+    id_col: str,
+    ngram: int,
+    span_count_col: str,
+    out_col: str,
+    sizes: tuple[str, str],
+) -> DataFrame:
+    """Fold the marked gram starts per doc, expand them to covered
+    element positions and append ``sizes[0]`` (element count),
+    ``span_count_col`` (maximal merged removed intervals), ``sizes[1]``
+    (removed elements) and ``out_col`` (the surviving elements, in
+    order, as an array). The per-doc ``collect_list`` is bounded by the
+    elements per doc (chunk pathological documents first, as for
+    ``pack_sequences``) and is the epilogue's only shuffle; the rest is
+    array HOFs."""
+    count_col, removed_col = sizes
+    per_doc = marked.groupBy("__id").agg(F.collect_list("pos").alias("__starts"))
+    joined = base.join(per_doc, base[id_col] == per_doc["__id"], "left").drop("__id")
+    covered = F.array_sort(
+        F.array_distinct(
+            F.flatten(
+                F.transform(
+                    F.coalesce("__starts", F.array().cast("array<int>")),
+                    lambda s: F.sequence(s, s + ngram - 1),
+                )
+            )
+        )
+    )
+    out = joined.withColumn("__covered", covered)
+    cov = F.col("__covered")
+    survivors = F.filter(_ELEMS, lambda w, i: ~F.array_contains(cov, i))
+    return (
+        out.withColumn(count_col, F.size(_ELEMS))
+        .withColumn(
+            span_count_col,
+            F.size(
+                F.filter(
+                    cov,
+                    # greatest(i, 1): element_at's index must never be 0
+                    # even on the i == 0 branch — relying on Or short-
+                    # circuiting would break under an optimizer rewrite
+                    # (ADVICE r04). At i == 0 the left disjunct is true,
+                    # so the (valid) element_at(cov, 1) value is ignored.
+                    lambda p, i: (i == F.lit(0))
+                    | (F.element_at(cov, F.greatest(i, F.lit(1))) != p - 1),
+                )
+            ),
+        )
+        .withColumn(removed_col, F.size("__covered"))
+        .withColumn(out_col, survivors)
+        .drop(_ELEMS, "__starts", "__covered")
+    )
+
+
 def remove_duplicate_spans(
     df: DataFrame,
     text_col: str = "text",
@@ -518,7 +675,6 @@ def remove_duplicate_spans(
     min_count: int = 2,
     keep_first: bool = True,
     out_col: str = "text_deduped",
-    cache_grams: bool = True,
 ) -> DataFrame:
     """Span-level exact substring dedup (Lee et al. 2022, "Deduplicating
     Training Data Makes Language Models Better", ExactSubstr): remove
@@ -541,67 +697,19 @@ def remove_duplicate_spans(
     ``n_words``, ``n_dup_spans`` (maximal merged removed intervals),
     ``n_removed_words``, ``out_col``.
 
-    Plan shape for 100 TB (round-5 skew-proof rewrite — VERDICT r04
-    "What's wrong" #3): gram hashes are codegen (portable md5 → 60-bit
-    int of the joined word slice); duplicate detection is a map-side-
-    combinable ``groupBy(gh)`` carrying count + first-occurrence
-    min-struct — each map task emits ONE row per distinct gram, so a
-    boilerplate 8-gram occurring 10⁸ times costs the reduce task
-    #map-tasks partial rows, never 10⁸ (the r04 window form
-    serialized every occurrence of a hot gram onto one task). The
-    duplicated-gram dictionary (``c >= min_count`` only) then rejoins
-    the gram stream: AQE converts that join to broadcast-hash at
-    runtime when the dictionary is small (the common case — the gram
-    stream is then never shuffled at all) and skew-splits the probe
-    side otherwise (``spark.sql.adaptive.skewJoin``, on in
-    ``session.get_spark``). The gram stream is persisted
-    (``cache_grams``, default on) so gram hashes are computed once and
-    both the agg and the probe read the cache — replacing the window
-    form's skewed full shuffle with a skew-free materialization of the
-    same data (the shuffle wrote it to disk too). Interleaved 5-run
-    A/B at sf0.1 (NOTES_ROUND5.md): window 1.40 s, this
-    form 1.61 s (+15%), unpersisted recompute form 2.57 s; a synthetic
-    hot-gram stress (one gram on 25% of 200k docs' positions) shows
-    no single-task bind. ``cache_grams=False`` trades the
-    materialization for a second codegen scan of the corpus (pick at
-    extreme scale when cache spill dominates); the persisted gram
-    stream stays cached until ``spark.catalog.clearCache()`` or app
-    end — same lifetime contract as the other persisted intermediates
-    (``lsh_candidate_pairs``' banded frame). Then one per-doc
-    ``collect_list`` of marked starts (bounded by words-per-doc —
-    chunk pathological documents first, same guidance as
-    ``pack_sequences``); interval merge and text reconstruction are
-    array HOFs, no further shuffle. Hash note: a 60-bit collision can
-    mark an innocent span; at 10^12 grams expect ~10^-6 false-mark
-    rate (same portable-hash tradeoff as the other dedup families).
-    """
-    if ngram < 2:
-        raise ValueError("ngram must be >= 2")
-    if min_count < 2:
-        raise ValueError("min_count must be >= 2 (1 would mark every span)")
-    base = _span_words_base(df, text_col)
-    grams = _span_grams(base, id_col, ngram)
-    if cache_grams:
-        grams = grams.persist()
-    stats = (
-        grams.groupBy("gh")
-        .agg(
-            F.count(F.lit(1)).alias("c"),
-            F.min(F.struct(F.col("__id"), F.col("pos"))).alias("first"),
-        )
-        .filter(F.col("c") >= min_count)
-    )
-    marked = grams.join(stats, "gh", "inner")
-    if keep_first:
-        marked = marked.filter(
-            ~(
-                (F.col("__id") == F.col("first.__id"))
-                & (F.col("pos") == F.col("first.pos"))
-            )
-        )
-    return _span_scrub_output(
-        base, marked, id_col, ngram, span_count_col="n_dup_spans", out_col=out_col
-    )
+    Plan: the span core above (``_span_grams`` → ``_repeated_grams`` →
+    ``_span_scrub``). The gram stream is persisted, so gram hashes are
+    computed once and both the count aggregate and the rejoin read the
+    cache (interleaved 5-run A/B at sf0.1, NOTES_ROUND5.md: persisted
+    1.61 s, recomputed 2.57 s). It stays cached until
+    ``spark.catalog.clearCache()`` or app end, like the other persisted
+    intermediates of this module."""
+    _check_span_args("ngram", ngram, min_count)
+    base = _span_base(df, word_tokens(F.col(text_col)))
+    grams = _span_grams(base, id_col, ngram, " ").persist()
+    marked = _repeated_grams(grams, min_count, keep_first)
+    out = _span_scrub(base, marked, id_col, ngram, "n_dup_spans", out_col, _WORD_SIZES)
+    return out.withColumn(out_col, F.array_join(out_col, " "))
 
 
 def remove_duplicate_runs(
@@ -611,7 +719,6 @@ def remove_duplicate_runs(
     id_col: str = "doc_id",
     min_count: int = 2,
     out_col: str = "text_deduped",
-    cache_grams: bool = True,
 ) -> DataFrame:
     """Minimum-length ExactSubstr (VERDICT r04 "What's missing" #3):
     remove every word that lies inside a MAXIMAL duplicated word run of
@@ -637,11 +744,10 @@ def remove_duplicate_runs(
     Gram-hash cost grows linearly with ``min_len`` (each position
     hashes a ``min_len``-word slice — O(n·L) codegen work vs the
     suffix array's O(n log n), the trade for a 3-shuffle fully
-    distributed plan); the plan shape is ``remove_duplicate_spans``'s
-    skew-proof agg + AQE join. Output columns: ``n_words``,
-    ``n_dup_spans``, ``n_removed_words``, ``out_col``."""
-    if min_len < 2:
-        raise ValueError("min_len must be >= 2")
+    distributed plan); the plan is ``remove_duplicate_spans``'.
+    Output columns: ``n_words``, ``n_dup_spans``, ``n_removed_words``,
+    ``out_col``."""
+    _check_span_args("min_len", min_len)
     return remove_duplicate_spans(
         df,
         text_col=text_col,
@@ -650,7 +756,6 @@ def remove_duplicate_runs(
         min_count=min_count,
         keep_first=False,
         out_col=out_col,
-        cache_grams=cache_grams,
     )
 
 
@@ -661,7 +766,6 @@ def remove_duplicate_token_runs(
     id_col: str = "doc_id",
     min_count: int = 2,
     out_col: str = "tokens_deduped",
-    cache_grams: bool = False,
 ) -> DataFrame:
     """Ids-space min-length ExactSubstr: remove every token inside a
     duplicated id run of length ≥ ``min_len`` (≥ ``min_count``
@@ -678,40 +782,13 @@ def remove_duplicate_token_runs(
     removed intervals), ``n_removed_tokens``, ``out_col`` (the
     scrubbed array — ids stay ids).
 
-    Plan for 100 TB: identical to ``remove_duplicate_spans``' round-5
-    skew-proof shape — codegen id-gram hashes, duplicate stats via a
-    map-side-combinable ``groupBy(gh)``, AQE broadcast/skew-split
-    rejoin, one per-doc hit fold. ``cache_grams`` is off by default:
-    the gram stream is ``min_len``× the tokens and would stay cached."""
-    if min_len < 2:
-        raise ValueError("min_len must be >= 2")
-    if min_count < 2:
-        raise ValueError("min_count must be >= 2 (1 would mark every span)")
-    for c in ("__elems", "__starts", "__covered"):
-        if c in df.columns:
-            raise ValueError(f"input already has internal column {c!r}")
-    base = df.withColumn("__elems", F.col(tokens_col))
-    grams = _id_span_grams(base, id_col, min_len)
-    if cache_grams:
-        grams = grams.persist()
-    stats = (
-        grams.groupBy("gh")
-        .agg(F.count(F.lit(1)).alias("c"))
-        .filter(F.col("c") >= min_count)
-    )
-    marked = grams.join(stats, "gh", "inner").select("__id", "pos")
-    return _span_scrub_output(
-        base,
-        marked,
-        id_col,
-        min_len,
-        span_count_col="n_dup_spans",
-        out_col=out_col,
-        arr_col="__elems",
-        count_col="n_tok_in",
-        removed_col="n_removed_tokens",
-        join_out=False,
-    )
+    Plan: the span core above, as ``remove_duplicate_runs``, except
+    that the gram stream is not persisted: it is ``min_len``× the
+    tokens and would stay cached."""
+    _check_span_args("min_len", min_len, min_count)
+    base = _span_base(df, F.col(tokens_col))
+    marked = _repeated_grams(_span_grams(base, id_col, min_len, ","), min_count, False)
+    return _span_scrub(base, marked, id_col, min_len, "n_dup_spans", out_col, _TOKEN_SIZES)
 
 
 def scrub_contaminated_token_spans(
@@ -737,156 +814,19 @@ def scrub_contaminated_token_spans(
     ``out_col`` (the scrubbed ``array`` itself — no re-join, ids stay
     ids).
 
-    Plan for 100 TB: identical to the text-space pass — the benchmark
-    gram-hash set (portable 60-bit hash of the comma-joined id slice,
-    codegen) is BROADCAST, the corpus is scanned once and matched
-    map-side, and the per-doc ``collect_list`` of hits is the only
-    shuffle; the corpus never shuffles on gram. Tokenizer caveat: both
-    sides must be tokenized with the SAME vocab/merges — a benchmark
-    tokenized under a different vocab produces disjoint id n-grams and
-    scrubs nothing (that property is inherent to ids-space matching,
-    not a bug; decontaminate in text space when tokenizers differ).
+    Plan: the span core above (``_span_grams`` → ``_benchmark_grams``
+    → ``_span_scrub``). Tokenizer caveat: both sides must be tokenized
+    with the SAME vocab/merges — a benchmark tokenized under a
+    different vocab produces disjoint id n-grams and scrubs nothing
+    (that property is inherent to ids-space matching, not a bug;
+    decontaminate in text space when tokenizers differ).
     """
-    if ngram < 2:
-        raise ValueError("ngram must be >= 2")
-    for c in ("__elems", "__starts", "__covered"):
-        if c in df.columns:
-            raise ValueError(f"input already has internal column {c!r}")
-    base = df.withColumn("__elems", F.col(tokens_col))
-    grams = _id_span_grams(base, id_col, ngram)
-    bcol = bench_tokens_col or tokens_col
-    bench_base = benchmark.select(F.col(bcol).alias("__elems")).withColumn(
-        "__bid", F.lit(0)
-    )
-    bench_grams = _id_span_grams(bench_base, "__bid", ngram).select("gh").distinct()
-    marked = grams.join(F.broadcast(bench_grams), on="gh").select("__id", "pos")
-    return _span_scrub_output(
-        base,
-        marked,
-        id_col,
-        ngram,
-        span_count_col="n_hit_spans",
-        out_col=out_col,
-        arr_col="__elems",
-        count_col="n_tok_in",
-        removed_col="n_removed_tokens",
-        join_out=False,
-    )
-
-
-def _id_span_grams(base: DataFrame, id_col: str, ngram: int) -> DataFrame:
-    """(__id, pos, gh) for every ``ngram``-token window of the
-    ``__elems`` array: gh is the portable 60-bit hash of the
-    comma-joined id slice (codegen; comma keeps id boundaries
-    unambiguous — '1,23' ≠ '12,3')."""
-    starts = F.when(
-        F.size("__elems") >= ngram,
-        F.sequence(F.lit(0), F.size("__elems") - ngram),
-    ).otherwise(F.array().cast("array<int>"))
-    return base.select(
-        F.col(id_col).alias("__id"), F.explode(starts).alias("pos"), "__elems"
-    ).select(
-        "__id",
-        "pos",
-        portable_hash64(
-            F.array_join(
-                F.transform(
-                    F.slice("__elems", F.col("pos") + 1, ngram),
-                    lambda x: x.cast("string"),
-                ),
-                ",",
-            )
-        ).alias("gh"),
-    )
-
-
-def _span_words_base(df: DataFrame, text_col: str) -> DataFrame:
-    """Shared word-splitting prologue for the span ops: non-empty
-    whitespace-split words appended as ``__words`` — ``word_tokens``'s
-    ONE definition of "word" (explicit oracle-portable whitespace
-    class, not ``\\s``; see ``text.WORD_SPLIT``)."""
-    from feast_spark.pipeline.text import word_tokens
-
-    for c in ("__words", "__starts", "__covered"):
-        if c in df.columns:
-            raise ValueError(f"input already has internal column {c!r}")
-    return df.withColumn("__words", word_tokens(F.col(text_col)))
-
-
-def _span_grams(base: DataFrame, id_col: str, ngram: int) -> DataFrame:
-    """(__id, pos, gh) for every ``ngram``-word window: gh is the
-    portable 60-bit hash of the space-joined word slice (codegen)."""
-    starts = F.when(
-        F.size("__words") >= ngram,
-        F.sequence(F.lit(0), F.size("__words") - ngram),
-    ).otherwise(F.array().cast("array<int>"))
-    return base.select(
-        F.col(id_col).alias("__id"), F.explode(starts).alias("pos"), "__words"
-    ).select(
-        "__id",
-        "pos",
-        portable_hash64(
-            F.array_join(F.slice("__words", F.col("pos") + 1, ngram), " ")
-        ).alias("gh"),
-    )
-
-
-def _span_scrub_output(
-    base: DataFrame,
-    marked: DataFrame,
-    id_col: str,
-    ngram: int,
-    span_count_col: str,
-    out_col: str,
-    arr_col: str = "__words",
-    count_col: str = "n_words",
-    removed_col: str = "n_removed_words",
-    join_out: bool = True,
-) -> DataFrame:
-    """Shared epilogue: fold marked gram starts per doc, expand to
-    covered element positions, emit ``count_col`` / ``span_count_col``
-    (maximal merged removed intervals) / ``removed_col`` / ``out_col``
-    (survivors — re-joined with spaces when ``join_out``, else the
-    filtered array itself, for ids-space callers). Array HOFs only —
-    the per-doc ``collect_list`` is the single shuffle."""
-    per_doc = marked.groupBy("__id").agg(F.collect_list("pos").alias("__starts"))
-    joined = base.join(per_doc, base[id_col] == per_doc["__id"], "left").drop("__id")
-    covered = F.array_sort(
-        F.array_distinct(
-            F.flatten(
-                F.transform(
-                    F.coalesce("__starts", F.array().cast("array<int>")),
-                    lambda s: F.sequence(s, s + ngram - 1),
-                )
-            )
-        )
-    )
-    out = joined.withColumn("__covered", covered)
-    cov = F.col("__covered")
-    survivors = F.filter(arr_col, lambda w, i: ~F.array_contains(cov, i))
-    return (
-        out.withColumn(count_col, F.size(arr_col))
-        .withColumn(
-            span_count_col,
-            F.size(
-                F.filter(
-                    cov,
-                    # greatest(i, 1): element_at's index must never be 0
-                    # even on the i == 0 branch — relying on Or short-
-                    # circuiting would break under an optimizer rewrite
-                    # (ADVICE r04). At i == 0 the left disjunct is true,
-                    # so the (valid) element_at(cov, 1) value is ignored.
-                    lambda p, i: (i == F.lit(0))
-                    | (F.element_at(cov, F.greatest(i, F.lit(1))) != p - 1),
-                )
-            ),
-        )
-        .withColumn(removed_col, F.size("__covered"))
-        .withColumn(
-            out_col, F.array_join(survivors, " ") if join_out else survivors
-        )
-        .drop(arr_col, "__starts", "__covered")
-    )
+    _check_span_args("ngram", ngram)
+    base = _span_base(df, F.col(tokens_col))
+    bench_elems = F.col(bench_tokens_col or tokens_col)
+    grams = _span_grams(base, id_col, ngram, ",")
+    marked = _benchmark_grams(grams, benchmark, bench_elems, ngram, ",")
+    return _span_scrub(base, marked, id_col, ngram, "n_hit_spans", out_col, _TOKEN_SIZES)
 
 
 def scrub_contaminated_spans(
@@ -913,25 +853,13 @@ def scrub_contaminated_spans(
     ``n_hit_spans`` (maximal merged removed intervals),
     ``n_removed_words``, ``out_col``.
 
-    Plan for 100 TB: the benchmark side is small (eval sets) — its
-    distinct gram-hash set is BROADCAST; the corpus is scanned once
-    (codegen gram hashes), matched map-side, and the per-doc
-    ``collect_list`` of hits is the only shuffle. The corpus never
-    shuffles on gram. Same 60-bit-collision caveat as the other
-    portable-hash families.
+    Plan: the span core above (``_span_grams`` → ``_benchmark_grams``
+    → ``_span_scrub``); the gram stream is not persisted.
     """
-    if ngram < 2:
-        raise ValueError("ngram must be >= 2")
-    base = _span_words_base(df, text_col)
-    grams = _span_grams(base, id_col, ngram)
-    bcol = bench_text_col or text_col
-    bench_base = _span_words_base(benchmark.select(F.col(bcol)), bcol)
-    bench_grams = (
-        _span_grams(bench_base.withColumn("__bid", F.lit(0)), "__bid", ngram)
-        .select("gh")
-        .distinct()
-    )
-    marked = grams.join(F.broadcast(bench_grams), on="gh").select("__id", "pos")
-    return _span_scrub_output(
-        base, marked, id_col, ngram, span_count_col="n_hit_spans", out_col=out_col
-    )
+    _check_span_args("ngram", ngram)
+    base = _span_base(df, word_tokens(F.col(text_col)))
+    bench_elems = word_tokens(F.col(bench_text_col or text_col))
+    grams = _span_grams(base, id_col, ngram, " ")
+    marked = _benchmark_grams(grams, benchmark, bench_elems, ngram, " ")
+    out = _span_scrub(base, marked, id_col, ngram, "n_hit_spans", out_col, _WORD_SIZES)
+    return out.withColumn(out_col, F.array_join(out_col, " "))

@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from feast_spark.operators.dedup import latest_row_dedup
-from feast_spark.operators.windows import agg_fn
+from feast_spark.operators.windows import agg_fn, tumbling_agg
 
 
 def decode_json_payload(raw: DataFrame, schema_ddl: str, value_col: str = "value") -> DataFrame:
@@ -174,21 +174,14 @@ def stream_tumbling_agg(
 ) -> DataFrame:
     """Streaming windowed aggregation with watermark-driven late-data
     handling and state eviction."""
-    wm = df.withWatermark(ts_col, watermark_delay)
-    wspec = (
-        F.window(F.col(ts_col), f"{window_seconds} seconds", f"{slide_seconds} seconds")
-        if slide_seconds
-        else F.window(F.col(ts_col), f"{window_seconds} seconds")
+    return tumbling_agg(
+        df.withWatermark(ts_col, watermark_delay),
+        keys,
+        ts_col,
+        aggs,
+        window_seconds,
+        slide_seconds,
     )
-    exprs = [agg_fn(fn)(col).alias(f"{fn}_{col}_{window_seconds}s") for fn, col in aggs]
-    out = wm.groupBy(*keys, wspec.alias("__w")).agg(*exprs)
-    return out.select(
-        *keys,
-        F.col("__w.start").alias("window_start"),
-        F.col("__w.end").alias("window_end"),
-        *[f"{fn}_{col}_{window_seconds}s" for fn, col in aggs],
-    )
-
 
 def stream_session_agg(
     df: DataFrame,

@@ -187,3 +187,87 @@ def test_scrub_contaminated_guards(spark):
     docs = spark.createDataFrame([(1, "a b")], "doc_id long, text string")
     with _pytest.raises(ValueError, match="ngram"):
         scrub_contaminated_spans(docs, docs, ngram=1)
+
+
+# ---------------------------------------------------------------------------
+# One span core: words and token ids, physical choices
+# ---------------------------------------------------------------------------
+
+def _corpus(n_docs, vocab, seed, max_len=14):
+    import random
+
+    rnd = random.Random(seed)
+    return [
+        (d, " ".join(rnd.choice(vocab) for _ in range(rnd.randint(0, max_len))))
+        for d in range(n_docs)
+    ]
+
+
+def test_word_and_id_spaces_agree(spark):
+    """Mapping each distinct word to one id, the text and id operators mark
+    and scrub the same positions. The ids are chosen so that they collide
+    when joined without a separator ('1,12' vs '11,2')."""
+    from feast_spark.pipeline.dedup_text import (
+        remove_duplicate_runs,
+        remove_duplicate_token_runs,
+        scrub_contaminated_spans,
+        scrub_contaminated_token_spans,
+    )
+
+    ids = {"aa": 1, "bb": 11, "cc": 12, "dd": 2, "ee": 112}
+    word = {i: w for w, i in ids.items()}
+    rows = _corpus(12, list(ids), seed=3) + [(12, ""), (13, "  aa\tbb  ")]
+    bench_rows = _corpus(3, list(ids), seed=4)
+    text = spark.createDataFrame(rows, "doc_id long, text string")
+    bench_text = spark.createDataFrame(bench_rows, "doc_id long, text string")
+
+    def as_ids(rs):
+        return spark.createDataFrame(
+            [(d, [ids[w] for w in t.split()]) for d, t in rs],
+            "doc_id long, tokens array<int>",
+        )
+
+    cases = [
+        (
+            remove_duplicate_runs(text, min_len=3),
+            remove_duplicate_token_runs(as_ids(rows), min_len=3),
+            "n_dup_spans", "text_deduped", "tokens_deduped",
+        ),
+        (
+            scrub_contaminated_spans(text, bench_text, ngram=3),
+            scrub_contaminated_token_spans(as_ids(rows), as_ids(bench_rows), ngram=3),
+            "n_hit_spans", "text_clean", "tokens_clean",
+        ),
+    ]
+    for by_text, by_ids, spans, text_out, ids_out in cases:
+        t = {r["doc_id"]: r for r in by_text.collect()}
+        i = {r["doc_id"]: r for r in by_ids.collect()}
+        assert t.keys() == i.keys() == {d for d, _ in rows}
+        assert sum(r["n_removed_words"] for r in t.values()) > 0
+        for d in t:
+            assert t[d]["n_words"] == i[d]["n_tok_in"]
+            assert t[d][spans] == i[d][spans]
+            assert t[d]["n_removed_words"] == i[d]["n_removed_tokens"]
+            assert t[d][text_out] == " ".join(word[x] for x in i[d][ids_out])
+
+
+def test_keep_first_independent_of_input_order(spark):
+    """The keeper of each repeated gram is the smallest (doc_id, position)
+    occurrence, whatever order and partitioning the input arrives in."""
+    df = spark.createDataFrame(
+        _corpus(300, ["aa", "bb", "cc", "dd", "ee"], seed=5, max_len=20),
+        "doc_id long, text string",
+    )
+    conf = {"spark.sql.adaptive.enabled": "false", "spark.sql.shuffle.partitions": "7"}
+    old = {k: spark.conf.get(k) for k in conf}
+    for k, v in conf.items():
+        spark.conf.set(k, v)
+    try:
+        shuffled = df.orderBy(F.rand(11)).repartition(7)
+        one = remove_duplicate_spans(df.coalesce(1), ngram=3).collect()
+        many = remove_duplicate_spans(shuffled, ngram=3).collect()
+    finally:
+        for k, v in old.items():
+            spark.conf.set(k, v)
+    assert sorted(one) == sorted(many)
+    assert 0 < sum(r["n_removed_words"] for r in one) < sum(r["n_words"] for r in one)

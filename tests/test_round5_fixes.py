@@ -324,6 +324,9 @@ def test_entityless_union_scan_bulk_matches_oracle(spark):
 
 
 def test_dedup_spans_cache_grams_off_matches(spark):
+    """The persisted gram stream only saves work: a result whose cached
+    grams were dropped before the action recomputes the same rows as one
+    that reads them from the cache."""
     df = spark.createDataFrame(
         [
             ("a", "alpha beta gamma delta unique one two three"),
@@ -332,8 +335,11 @@ def test_dedup_spans_cache_grams_off_matches(spark):
         ],
         "doc_id string, text string",
     )
-    on = remove_duplicate_spans(df, ngram=4).orderBy("doc_id").collect()
-    off = remove_duplicate_spans(df, ngram=4, cache_grams=False).orderBy(
-        "doc_id"
-    ).collect()
-    assert on == off
+    kept = remove_duplicate_spans(df, ngram=4).orderBy("doc_id")
+    assert "InMemoryRelation" in kept._jdf.queryExecution().withCachedData().toString()
+    on = kept.collect()
+    dropped = remove_duplicate_spans(df, ngram=4).orderBy("doc_id")
+    spark.catalog.clearCache()
+    plan = dropped._jdf.queryExecution().withCachedData().toString()
+    assert "InMemoryRelation" not in plan
+    assert dropped.collect() == on
