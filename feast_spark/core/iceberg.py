@@ -72,12 +72,3 @@ TBLPROPERTIES (
   'write.target-file-size-bytes' = '134217728'
 )
 """.strip()
-
-
-def read_snapshot(spark, table: str, snapshot_id: int | None = None):
-    """Snapshot-pinned read for reproducible retrieval during concurrent
-    backfills."""
-    reader = spark.read.format("iceberg")
-    if snapshot_id is not None:
-        reader = reader.option("snapshot-id", str(snapshot_id))
-    return reader.load(table)

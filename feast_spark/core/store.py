@@ -3,15 +3,24 @@
 Re-implements the reference's two retrieval paths
 (FeatureStore.get_historical_features feature_store.py:1216-1345 and the
 SparkComputeEngine DAG compute.py:218-254 / feature_builder.py:85-146)
-as one Spark-first plan builder:
+as one Spark-first plan builder. Every read of a view goes one way:
 
-    per view:  load → [transform udf] → [filter] → [aggregate] → PIT join
-               onto the spine grown by the views before it
-    finally:   [ODFV mapInPandas]
+    one builder (``_view_frame``): load or derived-view DAG → [transform]
+        → [filter] → [prune to the spine window, retrieval only]
+        → [aggregate]; aggregate rows carry the view's own timestamp
+    retrieval: one chain, ``multi_view_pit_join`` over every view's
+        frame, then [ODFV transforms]
+    materialize / materialize_online: the builder's frame, cut to
+        ``[start, end]``; a SortedFeatureView skips aggregation
+
+View, SQL-mode ODFV and stream transformations share one dispatcher,
+``core.transformation.apply_transformation``.
 
 Differences from the reference, deliberate:
-* no SQL templating / temp-view staging — one lazy DataFrame plan end to
-  end, so Catalyst sees everything (pushdown, join reorder, AQE);
+* no SQL templating — one lazy DataFrame plan end to end, so Catalyst
+  sees everything (pushdown, join reorder, AQE); a SQL-string
+  transformation stages its inputs as temp views only while
+  ``spark.sql`` analyses it;
 * ODFV transforms run distributed via ``mapInPandas`` instead of
   driver-side pandas (offline_store.py:155-167);
 * no synthetic row id (spark.py:683-688) and no fan-in join: each
@@ -29,12 +38,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from feast_spark.core.feature_view import (
-    Aggregation,
     FeatureService,
     FeatureView,
     OnDemandFeatureView,
+    SortedFeatureView,
 )
-from feast_spark.operators.asof_join import point_in_time_join
+from feast_spark.core.transformation import apply_transformation
+from feast_spark.materialize.jobs import MaterializationResult, filter_interval, materialize_view
+from feast_spark.operators.asof_join import multi_view_pit_join
 from feast_spark.operators.windows import agg_fn, tumbling_agg
 
 TIMESTAMP_TYPES = ("timestamp", "timestamp_ntz")
@@ -177,31 +188,15 @@ class FeatureStore:
     # ------------------------------------------------------- view resolution
     def _build_view_df(self, view: FeatureView) -> DataFrame:
         """Resolve a view to a DataFrame: derived-view DAG (reference
-        feature_resolver.py:28-95) then udf → filter → (aggregation spec
-        is applied later, against the spine window)."""
-        def _transform(udf, *frames: DataFrame) -> DataFrame:
-            """Dispatch the view transformation: callable (Spark-DataFrame
-            mode, spark_transformation.py:95-122) or SQL string with
-            ``{input}`` / ``{input0}``, ``{input1}``… placeholders
-            (SQL-string mode, spark_transformation.py:104-119)."""
-            if isinstance(udf, str):
-                sql = udf
-                for i, fr in enumerate(frames):
-                    name = f"__view_input_{view.name}_{i}"
-                    fr.createOrReplaceTempView(name)
-                    sql = sql.replace(f"{{input{i}}}", name)
-                    if i == 0:
-                        sql = sql.replace("{input}", name)
-                return self.spark.sql(sql)
-            return udf(*frames)
-
+        feature_resolver.py:28-95) or source, then udf → filter; the
+        aggregation spec is applied by ``_view_frame``."""
         if view.source_views:
             parents = [
                 self._build_view_df(self.get_feature_view(p) if isinstance(p, str) else p)
                 for p in view.source_views
             ]
             if view.udf is not None:
-                df = _transform(view.udf, *parents)
+                df = apply_transformation(view.udf, *parents)
             else:
                 # default: sequential equi-join of parents on shared keys
                 df = parents[0]
@@ -211,10 +206,52 @@ class FeatureStore:
         else:
             df = view.source.load(self.spark)
             if view.udf is not None:
-                df = _transform(view.udf, df)
+                df = apply_transformation(view.udf, df)
         if view.filter_expr:
             df = df.filter(view.filter_expr)
         return df
+
+    def _view_frame(
+        self, view: FeatureView, bounds=None
+    ) -> tuple[DataFrame, str, str | None]:
+        """The view's frame with its event-timestamp and created columns:
+        the resolved view, pruned to the spine window ``bounds = (lo,
+        hi)`` when given, then aggregated when the view has an
+        Aggregation spec (reference feature_builder.py:69-72 — the
+        aggregate node sits in both the retrieval and the
+        materialization DAG). Aggregate rows carry the view's own
+        timestamp field (the window end, or the entity's max ts) and
+        no created column."""
+        fdf = self._build_view_df(view)
+        ts_col = view.timestamp_field
+        plain_aggs = any(a.time_window is None for a in view.aggregations)
+        if bounds is not None and bounds[0] is not None and not plain_aggs:
+            # Pruning correctness: non-windowed (whole-history)
+            # aggregates would change value under ANY input prune —
+            # those views skip pruning entirely (the guard above).
+            # Windowed aggregates widen the lower bound by the window
+            # length (a window joinable at [lo - ttl] starts
+            # window_seconds earlier). The lower bound — row-level
+            # AND date-partition — applies only when ttl > 0; with an
+            # infinite TTL the latest valid row may be arbitrarily
+            # old.
+            lo, hi = bounds
+            lower = lo_date = None
+            if view.ttl_seconds > 0:
+                reach = view.ttl_seconds + max(
+                    (int(a.time_window.total_seconds()) for a in view.aggregations), default=0
+                )
+                lower = F.lit(lo) - F.expr(f"INTERVAL {reach} SECONDS")
+                lo_date = F.date_sub(F.lit(lo).cast("date"), reach // 86400 + 1)
+            fdf = filter_interval(fdf, ts_col, lower, hi)
+            # explicit partition-pruning predicate on the date partition
+            # column (reference spark.py:123-136, offline_utils.py:350-355)
+            pcol = getattr(view.source, "date_partition_column", None)
+            if pcol:
+                fdf = filter_interval(fdf, pcol, lo_date, F.lit(hi).cast("date"))
+        if view.aggregations:
+            return _apply_aggregations(fdf, view), ts_col, None
+        return fdf, ts_col, view.created_timestamp_column
 
     # --------------------------------------------------- historical retrieval
     def get_historical_features(
@@ -274,82 +311,24 @@ class FeatureStore:
             ).first()
             bounds = (row["lo"], row["hi"])
 
-        # each view's as-of join runs on the spine as grown by the views
-        # before it: the union-scan carries whole spine rows through, so
-        # there is no row id to stamp and nothing to join back
-        out = entity_df
+        # one chain: each view's as-of join runs on the spine as grown
+        # by the views before it, so a feature name that an earlier view
+        # already put on the spine raises in point_in_time_join
+        views = []
         for view_name, wanted in refs.items():
             if view_name in self._odfvs:
                 continue  # applied post-join below
             view = self.get_feature_view(view_name)
-            fdf = self._build_view_df(view)
-            ts_col = view.timestamp_field
-            created = view.created_timestamp_column
-            has_plain_aggs = bool(view.aggregations) and any(
-                a.time_window is None for a in view.aggregations
-            )
-            if bounds is not None and bounds[0] is not None and not has_plain_aggs:
-                # Pruning correctness: non-windowed (whole-history)
-                # aggregates would change value under ANY input prune —
-                # those views skip pruning entirely (the guard above).
-                # Windowed aggregates widen the lower bound by the window
-                # length (a window joinable at [lo - ttl] starts
-                # window_seconds earlier). The lower bound — row-level
-                # AND date-partition — applies only when ttl > 0; with an
-                # infinite TTL the latest valid row may be arbitrarily
-                # old.
-                lo, hi = bounds
-                widen = 0
-                if view.aggregations:
-                    widen = max(
-                        int(a.time_window.total_seconds()) for a in view.aggregations
-                    )
-                upper = F.col(ts_col) <= F.lit(hi)
-                if view.ttl_seconds > 0:
-                    lower = F.col(ts_col) >= (
-                        F.lit(lo)
-                        - F.expr(f"INTERVAL {view.ttl_seconds + widen} SECONDS")
-                    )
-                    fdf = fdf.filter(upper & lower)
-                else:
-                    fdf = fdf.filter(upper)
-                # explicit partition-pruning predicate on the date partition
-                # column (reference spark.py:123-136, offline_utils.py:350-355)
-                pcol = getattr(view.source, "date_partition_column", None)
-                if pcol:
-                    fdf = fdf.filter(F.col(pcol) <= F.lit(hi).cast("date"))
-                    if view.ttl_seconds > 0:
-                        lo_date = F.date_sub(
-                            F.lit(lo).cast("date"),
-                            (view.ttl_seconds + widen) // 86400 + 1,
-                        )
-                        fdf = fdf.filter(F.col(pcol) >= lo_date)
-
-            if view.aggregations:
-                fdf, ts_col, created = _apply_aggregations(
-                    fdf, view, ts_col
-                )
-
-            cols = wanted or view.feature_cols
-            prefix = f"{view_name}__" if full_feature_names else ""
-            dup = {prefix + c for c in cols or ()} & (set(out.columns) - set(entity_df.columns))
-            if dup:
-                raise ValueError(
-                    f"feature columns {sorted(dup)} from view {view_name!r} collide "
-                    "with columns already retrieved — pass full_feature_names=True"
-                )
-            out = point_in_time_join(
-                out,
-                fdf,
-                view.join_keys,
-                cols,
-                spine_ts_col=spine_ts,
-                feature_ts_col=ts_col,
-                created_col=created,
-                ttl_seconds=view.ttl_seconds,
-                strategy=strategy,
-                feature_prefix=prefix,
-            )
+            fdf, ts_col, created = self._view_frame(view, bounds)
+            opts = {
+                "feature_cols": wanted or view.feature_cols,
+                "feature_ts_col": ts_col,
+                "created_col": created,
+                "ttl_seconds": view.ttl_seconds,
+                "prefix": view_name if full_feature_names else None,
+            }
+            views.append((fdf, view.join_keys, opts))
+        out = multi_view_pit_join(entity_df, views, spine_ts_col=spine_ts, strategy=strategy)
 
         # ODFV transforms, distributed (mapInPandas) not driver-side
         for name, wanted in refs.items():
@@ -406,19 +385,6 @@ class FeatureStore:
         )
 
     # --------------------------------------------------------- materialization
-    def _materialized_frame(self, view, fdf: DataFrame):
-        """The frame a view materializes: aggregated values for views
-        with an Aggregation spec (reference feature_builder.py:69-72 —
-        the aggregate node sits in the materialization DAG too), raw
-        rows otherwise. The aggregate row's event timestamp is the
-        window end, renamed to the view's timestamp field."""
-        ts_col = view.timestamp_field
-        created = view.created_timestamp_column
-        if view.aggregations:
-            fdf, agg_ts, created = _apply_aggregations(fdf, view, ts_col)
-            fdf = fdf.withColumnRenamed(agg_ts, ts_col)
-        return fdf, ts_col, created
-
     def materialize(
         self,
         view_name: str,
@@ -434,46 +400,35 @@ class FeatureStore:
         per-partition lineage manifest + idempotent resume (reference
         feature_store.py:1555-1781 → compute_engines/spark/compute.py:88-130,
         plus the resume capability the reference lacks)."""
-        from feast_spark.materialize.jobs import materialize_view
-
         view = self.get_feature_view(view_name)
-        fdf = self._build_view_df(view)
-        # SortedFeatureView: skip dedup/agg, write range-partitioned +
-        # sort-key-ordered files (reference sorted_feature_view.py:29-67,
-        # feature_builder.py:69-83)
-        from feast_spark.core.feature_view import SortedFeatureView
-
         if isinstance(view, SortedFeatureView):
-            from feast_spark.materialize.jobs import MaterializationResult
+            # skip dedup/agg, write range-partitioned + sort-key-ordered
+            # files (reference sorted_feature_view.py:29-67,
+            # feature_builder.py:69-83)
             from feast_spark.materialize.writers import materialize_sorted
 
-            if start is not None:
-                fdf = fdf.filter(F.col(view.timestamp_field) >= F.lit(start))
-            if end is not None:
-                fdf = fdf.filter(F.col(view.timestamp_field) <= F.lit(end))
             materialize_sorted(
-                fdf,
+                filter_interval(self._build_view_df(view), view.timestamp_field, start, end),
                 out_path,
                 view.join_keys,
                 list(view.sort_keys) or [(view.timestamp_field, "ASC")],
             )
-            if self.registry is not None and end is not None:
-                self.registry.apply_materialization(view_name, start, end)
-            return MaterializationResult()
-        fdf, ts_col, created = self._materialized_frame(view, fdf)
-        res = materialize_view(
-            self.spark,
-            fdf,
-            out_path,
-            view.join_keys,
-            ts_col=ts_col,
-            created_col=created,
-            start=start,
-            end=end,
-            only_latest=only_latest,
-            repartition=repartition,
-            redo_since_day=redo_since_day,
-        )
+            res = MaterializationResult()
+        else:
+            fdf, ts_col, created = self._view_frame(view)
+            res = materialize_view(
+                self.spark,
+                fdf,
+                out_path,
+                view.join_keys,
+                ts_col=ts_col,
+                created_col=created,
+                start=start,
+                end=end,
+                only_latest=only_latest,
+                repartition=repartition,
+                redo_since_day=redo_since_day,
+            )
         if self.registry is not None and end is not None:
             self.registry.apply_materialization(view_name, start, end)
         return res
@@ -557,13 +512,9 @@ class FeatureStore:
         from feast_spark.online import LocalOnlineStore
 
         view = self.get_feature_view(view_name)
-        fdf, ts, created = self._materialized_frame(view, self._build_view_df(view))
-        if start is not None:
-            fdf = fdf.filter(F.col(ts) >= F.lit(start))
-        if end is not None:
-            fdf = fdf.filter(F.col(ts) <= F.lit(end))
+        fdf, ts, created = self._view_frame(view)
         return LocalOnlineStore(_os.path.join(online_path, view.name)).push_online(
-            fdf, view.join_keys, ts, created
+            filter_interval(fdf, ts, start, end), view.join_keys, ts, created
         )
 
     def get_online_features(
@@ -650,7 +601,10 @@ class FeatureStore:
     # ----------------------------------------------------------- entity-map
     def with_join_key_map(self, view: FeatureView, key_map: dict[str, str], name: str) -> FeatureView:
         """Role-playing dimension: same view joined under renamed keys
-        (reference with_join_key_map, ibis.py:124-142)."""
+        (reference with_join_key_map, ibis.py:124-142). The mapped
+        view's source is the resolved (transformed and filtered) frame,
+        so its udf and filter are not applied a second time; its
+        aggregation spec still runs, on the renamed keys."""
         from dataclasses import replace
 
         from feast_spark.core.feature_view import Entity
@@ -666,7 +620,15 @@ class FeatureStore:
             timestamp_field=view.timestamp_field,
             created_timestamp_column=view.created_timestamp_column,
         )
-        return replace(view, name=name, entities=new_entities, source=src, source_views=())
+        return replace(
+            view,
+            name=name,
+            entities=new_entities,
+            source=src,
+            source_views=(),
+            udf=None,
+            filter_expr=None,
+        )
 
 
 def _group_refs(features: Sequence[str]) -> dict[str, list[str] | None]:
@@ -684,18 +646,17 @@ def _group_refs(features: Sequence[str]) -> dict[str, list[str] | None]:
     return out
 
 
-def _apply_aggregations(
-    fdf: DataFrame, view: FeatureView, ts_col: str
-) -> tuple[DataFrame, str, str | None]:
+def _apply_aggregations(fdf: DataFrame, view: FeatureView) -> DataFrame:
     """Execute the view's Aggregation spec (reference
-    SparkAggregationNode nodes.py:97-147, slide fixed).
+    SparkAggregationNode nodes.py:97-147, slide fixed). The aggregate
+    row's event timestamp is the view's own timestamp field:
 
     * windowed aggs → tumbling/sliding windows per entity; each window's
       features become valid at ``window_end`` (no leakage: a window is
       only joinable once closed);
     * plain aggs → one row per entity, valid at the entity's max ts.
     """
-    keys = view.join_keys
+    keys, ts_col = view.join_keys, view.timestamp_field
     windowed = [a for a in view.aggregations if a.time_window is not None]
     plain = [a for a in view.aggregations if a.time_window is None]
     if windowed and plain:
@@ -716,10 +677,9 @@ def _apply_aggregations(
             window_seconds=next(iter(wsec)),
             slide_seconds=next(iter(ssec)),
         )
-        return out.withColumnRenamed("window_end", "__agg_ts"), "__agg_ts", None
+        return out.withColumnRenamed("window_end", ts_col)
     exprs = [agg_fn(a.function)(a.column).alias(a.output_name) for a in plain]
-    out = fdf.groupBy(*keys).agg(F.max(ts_col).alias("__agg_ts"), *exprs)
-    return out, "__agg_ts", None
+    return fdf.groupBy(*keys).agg(F.max(ts_col).alias(ts_col), *exprs)
 
 
 def _apply_odfv(
@@ -740,11 +700,7 @@ def _apply_odfv(
     if mode == "sql":
         if not isinstance(odfv.udf, str):
             raise TypeError("sql-mode ODFV needs a SQL string udf")
-        view_name = f"__odfv_input_{odfv.name}"
-        df.createOrReplaceTempView(view_name)
-        # plain replace, NOT str.format — SQL legitimately contains
-        # braces (map/struct literals, regex in strings)
-        out = df.sparkSession.sql(odfv.udf.replace("{input}", view_name))
+        out = apply_transformation(odfv.udf, df)
         # enforce the requested subset: declared output columns that were
         # not asked for are dropped (they would leak unprefixed and can
         # collide with other views' columns)
@@ -766,26 +722,17 @@ def _apply_odfv(
             for f in out_fields
         ]
     )
-    udf = odfv.udf
-
-    if mode == "python":
-        # dict-of-lists row contract (reference python_transformation.py)
-        def apply(batches):
-            for pdf in batches:
-                extra = udf({c: pdf[c].tolist() for c in pdf.columns})
-                for n in names:
-                    pdf[prefix + n] = extra[n]
-                yield pdf
-
-    elif mode == "pandas":
-        def apply(batches):
-            for pdf in batches:
-                extra = udf(pdf)
-                for n in names:
-                    pdf[prefix + n] = extra[n]
-                yield pdf
-
-    else:
+    if mode not in ("python", "pandas"):
         raise ValueError(f"unknown ODFV mode {mode!r}")
+    udf, as_dict = odfv.udf, mode == "python"
+
+    def apply(batches):
+        for pdf in batches:
+            # python mode: dict-of-lists row contract (reference
+            # python_transformation.py); pandas mode: the batch itself
+            extra = udf({c: pdf[c].tolist() for c in pdf.columns} if as_dict else pdf)
+            for n in names:
+                pdf[prefix + n] = extra[n]
+            yield pdf
 
     return df.mapInPandas(apply, new_struct)

@@ -34,6 +34,17 @@ from pyspark.sql import functions as F
 from feast_spark.operators.dedup import latest_row_dedup
 
 
+def filter_interval(df: DataFrame, ts_col: str, start=None, end=None) -> DataFrame:
+    """Rows with ``ts_col`` in ``[start, end]``; a ``None`` bound is
+    open. Two plain comparisons, so both reach the scan as pushed
+    filters."""
+    if start is not None:
+        df = df.filter(F.col(ts_col) >= F.lit(start))
+    if end is not None:
+        df = df.filter(F.col(ts_col) <= F.lit(end))
+    return df
+
+
 def pull_latest(
     df: DataFrame,
     join_keys: list[str],
@@ -45,10 +56,7 @@ def pull_latest(
 ) -> DataFrame:
     """Latest row per entity key with ``ts`` in ``[start, end]``
     (reference spark.py:79-147: ROW_NUMBER window + rn=1)."""
-    if start is not None:
-        df = df.filter(F.col(ts_col) >= F.lit(start))
-    if end is not None:
-        df = df.filter(F.col(ts_col) <= F.lit(end))
+    df = filter_interval(df, ts_col, start, end)
     if feature_cols:
         df = df.select(
             *join_keys, ts_col, *([created_col] if created_col else []), *feature_cols
@@ -175,12 +183,9 @@ def materialize_view(
     manifest = MaterializationManifest(out_path)
     done = manifest.completed()
 
-    df = features
-    if start is not None:
-        df = df.filter(F.col(ts_col) >= F.lit(start))
-    if end is not None:
-        df = df.filter(F.col(ts_col) <= F.lit(end))
-    df = df.withColumn("__day", F.date_format(F.col(ts_col), "yyyy-MM-dd"))
+    df = filter_interval(features, ts_col, start, end).withColumn(
+        "__day", F.date_format(F.col(ts_col), "yyyy-MM-dd")
+    )
 
     # one distributed pass to enumerate the work list
     all_days = sorted(

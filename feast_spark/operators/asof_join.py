@@ -158,7 +158,8 @@ def point_in_time_join(
     if collisions:
         raise ValueError(
             f"feature columns {sorted(collisions)} collide with spine columns; "
-            "pass feature_prefix=... or rename via field_mapping"
+            "pass feature_prefix=... (full_feature_names=True in "
+            "get_historical_features) or rename via field_mapping"
         )
     internal = [c for c in spine.columns if c.startswith(_INTERNAL)]
     if internal:
@@ -210,7 +211,9 @@ def multi_view_pit_join(
     ``ttl_seconds`` and ``prefix`` (output names become
     ``prefix__name``). Each view's as-of join runs on the spine as grown
     by the views before it, so the views chain without a row id or a
-    fan-in join. ``strategy`` and ``spine_assume_unique`` are accepted
+    fan-in join; a feature name already on the grown spine raises.
+    ``FeatureStore.get_historical_features`` joins its views through
+    this one chain. ``strategy`` and ``spine_assume_unique`` are accepted
     and ignored, as in ``point_in_time_join``.
     """
     out = spine

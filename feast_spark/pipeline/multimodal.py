@@ -4,13 +4,11 @@ columns with typed metadata, processed via Arrow-batched ``mapInPandas``.
 The decode step itself is STUBBED (image/audio codecs are not in this
 container): ``decode_image`` raises ``NotImplementedError`` unless the
 deterministic fake decoder is selected. Everything around it — schema,
-batch iteration, partition sizing, UDF signatures — is real and tested,
-so swapping in PIL/torchaudio later is a one-function change.
+batch iteration, UDF signatures — is real and tested, so swapping in
+PIL/torchaudio later is a one-function change.
 
-Scale notes: blob rows are large; ``repartition_for_blobs`` targets a
-budgeted partition byte size so Arrow batches stay within executor
-memory, and ``mapInPandas`` streams batches (never materializes a whole
-partition).
+Scale notes: blob rows are large; ``mapInPandas`` streams Arrow batches
+(never materializes a whole partition).
 """
 
 from __future__ import annotations
@@ -40,15 +38,6 @@ def attach_blob_metadata(df: DataFrame, blob_col: str = "blob") -> DataFrame:
     return df.withColumn(f"{blob_col}_bytes", F.length(F.col(blob_col))).withColumn(
         f"{blob_col}_sha", F.sha2(F.col(blob_col), 256)
     )
-
-
-def repartition_for_blobs(
-    df: DataFrame, total_bytes: int, target_partition_bytes: int = 128 * 1024 * 1024
-) -> DataFrame:
-    """Size partitions to a byte budget so blob batches fit executor
-    memory (the ~64-128 MB/partition heuristic)."""
-    n = max(1, int(total_bytes / target_partition_bytes))
-    return df.repartition(n)
 
 
 def _fake_decode(data: bytes) -> np.ndarray:

@@ -23,6 +23,7 @@ from typing import Callable, Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from feast_spark.core.transformation import apply_transformation
 from feast_spark.operators.dedup import latest_row_dedup
 from feast_spark.operators.windows import agg_fn, tumbling_agg
 
@@ -34,19 +35,6 @@ def decode_json_payload(raw: DataFrame, schema_ddl: str, value_col: str = "value
     return raw.select(
         F.from_json(F.col(value_col).cast("string"), schema_ddl).alias("__t")
     ).select("__t.*")
-
-
-def decode_avro_payload(raw: DataFrame, avro_schema_json: str, value_col: str = "value") -> DataFrame:
-    """Avro decode, gated on the spark-avro package being present
-    (reference :264-299; ConfluentAvro needs a JVM bridge — out of
-    scope)."""
-    try:
-        from pyspark.sql.avro.functions import from_avro
-    except ImportError as e:  # pragma: no cover
-        raise NotImplementedError("spark-avro package not available") from e
-    return raw.select(from_avro(F.col(value_col), avro_schema_json).alias("__t")).select(
-        "__t.*"
-    )
 
 
 @dataclass
@@ -61,7 +49,7 @@ class StreamProcessor:
     field_mapping: dict[str, str] = field(default_factory=dict)
     keep_columns: Sequence[str] | None = None
     watermark_delay: str | None = None  # e.g. "30 seconds"
-    udf: Callable[[DataFrame], DataFrame] | None = None
+    udf: Callable[[DataFrame], DataFrame] | str | None = None
     sink: Callable[[DataFrame, int], None] | None = None
     checkpoint_location: str | None = None
     max_retries: int = 3
@@ -95,21 +83,14 @@ class StreamProcessor:
     def prepare(self, df: DataFrame) -> DataFrame:
         """Field-map renames + column pruning + watermark (reference
         :302-336 for rename/prune). ``udf`` may be a callable or a
-        SQL string with an ``{input}`` placeholder (the same contract
-        as batch views — streaming temp views compose with spark.sql)."""
+        SQL string with an ``{input}`` placeholder, run by the same
+        dispatcher as batch views (``apply_transformation``)."""
         if self.field_mapping:
             from feast_spark.core.source import apply_field_mapping
 
             df = apply_field_mapping(df, self.field_mapping)
         if self.udf is not None:
-            if isinstance(self.udf, str):
-                import uuid
-
-                name = f"__stream_input_{uuid.uuid4().hex[:8]}"
-                df.createOrReplaceTempView(name)
-                df = df.sparkSession.sql(self.udf.replace("{input}", name))
-            else:
-                df = self.udf(df)
+            df = apply_transformation(self.udf, df)
         if self.keep_columns:
             df = df.select(*self.keep_columns)
         if self.watermark_delay:

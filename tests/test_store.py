@@ -69,6 +69,37 @@ def _naive(s):
     return pd.to_datetime(s, utc=True).dt.tz_localize(None)
 
 
+_T0 = pd.Timestamp("2024-01-01")
+
+
+def _tiny_frame(spark, col, values):
+    """Docs 'a', 'b', … with one ``col`` value each at ``_T0``."""
+    return spark.createDataFrame(
+        pd.DataFrame(
+            {
+                "doc_id": [chr(ord("a") + i) for i in range(len(values))],
+                "event_timestamp": [_T0] * len(values),
+                col: [float(v) for v in values],
+            }
+        )
+    )
+
+
+def _tiny_view(spark, name, col, values, **kw):
+    return FeatureView(
+        name=name,
+        source=DataFrameSource(df=_tiny_frame(spark, col, values)),
+        entities=[Entity("doc_id")],
+        **kw,
+    )
+
+
+def _tiny_spine(spark, key="doc_id"):
+    return spark.createDataFrame(
+        pd.DataFrame({key: ["a", "b"], "event_timestamp": [_T0 + pd.Timedelta(hours=1)] * 2})
+    )
+
+
 def test_multi_view_retrieval_matches_oracle(spark, fixtures):
     store, spine, seqs, stats, glob = fixtures
     job = store.get_historical_features(
@@ -121,6 +152,20 @@ def test_full_feature_names(spark, fixtures):
     ).to_df()
     assert "sequences__n_tok" in got.columns
     assert "stats__quality_score" in got.columns
+
+    # two views that both expose `val`: the chained spine already holds
+    # the first view's `val` when the second joins
+    small = FeatureStore(spark)
+    small.apply([_tiny_view(spark, "va_view", "val", [1.0, 2.0]),
+                 _tiny_view(spark, "vb_view", "val", [10.0, 20.0])])
+    refs = ["va_view:val", "vb_view:val"]
+    with pytest.raises(ValueError, match="full_feature_names=True"):
+        small.get_historical_features(_tiny_spine(spark), refs)
+    got = small.get_historical_features(
+        _tiny_spine(spark), refs, full_feature_names=True
+    ).to_df().sort_values("doc_id")
+    assert got["va_view__val"].tolist() == [1.0, 2.0]
+    assert got["vb_view__val"].tolist() == [10.0, 20.0]
 
 
 def test_odfv(spark, fixtures):
@@ -338,3 +383,79 @@ def test_odfv_with_request_data(spark, fixtures):
     assert np.allclose(
         got.loc[m, "boosted"], got.loc[m, "quality_score"].astype(float) * 2.0
     )
+
+
+def test_entity_mapping_applies_udf_once(spark):
+    """The mapped view serves the base view's transformed values: its
+    source is the resolved frame, so the udf does not run again."""
+    store = FeatureStore(spark)
+    base = _tiny_view(
+        spark, "doubled", "val", [10.0, 20.0],
+        udf=lambda df: df.withColumn("val", F.col("val") * 2),
+    )
+    store.apply(base)
+    store.apply(store.with_join_key_map(base, {"doc_id": "origin_id"}, name="origin_doubled"))
+    got = store.get_historical_features(_tiny_spine(spark), ["doubled:val"]).to_df()
+    mapped = store.get_historical_features(
+        _tiny_spine(spark, "origin_id"), ["origin_doubled:val"]
+    ).to_df()
+    assert got.sort_values("doc_id")["val"].tolist() == [20.0, 40.0]
+    assert mapped.sort_values("origin_id")["val"].tolist() == [20.0, 40.0]
+
+
+_TWO_PARENT_SQL = (
+    "SELECT a.doc_id, a.event_timestamp, a.va + b.vb AS v "
+    "FROM {input0} a JOIN {input1} b "
+    "ON a.doc_id = b.doc_id AND a.event_timestamp = b.event_timestamp"
+)
+
+
+def _sql_store(spark):
+    store = FeatureStore(spark)
+    pa = _tiny_view(spark, "pa", "va", [1.0, 2.0])
+    pb = _tiny_view(spark, "pb", "vb", [10.0, 20.0])
+    store.apply(
+        [
+            pa,
+            pb,
+            FeatureView(
+                name="d",
+                source=DataFrameSource(df=None),
+                entities=[Entity("doc_id")],
+                source_views=[pa, pb],
+                udf=_TWO_PARENT_SQL,
+            ),
+            OnDemandFeatureView(
+                name="o",
+                udf="SELECT *, v * 10 AS v10 FROM {input}",
+                schema=[Field("v10", "double")],
+                mode="sql",
+            ),
+        ]
+    )
+    return store
+
+
+def test_derived_view_sql_two_parents(spark):
+    """A SQL-string derived view over two parents: ``{input0}`` and
+    ``{input1}`` name the parents' frames in order."""
+    got = _sql_store(spark).get_historical_features(_tiny_spine(spark), ["d:v"]).to_df()
+    assert got.sort_values("doc_id")["v"].tolist() == [11.0, 22.0]
+
+
+def test_sql_transformations_leave_no_temp_views(spark):
+    """SQL-string transformations stage their inputs as temp views only
+    while the query is analysed: a retrieval with a SQL view and a SQL
+    ODFV leaves the session catalog as it found it."""
+
+    def temp_views():
+        return {t.name for t in spark.catalog.listTables() if t.isTemporary}
+
+    before = temp_views()
+    got = _sql_store(spark).get_historical_features(
+        _tiny_spine(spark), ["d:v", "o:v10"]
+    ).to_df()
+    assert got.sort_values("doc_id")["v10"].tolist() == [110.0, 220.0]
+    after = temp_views()
+    assert not {n for n in after if n.startswith(("__view_input_", "__odfv_input_"))}
+    assert after == before

@@ -96,6 +96,35 @@ def test_sink_retry_then_fail(spark, tmp_path):
     assert calls["n"] == 3  # two failures + one success
 
 
+def test_sql_string_udf_stream(spark, tmp_path):
+    """A SQL-string udf over ``{input}`` runs on the stream, and its
+    staging temp view is gone once the query is analysed."""
+    src = str(tmp_path / "src_sql")
+    schema = "doc_id string, event_timestamp timestamp, va double"
+    spark.createDataFrame(
+        pd.DataFrame(
+            {
+                "doc_id": ["a", "b"],
+                "event_timestamp": [pd.Timestamp("2024-01-01")] * 2,
+                "va": [1.0, 2.0],
+            }
+        )
+    ).coalesce(1).write.parquet(src)
+    received: list[pd.DataFrame] = []
+    proc = StreamProcessor(
+        spark,
+        join_keys=["doc_id"],
+        udf="SELECT doc_id, event_timestamp, va * 3 AS va FROM {input}",
+        sink=lambda df, bid: received.append(df.toPandas()),
+    )
+    before = {t.name for t in spark.catalog.listTables() if t.isTemporary}
+    q = proc.start(proc.from_files(src, schema), available_now=True)
+    q.awaitTermination(120)
+    got = pd.concat(received, ignore_index=True).sort_values("doc_id")
+    assert got["va"].tolist() == [3.0, 6.0]
+    assert {t.name for t in spark.catalog.listTables() if t.isTemporary} == before
+
+
 def test_decode_json_payload(spark):
     raw = spark.createDataFrame(
         [(bytes(f'{{"doc_id":"d{i}","n_tok":{i}}}', "utf8"),) for i in range(5)],
