@@ -226,8 +226,9 @@ def bpe_learn(
     eliminating ``n_merges`` Spark job round-trips (16 rounds: 8.3 s →
     ~1.5 s at sf0.1, which has a 30-word vocab — the per-round cost was
     100% scheduler/Arrow overhead). The gate bounds the collect (the
-    default 1M admits a 1M-row vocab ≈ tens of MB, same byte-gating
-    pattern as ``dedup_text._jaccard_gram``) and the driver's compute:
+    default 1M admits a 1M-row vocab ≈ tens of MB, the same pattern as
+    the byte gate in front of ``dedup_text.ngram_jaccard_pairs``'s
+    dense path) and the driver's compute:
     every driver round re-tokenizes the whole vocab, so the driver runs
     at most ``driver_vocab_rows * 100`` word re-tokenizations (a 1M
     vocab at 100 merges, a 10k vocab at 10k merges). Above the gate (or

@@ -9,13 +9,22 @@ Four families, all DataFrame-native (no per-row Python):
   explode distinct shingles → join on shingle → count common → Jaccard.
   Exact (no false negatives); cost bounded by shingle-posting-list
   sizes. Drop ultra-frequent shingles (stopword shingles) before the
-  join at scale — the ``max_doc_freq`` knob.
+  join at scale — the ``max_doc_freq`` knob. Small vocabularies take a
+  dense broadcast-matmul path with the same output.
 * **MinHash + LSH** — per-doc signature of K minimum portable-hash
   values under K affine permutations, banded into B buckets; candidate
   pairs share a band bucket; candidates verified with exact Jaccard.
   Linear in corpus size; probabilistic recall (tunable via B×R).
 * **SimHash** — 32-bit sign-random-projection over word hashes; near
   duplicates have small Hamming distance.
+
+The pair finders run on the pair-search core in ``similarity.py``:
+every candidate join is ``blocked_self_join`` (posting, band, segment)
+and the dense n-gram path is ``dense_block_pairs``. One shingle-row
+builder (``_shingle_rows``) feeds the posting index, the MinHash
+signatures and the LSH verify sets. ``minhash_signatures`` and
+``simhash`` add zero-shingle (zero-word) documents back as NULL rows;
+the pair finders use the signature frames without them.
 
 Plus span scrubbing — ExactSubstr dedup and benchmark decontamination
 over words or token ids — as five front ends on one n-gram span core
@@ -25,13 +34,15 @@ The portable hash (text.portable_hash64) keeps signatures identical
 across engines, so DuckDB can serve as an independent oracle for the
 signature computation itself.
 
-Caching note: the pair-finding functions persist intermediate frames
-(postings, banded signatures, candidates) that the RETURNED lazy plan
-still references — they cannot be unpersisted inside the function. Of
-the span operators, the two text-space dedup passes
-(``remove_duplicate_spans``, ``remove_duplicate_runs``) persist their
-gram stream the same way; the id-space passes and both decontamination
-scrubs persist nothing.
+Caching note: the posting join persists its shingle postings and
+``lsh_candidate_pairs`` its banded signatures, candidates and verify
+sets — frames the RETURNED lazy plan still references, so they cannot
+be unpersisted inside the function (the dense n-gram path collects
+eagerly and drops its postings before returning). Of the span
+operators, the two text-space dedup passes (``remove_duplicate_spans``,
+``remove_duplicate_runs``) persist their gram stream the same way;
+``simhash_pairs``, the id-space passes and both decontamination scrubs
+persist nothing.
 Blocks are MEMORY_AND_DISK and LRU-evictable; batch drivers running
 many corpora per session should `spark.catalog.clearCache()` between
 jobs (bench.py does).
@@ -39,9 +50,12 @@ jobs (bench.py does).
 
 from __future__ import annotations
 
+import numpy as np
+
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from feast_spark.pipeline.similarity import blocked_self_join, dense_block_pairs
 from feast_spark.pipeline.text import (
     doc_fingerprint,
     normalize_text,
@@ -105,6 +119,38 @@ def word_shingles(col: Column, n: int = 3) -> Column:
     )
 
 
+def _shingle_rows(
+    df: DataFrame, id_col: str, text_col: str, n: int, hashed=F.xxhash64
+) -> DataFrame:
+    """``(id, shingle)``: one row per distinct word ``n``-gram of each
+    document (``word_shingles``), the shingle hashed to a long by
+    ``hashed``. Documents with no shingles have no rows."""
+    return df.select(
+        F.col(id_col).alias("id"),
+        F.explode(word_shingles(F.col(text_col), n)).alias("__s"),
+    ).select("id", hashed(F.col("__s")).alias("shingle"))
+
+
+def _with_both_ids(pairs: DataFrame, per_id: DataFrame, col: str) -> DataFrame:
+    """``pairs`` with ``per_id``'s ``col`` joined on for ``id_a`` and for
+    ``id_b``, as ``<col>_a`` and ``<col>_b``."""
+    for s in "ab":
+        side = per_id.select(F.col("id").alias(f"id_{s}"), F.col(col).alias(f"{col}_{s}"))
+        pairs = pairs.join(side, f"id_{s}")
+    return pairs
+
+
+def _jaccard(common: Column, size_a: Column, size_b: Column) -> Column:
+    """``|A ∩ B| / |A ∪ B|`` from the intersection and set sizes, rounded
+    to 6 digits."""
+    return F.round(common / (size_a + size_b - common), 6)
+
+
+# the dense n-gram path needs a vocabulary at most this large (besides
+# its docs x vocab byte budget)
+GRAM_VOCAB_LIMIT = 20_000
+
+
 def ngram_jaccard_pairs(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -112,42 +158,34 @@ def ngram_jaccard_pairs(
     n: int = 3,
     threshold: float = 0.8,
     max_doc_freq: int | None = None,
-    gram_vocab_limit: int = 20_000,
     dense_budget_bytes: int = 256 * 1024 * 1024,
 ) -> DataFrame:
     """Exact Jaccard-similar pairs via an inverted shingle index.
 
     Plan: explode shingles (flatMap, no shuffle) → optional hot-shingle
-    pruning → self equi-join on shingle (hash shuffle on shingle) →
-    pair-count aggregate → Jaccard filter. ``id_a < id_b`` cuts the
+    pruning → ``blocked_self_join`` on shingle (hash shuffle on shingle)
+    → pair-count aggregate → Jaccard filter. ``id_a < id_b`` cuts the
     symmetric half. At 100 TB set ``max_doc_freq`` to drop
     posting lists longer than ~1000 docs (stopword shingles produce
     quadratic pair blow-up while contributing nothing to precision).
 
     Adaptive dense path: when the distinct-shingle vocabulary is small
-    (≤ ``gram_vocab_limit``) AND the docs×vocab incidence matrix fits
+    (≤ ``GRAM_VOCAB_LIMIT``) AND the docs×vocab incidence matrix fits
     ``dense_budget_bytes`` (float32 cells — the gate is on BYTES, not
     vocab alone, so a 100 TB corpus of short/templated docs with a tiny
     vocabulary can NOT walk into an n_docs-sized driver collect), the
     posting join degenerates (every doc shares shingles with every
-    other → |pairs| ≈ n²); a blocked dense gram matmul
-    (docs×vocab · vocab×docs, BLAS) computes the same exact
-    intersection counts with O(corpus) Arrow traffic instead. Chosen
-    automatically from one combined distinct count; over budget it
-    falls back to the posting join regardless of vocabulary size.
+    other → |pairs| ≈ n²); the broadcast block scorer
+    (``dense_block_pairs``: docs×vocab · vocab×docs, BLAS) computes the
+    same exact intersection counts with O(corpus) Arrow traffic instead.
+    Chosen automatically from one combined distinct count; over budget
+    it falls back to the posting join regardless of vocabulary size.
     """
     # posting index on xxhash64(shingle): joining/shuffling 8-byte longs
     # instead of shingle strings measured ~1.6x faster on the pair-count
     # aggregation; a 64-bit collision would merge two shingles (P ~ n^2 /
     # 2^65 — negligible even at 10^9 distinct shingles)
-    raw = (
-        df.select(
-            F.col(id_col).alias("id"),
-            F.explode(word_shingles(F.col(text_col), n)).alias("__s"),
-        )
-        .select("id", F.xxhash64("__s").alias("shingle"))
-        .persist()
-    )
+    raw = _shingle_rows(df, id_col, text_col, n).persist()
     sh = raw
     if max_doc_freq:
         # hot-shingle pruning happens BEFORE sizes, the dense gate, and
@@ -180,7 +218,7 @@ def ngram_jaccard_pairs(
     margin = 1.0 + 4 * _RSD  # 4 sigma of HLL relative error
     n_vocab = int(counts["nv"] * margin)
     n_docs = int(counts["nd"] * margin)
-    if n_vocab <= gram_vocab_limit and n_docs * n_vocab * 4 <= dense_budget_bytes:
+    if n_vocab <= GRAM_VOCAB_LIMIT and n_docs * n_vocab * 4 <= dense_budget_bytes:
         out = _jaccard_gram(sh, threshold)
         # _jaccard_gram collects its input eagerly — the returned plan
         # only references the broadcast matrix, so the postings cache can
@@ -190,94 +228,36 @@ def ngram_jaccard_pairs(
         if sh is not raw:
             raw.unpersist()
         return out
-    sizes = sh.groupBy("id").agg(F.count(F.lit(1)).alias("n_shingles"))
-    a = sh.alias("a")
-    b = sh.alias("b")
+    sizes = sh.groupBy("id").agg(F.count(F.lit(1)).alias("size"))
     common = (
-        a.join(b, on="shingle")
-        .filter(F.col("a.id") < F.col("b.id"))
-        .groupBy(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
+        blocked_self_join(sh, ["shingle"])
+        .groupBy("id_a", "id_b")
         .agg(F.count(F.lit(1)).alias("common"))
     )
-    out = (
-        common.join(sizes.withColumnRenamed("id", "id_a").withColumnRenamed("n_shingles", "sa"), "id_a")
-        .join(sizes.withColumnRenamed("id", "id_b").withColumnRenamed("n_shingles", "sb"), "id_b")
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.col("common") / (F.col("sa") + F.col("sb") - F.col("common")), 6
-            ),
-        )
+    return (
+        _with_both_ids(common, sizes, "size")
+        .withColumn("jaccard", _jaccard(F.col("common"), F.col("size_a"), F.col("size_b")))
         .filter(F.col("jaccard") >= threshold)
         .select("id_a", "id_b", "jaccard")
     )
-    return out
 
 
 def _jaccard_gram(sh: DataFrame, threshold: float) -> DataFrame:
-    """Dense exact-Jaccard for small shingle vocabularies: broadcast the
-    whole doc×vocab incidence matrix; each Arrow batch of docs computes
-    |A ∩ B| for its block against all docs via one BLAS matmul and emits
-    threshold-passing pairs. Exact — same outputs as the posting join.
-    The matrix is sized from the ACTUAL collected vocabulary (the
-    routing gate's count is an HLL estimate — never an array bound)."""
-    import numpy as np
-    import pandas as pd
-
-    from pyspark.sql import types as T
-
-    posting = sh.groupBy("id").agg(F.collect_list("shingle").alias("hs"))
-    rows = posting.collect()
-    ids = np.array([r["id"] for r in rows])
+    """Dense exact Jaccard for small shingle vocabularies: the doc×vocab
+    0/1 incidence matrix goes through ``dense_block_pairs``. Exact — the
+    same pairs as the posting join. The matrix is sized from the ACTUAL
+    collected vocabulary (the routing gate's count is an HLL estimate —
+    never an array bound)."""
+    rows = sh.groupBy("id").agg(F.collect_list("shingle").alias("hs")).collect()
     vocab: dict = {}
-    for r in rows:
-        for h in r["hs"]:
-            vocab.setdefault(h, len(vocab))
+    cols = [[vocab.setdefault(h, len(vocab)) for h in r["hs"]] for r in rows]
     mat = np.zeros((len(rows), len(vocab)), dtype=np.float32)
-    for i, r in enumerate(rows):
-        for h in r["hs"]:
-            mat[i, vocab[h]] = 1.0
-    sizes = mat.sum(axis=1)
-    sc = sh.sparkSession.sparkContext
-    ball = sc.broadcast((ids, mat, sizes))
-    thr = threshold
-
-    id_type = posting.schema["id"].dataType
-    out_schema = T.StructType(
-        [
-            T.StructField("id_a", id_type),
-            T.StructField("id_b", id_type),
-            T.StructField("jaccard", T.DoubleType()),
-        ]
+    for i, c in enumerate(cols):
+        mat[i, c] = 1.0
+    return dense_block_pairs(
+        sh.sparkSession, np.array([r["id"] for r in rows]), mat, mat.sum(axis=1),
+        sh.schema["id"].dataType, "jaccard", threshold,
     )
-
-    def score(batches):
-        ids_, mat_, sizes_ = ball.value
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            idx = pdf["i"].to_numpy()
-            block = mat_[idx]
-            # float32 matmul is exact here (counts ≤ 2^24); divide in
-            # float64 so rounding matches the SQL-oracle double division
-            common = (block @ mat_.T).astype(np.float64)
-            union = sizes_[idx][:, None].astype(np.float64) + sizes_[None, :] - common
-            with np.errstate(divide="ignore", invalid="ignore"):
-                jac = np.round(np.where(union > 0, common / union, 0.0), 6)
-            ii, jj = np.nonzero((jac >= thr) & (ids_[idx][:, None] < ids_[None, :]))
-            yield pd.DataFrame(
-                {
-                    "id_a": ids_[idx][ii],
-                    "id_b": ids_[jj],
-                    "jaccard": jac[ii, jj].astype(np.float64),
-                }
-            )
-
-    spark = sh.sparkSession
-    blocks = spark.createDataFrame(
-        pd.DataFrame({"i": np.arange(len(ids))}),
-    ).repartition(max(1, spark.sparkContext.defaultParallelism))
-    return blocks.mapInPandas(score, out_schema)
 
 
 def _affine_params(k: int, seed: int = 1) -> list[tuple[int, int]]:
@@ -290,6 +270,33 @@ def _affine_params(k: int, seed: int = 1) -> list[tuple[int, int]]:
     ]
 
 
+def _with_empty_docs(df: DataFrame, id_col: str, per_id: DataFrame) -> DataFrame:
+    """``per_id`` plus a NULL-valued row for every document of ``df`` it
+    lacks (documents with no shingles or no words)."""
+    return df.select(F.col(id_col).alias("id")).distinct().join(per_id, "id", "left")
+
+
+def _minhash(
+    df: DataFrame, id_col: str, text_col: str, num_hashes: int, shingle_n: int, seed: int
+) -> DataFrame:
+    """``(id, signature)`` of every document with at least one shingle."""
+    # explode + flat-column hashing + grouped min-aggregation: Spark's
+    # higher-order array functions (transform/aggregate) are
+    # CodegenFallback — interpreted per element — while the exploded
+    # formulation keeps md5/conv/pmod inside whole-stage codegen and the
+    # K mins are map-side-combinable partial aggregates (one shuffle on
+    # id). Measured ~3x over the array-expression form.
+    h = F.col("shingle")
+    rows = _shingle_rows(
+        df, id_col, text_col, shingle_n, lambda s: portable_hash64(s) % MERSENNE31
+    )
+    mins = [
+        F.min((F.lit(a) * h + F.lit(b)) % MERSENNE31)
+        for a, b in _affine_params(num_hashes, seed)
+    ]
+    return rows.groupBy("id").agg(F.array(*mins).alias("signature"))
+
+
 def minhash_signatures(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -300,32 +307,12 @@ def minhash_signatures(
 ) -> DataFrame:
     """Per-doc MinHash signature: ``sig[i] = min over shingles of
     ((a_i * (h(shingle) mod p) + b_i) mod p)``, h = portable md5 hash.
-    Computed with array expressions (transform + array_min) — per-row,
-    no shuffle, whole-stage codegen."""
-    params = _affine_params(num_hashes, seed)
-    # explode + flat-column hashing + grouped min-aggregation: Spark's
-    # higher-order array functions (transform/aggregate) are
-    # CodegenFallback — interpreted per element — while the exploded
-    # formulation keeps md5/conv/pmod inside whole-stage codegen and the
-    # K mins are map-side-combinable partial aggregates (one shuffle on
-    # id). Measured ~3x over the array-expression form.
-    exploded = df.select(
-        F.col(id_col).alias("id"),
-        F.explode(word_shingles(F.col(text_col), shingle_n)).alias("__s"),
-    ).select("id", (portable_hash64(F.col("__s")) % MERSENNE31).alias("__h"))
-    mins = exploded.groupBy("id").agg(
-        *[
-            F.min((F.lit(a) * F.col("__h") + F.lit(b)) % MERSENNE31).alias(f"__m{i}")
-            for i, (a, b) in enumerate(params)
-        ]
+    Exploded shingle rows and one grouped min per permutation — one
+    shuffle on id, whole-stage codegen. Docs with zero shingles get a
+    NULL signature."""
+    return _with_empty_docs(
+        df, id_col, _minhash(df, id_col, text_col, num_hashes, shingle_n, seed)
     )
-    sigs = mins.select(
-        "id", F.array(*[f"__m{i}" for i in range(len(params))]).alias("signature")
-    )
-    # docs with zero shingles produce no exploded rows — restore them
-    # with a NULL signature (callers filter on isNotNull)
-    all_ids = df.select(F.col(id_col).alias("id")).distinct()
-    return all_ids.join(sigs, on="id", how="left")
 
 
 def lsh_candidate_pairs(
@@ -342,44 +329,36 @@ def lsh_candidate_pairs(
     """MinHash-LSH near-duplicate pairs.
 
     Bands of R = num_hashes/bands rows are hashed to buckets; docs
-    sharing any band bucket become candidates; candidates are verified
-    with exact Jaccard when ``verify`` (recommended — LSH alone has
-    false positives). Shuffle profile: one explode-join on (band,
-    bucket) whose cost is Σ bucket² — bounded because buckets are
-    64-bit hashes of R-element signature slices.
+    sharing any band bucket become candidates (``blocked_self_join`` on
+    (band, bucket)); candidates are verified with exact Jaccard when
+    ``verify`` (recommended — LSH alone has false positives). Shuffle
+    profile: one explode-join on (band, bucket) whose cost is Σ bucket²
+    — bounded because buckets are 64-bit hashes of R-element signature
+    slices. Docs with zero shingles have no signature and pair with
+    nothing.
     """
     if num_hashes % bands:
         raise ValueError("bands must divide num_hashes")
     r = num_hashes // bands
-    sigs = minhash_signatures(df, id_col, text_col, num_hashes, shingle_n, seed).filter(
-        F.col("signature").isNotNull()
-    )
+    sig = F.col("signature")
     # persist the BANDED frame (both sides of the self-join scan it) so
     # neither the md5 signature pipeline nor the per-band bucket hashes
     # are computed twice
-    banded = sigs.select(
+    banded = _minhash(df, id_col, text_col, num_hashes, shingle_n, seed).select(
         "id",
         F.explode(
             F.array(
                 *[
                     F.struct(
                         F.lit(b).alias("band"),
-                        F.md5(F.concat_ws(",", *[F.col("signature")[b * r + i] for i in range(r)])).alias(
-                            "bucket"
-                        ),
+                        F.md5(F.concat_ws(",", *[sig[b * r + i] for i in range(r)])).alias("bucket"),
                     )
                     for b in range(bands)
                 ]
             )
         ).alias("bb"),
     ).select("id", "bb.band", "bb.bucket").persist()
-    a, b_ = banded.alias("a"), banded.alias("b")
-    cand = (
-        a.join(b_, on=["band", "bucket"])
-        .filter(F.col("a.id") < F.col("b.id"))
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .distinct()
-    )
+    cand = blocked_self_join(banded, ["band", "bucket"]).select("id_a", "id_b").distinct()
     if not verify:
         return cand
     # verify only needs shingle sets for docs that appear in a candidate
@@ -399,48 +378,29 @@ def lsh_candidate_pairs(
     docs_needed = df.join(
         F.broadcast(cand_ids), df[id_col] == cand_ids["id"], "left_semi"
     )
-    sh = (
-        docs_needed.select(
-            F.col(id_col).alias("id"),
-            F.explode(word_shingles(F.col(text_col), shingle_n)).alias("__s"),
-        )
-        .select("id", F.xxhash64("__s").alias("__h"))
+    sets = (
+        _shingle_rows(docs_needed, id_col, text_col, shingle_n)
         .groupBy("id")
-        .agg(F.collect_set("__h").alias("sh"))
+        .agg(F.collect_set("shingle").alias("sh"))
         .persist()  # joined twice in the verify stage
     )
-    out = (
-        cand.join(sh.withColumnRenamed("id", "id_a").withColumnRenamed("sh", "sh_a"), "id_a")
-        .join(sh.withColumnRenamed("id", "id_b").withColumnRenamed("sh", "sh_b"), "id_b")
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.size(F.array_intersect("sh_a", "sh_b"))
-                / F.size(F.array_union("sh_a", "sh_b")),
-                6,
-            ),
-        )
+    a, b = F.col("sh_a"), F.col("sh_b")
+    inter = F.size(F.array_intersect(a, b))
+    return (
+        _with_both_ids(cand, sets, "sh")
+        .withColumn("jaccard", _jaccard(inter, F.size(a), F.size(b)))
         .filter(F.col("jaccard") >= threshold)
         .select("id_a", "id_b", "jaccard")
     )
-    return out
 
 
-def simhash(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    bits: int = 32,
-) -> DataFrame:
-    """32-bit SimHash over word portable-hashes: bit i of the output is
-    1 iff Σ_words (bit i of h(word) ? +1 : −1) > 0. Near-duplicates
-    land within small Hamming distance. Array-expression only — no
-    shuffle, no Python."""
+def _simhash(df: DataFrame, id_col: str, text_col: str, bits: int) -> DataFrame:
+    """``(id, simhash)`` of every document with at least one word."""
     words = F.filter(F.split(normalize_text(F.col(text_col)), " "), lambda x: x != "")
-    # explode + codegen bit-sums (see minhash_signatures: array
-    # higher-order fns are interpreted; exploded per-word rows keep the
-    # md5 hash and 32 conditional sums in whole-stage codegen with
-    # map-side partial aggregation)
+    # explode + codegen bit-sums (see _minhash: array higher-order fns
+    # are interpreted; exploded per-word rows keep the md5 hash and the
+    # conditional sums in whole-stage codegen with map-side partial
+    # aggregation)
     exploded = df.select(
         F.col(id_col).alias("id"), F.explode(words).alias("__w")
     ).select("id", portable_hash64(F.col("__w")).alias("__h"))
@@ -457,9 +417,20 @@ def simhash(
         val = val + F.when(
             F.col(f"__b{i}") > 0, F.lit(1 << i).cast("long")
         ).otherwise(F.lit(0).cast("long"))
-    hashes = sums.select("id", val.alias("simhash"))
-    all_ids = df.select(F.col(id_col).alias("id")).distinct()
-    return all_ids.join(hashes, on="id", how="left")
+    return sums.select("id", val.alias("simhash"))
+
+
+def simhash(
+    df: DataFrame,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    bits: int = 32,
+) -> DataFrame:
+    """32-bit SimHash over word portable-hashes: bit i of the output is
+    1 iff Σ_words (bit i of h(word) ? +1 : −1) > 0. Near-duplicates
+    land within small Hamming distance. No Python; one shuffle on id.
+    Docs with no words get a NULL simhash."""
+    return _with_empty_docs(df, id_col, _simhash(df, id_col, text_col, bits))
 
 
 def simhash_pairs(
@@ -473,10 +444,10 @@ def simhash_pairs(
     """Near-dup pairs by SimHash Hamming distance ≤ k, using the
     pigeonhole block trick: split the hash into ``blocks`` segments —
     any pair within distance k < blocks shares at least one exact
-    segment, so candidates come from equi-joins on segments (linear
-    index build, no all-pairs). ``max_hamming >= blocks`` voids that
-    guarantee (a pair can differ in every segment) — rejected rather
-    than silently returning an incomplete pair set."""
+    segment, so candidates come from ``blocked_self_join`` on segments
+    (linear index build, no all-pairs). ``max_hamming >= blocks`` voids
+    that guarantee (a pair can differ in every segment) — rejected
+    rather than silently returning an incomplete pair set."""
     if max_hamming >= blocks:
         raise ValueError(
             f"pigeonhole blocking needs max_hamming < blocks "
@@ -485,8 +456,7 @@ def simhash_pairs(
         )
     seg_bits = bits // blocks
     mask = (1 << seg_bits) - 1
-    sh = simhash(df, id_col, text_col, bits).filter(F.col("simhash").isNotNull())
-    seg = sh.select(
+    seg = _simhash(df, id_col, text_col, bits).select(
         "id",
         "simhash",
         F.explode(
@@ -503,23 +473,13 @@ def simhash_pairs(
             )
         ).alias("s"),
     ).select("id", "simhash", "s.block", "s.segment")
-    a, b = seg.alias("a"), seg.alias("b")
-    cand = (
-        a.join(b, on=["block", "segment"])
-        .filter(F.col("a.id") < F.col("b.id"))
-        .select(
-            F.col("a.id").alias("id_a"),
-            F.col("b.id").alias("id_b"),
-            F.col("a.simhash").alias("h_a"),
-            F.col("b.simhash").alias("h_b"),
-        )
-        .distinct()
-    )
-    hamming = F.bit_count(F.col("h_a").bitwiseXOR(F.col("h_b")))
+    hamming = F.bit_count(F.col("simhash_a").bitwiseXOR(F.col("simhash_b")))
+    # a pair sharing several segments is found once per segment
     return (
-        cand.withColumn("hamming", hamming)
+        blocked_self_join(seg, ["block", "segment"], ("simhash",))
+        .select("id_a", "id_b", hamming.alias("hamming"))
         .filter(F.col("hamming") <= max_hamming)
-        .select("id_a", "id_b", "hamming")
+        .distinct()
     )
 
 

@@ -1,30 +1,61 @@
-"""Similarity search over embedding columns (``array<float>``).
+"""Similarity search over embedding columns (``array<float>``), and the
+one pair-search core under every near-duplicate and top-k finder here
+and in ``dedup_text``.
 
-* ``brute_force_topk`` — exact cosine top-k: broadcast the (small)
-  query set against the corpus, JVM-side ``zip_with``/``aggregate``
-  dot products, per-query top-k via window. The baseline and the
-  verifier for approximate paths.
-* ``lsh_topk`` — random-hyperplane LSH: sign-bit signatures bucket the
-  corpus; each query probes its own bucket (and optionally multi-probe
-  neighbors), reranking only bucket members. Sub-linear probe cost at
-  the price of recall — golden-tested against brute force.
-* ``ivf_topk`` — IVF-style coarse quantization: k-means-ish centroid
-  assignment (deterministic seeded sample as centroids), queries probe
-  the ``nprobe`` nearest cells.
+The core:
 
-Scale notes: brute force is O(Q×N) — fine for Q ≤ ~10³ broadcast
-against any N (it's one scan of the corpus, embarrassingly parallel,
-no shuffle). For Q ≈ N use the bucketed variants, whose shuffle is on
-(bucket) with bounded bucket sizes.
+* ``blocked_self_join`` — rows sharing a block key, ``id_a < id_b``: the
+  candidate generator of the n-gram posting join, the MinHash band join,
+  the SimHash segment join and the LSH path of ``embedding_dup_pairs``.
+* ``dense_block_pairs`` — the broadcast block scorer for dense
+  self-pairs: a bounded matrix, collected once by the caller, is
+  broadcast; each Arrow batch of row indices scores its block against
+  the whole matrix with one BLAS matmul (cosine or Jaccard) and emits
+  the threshold-passing pairs. Under the dense n-gram Jaccard path and
+  ``embedding_dup_pairs(exact=True)``.
+* ``_probe_rerank`` — approximate top-k: corpus rows keyed to one
+  bucket, queries exploded to the buckets they probe, one equi-join on
+  bucket, the exact cosine rerank (``pair_dot``, rounded to 6 digits)
+  and the per-query top-k (``_topk``: cosine desc, neighbor id asc).
+
+The finders:
+
+* ``brute_force_topk`` — exact cosine top-k: the (small) query set is
+  collected and broadcast, the corpus scanned once with a blocked matmul
+  per Arrow batch. The baseline and the verifier for approximate paths.
+* ``lsh_topk`` — random-hyperplane LSH on ``_probe_rerank``: sign-bit
+  signatures bucket the corpus; a query probes its own bucket and, with
+  ``multiprobe``, every bucket within that Hamming radius.
+* ``ivf_topk`` — IVF on ``_probe_rerank``: a deterministic seeded
+  corpus sample as centroids; corpus rows live in their nearest cell,
+  queries probe the ``nprobe`` nearest cells.
+* ``embedding_dup_pairs`` — cosine near-duplicate pairs, LSH-blocked
+  through ``blocked_self_join`` or exact through ``dense_block_pairs``.
+
+Driver collects: the query set (``brute_force_topk``), ``n_cells``
+centroids (``ivf_topk``), and the matrices ``dense_block_pairs`` scores,
+each bounded by its caller (``max_exact_rows``; the n-gram path's byte
+gate). Brute force is O(Q×N) — fine for Q ≤ ~10³ against any N (one
+scan of the corpus, no shuffle). For Q ≈ N use the bucketed variants,
+whose shuffle is on bucket with bounded bucket sizes.
 """
 
 from __future__ import annotations
 
+from itertools import combinations
+
 import numpy as np
 import pandas as pd
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+from pyspark.sql.functions import pandas_udf
+
+
+def _stack(v: pd.Series) -> np.ndarray:
+    """One float64 matrix from an Arrow batch of vectors."""
+    return np.stack(v.to_numpy()).astype(np.float64)
 
 
 def _make_dot_udf():
@@ -37,14 +68,11 @@ def _make_dot_udf():
     relative — outputs are rounded to 6 digits, so cross-engine oracle
     parity is preserved.
     """
-    from pyspark.sql.functions import pandas_udf
 
     def dot_fn(a, b):
         if len(a) == 0:
             return pd.Series([], dtype="float64")
-        ma = np.stack(a.to_numpy()).astype(np.float64)
-        mb = np.stack(b.to_numpy()).astype(np.float64)
-        return pd.Series(np.einsum("ij,ij->i", ma, mb))
+        return pd.Series(np.einsum("ij,ij->i", _stack(a), _stack(b)))
 
     dot_fn.__annotations__ = {"a": pd.Series, "b": pd.Series, "return": pd.Series}
     return pandas_udf("double")(dot_fn)
@@ -61,6 +89,98 @@ def pair_dot(a: Column, b: Column) -> Column:
     return _DOT_UDF(a, b)
 
 
+def _cosine() -> Column:
+    """The one rerank cosine of a pair row: vectors ``v_a``/``v_b``, L2
+    norms ``n_a``/``n_b``, rounded to 6 digits."""
+    return F.round(
+        pair_dot(F.col("v_a"), F.col("v_b")) / (F.col("n_a") * F.col("n_b")), 6
+    )
+
+
+def _vector_udf(ret: str, dim: int, fn):
+    """Arrow-batched pandas UDF over one vector column: ``fn`` maps the
+    stacked batch matrix (an empty batch is a ``0 x dim`` matrix) to the
+    fields of the ``ret`` struct."""
+
+    def run(v):
+        return pd.DataFrame(fn(_stack(v) if len(v) else np.zeros((0, dim))))
+
+    run.__annotations__ = {"v": pd.Series, "return": pd.DataFrame}
+    return pandas_udf(ret)(run)
+
+
+def blocked_self_join(
+    df: DataFrame, on: list[str], carry: tuple[str, ...] = ()
+) -> DataFrame:
+    """Pairs of ``df`` rows agreeing on every ``on`` column, with
+    ``id_a < id_b`` (one row per pair per shared block). ``df`` has an
+    ``id`` column; ``id`` and each ``carry`` column come back suffixed
+    ``_a`` and ``_b``. One hash shuffle of each side on ``on``; persist
+    ``df`` first when it is expensive — both sides scan it."""
+    a, b = (df.select(*on, *[F.col(c).alias(f"{c}_{s}") for c in ("id", *carry)]) for s in "ab")
+    return a.join(b, on=on).filter(F.col("id_a") < F.col("id_b"))
+
+
+def dense_block_pairs(
+    spark: SparkSession,
+    ids: np.ndarray,
+    mat: np.ndarray,
+    stats: np.ndarray,
+    id_type: T.DataType,
+    metric: str,
+    threshold: float,
+) -> DataFrame:
+    """``(id_a, id_b, <metric>)`` for every row pair of ``mat`` with
+    ``id_a < id_b`` whose score, rounded to 6 digits, is ≥ ``threshold``.
+
+    ``metric="cosine"``: ``stats`` are the rows' L2 norms. ``"jaccard"``:
+    ``mat`` is a 0/1 float32 incidence matrix (products exact up to
+    2^24) and ``stats`` the set sizes; ``|A ∩ B| / (|A| + |B| − |A ∩ B|)``
+    is divided in float64 so rounding matches a SQL double division.
+
+    ``(ids, mat, stats)`` is broadcast once; a ``spark.range`` of row
+    indices is scanned with one pandas map, each Arrow batch
+    computing one ``block @ mat.T`` — O(rows) Arrow traffic, never the
+    n²/2 pair table. The caller bounds ``mat``: it lives on the driver
+    and in every executor."""
+    ball = spark.sparkContext.broadcast((ids, mat, stats))
+    jaccard, thr = metric == "jaccard", threshold
+
+    def score(batches):
+        ids_, mat_, st = ball.value
+        for pdf in batches:
+            i = pdf["id"].to_numpy()
+            dots = (mat_[i] @ mat_.T).astype(np.float64)
+            if jaccard:
+                den = st[i][:, None].astype(np.float64) + st[None, :] - dots
+            else:
+                den = np.outer(st[i], st)
+            with np.errstate(divide="ignore", invalid="ignore"):
+                s = np.round(dots / den, 6)
+            ii, jj = np.nonzero((s >= thr) & (ids_[i][:, None] < ids_[None, :]))
+            yield pd.DataFrame({"id_a": ids_[i][ii], "id_b": ids_[jj], metric: s[ii, jj]})
+
+    schema = T.StructType(
+        [T.StructField("id_a", id_type), T.StructField("id_b", id_type),
+         T.StructField(metric, T.DoubleType())]
+    )
+    parts = max(1, spark.sparkContext.defaultParallelism)
+    return spark.range(len(ids), numPartitions=parts).mapInPandas(score, schema)
+
+
+def _topk(cand: DataFrame, k: int) -> DataFrame:
+    """Per-query top-k of ``(query_id, neighbor_id, cosine)`` rows:
+    cosine descending, then neighbor id ascending; ``rank`` from 1."""
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("cosine").desc(), F.col("neighbor_id").asc()
+    )
+    return (
+        cand.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("query_id", "neighbor_id", "rank", "cosine")
+    )
+
+
 def brute_force_topk(
     queries: DataFrame,
     corpus: DataFrame,
@@ -70,12 +190,11 @@ def brute_force_topk(
     query_vec: str = "embedding",
     corpus_vec: str = "embedding",
     exclude_self: bool = True,
-    round_digits: int | None = 6,
 ) -> DataFrame:
     """Exact cosine top-k neighbors for each query row.
 
-    Output: (query_id, neighbor_id, rank, cosine). Ties broken by
-    neighbor id for determinism.
+    Output: (query_id, neighbor_id, rank, cosine), cosine rounded to 6
+    digits. Ties broken by neighbor id for determinism.
     """
     # Physical strategy: broadcast the query matrix (numpy) to the
     # executors and scan the corpus once with a blocked BLAS matmul per
@@ -83,52 +202,37 @@ def brute_force_topk(
     # shipped to Python is O(corpus + Q*k*batches), never the Q x N
     # pair table (the crossJoin formulation moved 2M pairs of 64-float
     # arrays through Arrow; this moves 2k rows).
-    from pyspark.sql import types as T
-
     q_rows = queries.select(
         F.col(query_id).alias("query_id"), F.col(query_vec).alias("__qv")
     ).collect()  # bounded: the broadcast-side query set
+    # schema must match on both paths (actual id types, rank from
+    # row_number is int) — a hardcoded long schema breaks unions/joins
+    # only in the empty-input case
+    cand_fields = [
+        T.StructField("query_id", queries.schema[query_id].dataType),
+        T.StructField("neighbor_id", corpus.schema[corpus_id].dataType),
+    ]
     if not q_rows:
-        # schema must match the non-empty path exactly (actual id types,
-        # rank from row_number is int) — a hardcoded long schema breaks
-        # unions/joins only in the empty-input case
-        empty_schema = T.StructType(
-            [
-                T.StructField("query_id", queries.schema[query_id].dataType),
-                T.StructField("neighbor_id", corpus.schema[corpus_id].dataType),
-                T.StructField("rank", T.IntegerType()),
-                T.StructField("cosine", T.DoubleType()),
-            ]
+        empty = T.StructType(
+            cand_fields
+            + [T.StructField("rank", T.IntegerType()), T.StructField("cosine", T.DoubleType())]
         )
-        return queries.sparkSession.createDataFrame([], empty_schema)
+        return queries.sparkSession.createDataFrame([], empty)
     qids = np.array([r["query_id"] for r in q_rows])
     qmat = np.stack([np.asarray(r["__qv"], dtype=np.float64) for r in q_rows])
-    qnorm = np.linalg.norm(qmat, axis=1)
-    sc = queries.sparkSession.sparkContext
-    bq = sc.broadcast((qids, qmat, qnorm))
-    kk, rd, excl = k, round_digits, exclude_self
-
-    from pyspark.sql import types as T
-
-    id_type = corpus.schema[corpus_id].dataType
-    out_schema = T.StructType(
-        [
-            T.StructField("query_id", queries.schema[query_id].dataType),
-            T.StructField("neighbor_id", id_type),
-            T.StructField("cosine", T.DoubleType()),
-        ]
+    bq = queries.sparkSession.sparkContext.broadcast(
+        (qids, qmat, np.linalg.norm(qmat, axis=1))
     )
+    kk, excl = k, exclude_self
 
     def score(batches):
         qids_, qmat_, qnorm_ = bq.value
         for pdf in batches:
             if pdf.empty:
                 continue
-            cmat = np.stack(pdf["__cv"].to_numpy()).astype(np.float64)
+            cmat = _stack(pdf["__cv"])
             cnorm = np.linalg.norm(cmat, axis=1)
-            sims = (cmat @ qmat_.T) / np.outer(cnorm, qnorm_)  # |batch| x Q
-            if rd is not None:
-                sims = np.round(sims, rd)
+            sims = np.round((cmat @ qmat_.T) / np.outer(cnorm, qnorm_), 6)  # |batch| x Q
             nids = pdf["neighbor_id"].to_numpy()
             out = []
             for j, qid in enumerate(qids_):
@@ -146,15 +250,8 @@ def brute_force_topk(
 
     cand = corpus.select(
         F.col(corpus_id).alias("neighbor_id"), F.col(corpus_vec).alias("__cv")
-    ).mapInPandas(score, out_schema)
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        cand.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cosine")
-    )
+    ).mapInPandas(score, T.StructType(cand_fields + [T.StructField("cosine", T.DoubleType())]))
+    return _topk(cand, k)
 
 
 def _hyperplanes(dim: int, n_planes: int, seed: int = 42) -> list[list[float]]:
@@ -211,8 +308,6 @@ def lsh_sig_norm(
     hyperplanes are random; 1e-6 quantization noise is far below their
     scale), and the ~2⁻²⁰-probability exact-zero integer dot maps to
     bit 0 on every engine."""
-    from pyspark.sql.functions import pandas_udf
-
     if quantize:
         P = np.asarray(quantize_planes(planes), dtype=np.int64)
     else:
@@ -220,11 +315,7 @@ def lsh_sig_norm(
     weights = (1 << np.arange(P.shape[0])).astype(np.int64)
     q = quantize
 
-    def fn(v):
-        if len(v) == 0:
-            return pd.DataFrame({"sig": pd.Series([], dtype="int64"),
-                                 "norm": pd.Series([], dtype="float64")})
-        m = np.stack(v.to_numpy()).astype(np.float64)
+    def fn(m):
         if q:
             # guard the exact-int64 contract: |x| beyond ~1e5 (quantized
             # ~1e11, times a ~1e6 plane over 64 dims) approaches int64
@@ -236,19 +327,51 @@ def lsh_sig_norm(
                     "|x| <= 1e5 (unit-scale vectors); normalize first or "
                     "pass quantize=False"
                 )
-            mq = np.floor(m * QUANT_SCALE + 0.5).astype(np.int64)
-            bits = (mq @ P.T) > 0
+            m_ = np.floor(m * QUANT_SCALE + 0.5).astype(np.int64)
         else:
-            bits = (m @ P.T) > 0
-        return pd.DataFrame(
-            {
-                "sig": (bits @ weights).astype(np.int64),
-                "norm": np.linalg.norm(m, axis=1),
-            }
+            m_ = m
+        bits = (m_ @ P.T) > 0
+        return {"sig": (bits @ weights).astype(np.int64), "norm": np.linalg.norm(m, axis=1)}
+
+    return _vector_udf("struct<sig: long, norm: double>", P.shape[1], fn)(vec)
+
+
+def _probe_rerank(
+    queries: DataFrame,
+    corpus: DataFrame,
+    k: int,
+    query_id: str,
+    corpus_id: str,
+    vec_col: str,
+    exclude_self: bool,
+    index,
+    bucket,
+) -> DataFrame:
+    """Approximate top-k by probe and rerank. ``index(vec, probe)`` is
+    the Arrow-batch UDF struct of a vector (with its ``norm``);
+    ``bucket(key, probe)`` reads from that struct the corpus row's one
+    bucket (``probe=False``) or the array of buckets a query probes.
+    Each corpus row lives in one bucket, so a (query, neighbor) pair
+    joins at most once however many buckets the query probes — no
+    distinct needed before the top-k."""
+
+    def side(df: DataFrame, id_col: str, name: str, s: str, probe: bool) -> DataFrame:
+        key = df.select(
+            F.col(id_col).alias(name), F.col(vec_col).alias(f"v_{s}"),
+            index(F.col(vec_col), probe).alias("__k"),
+        )
+        b = bucket(F.col("__k"), probe)
+        return key.select(
+            name, f"v_{s}", F.col("__k.norm").alias(f"n_{s}"),
+            (F.explode(b) if probe else b).alias("__bucket"),
         )
 
-    fn.__annotations__ = {"v": pd.Series, "return": pd.DataFrame}
-    return pandas_udf("struct<sig: long, norm: double>")(fn)(vec)
+    pairs = side(corpus, corpus_id, "neighbor_id", "b", False).join(
+        side(queries, query_id, "query_id", "a", True), on="__bucket"
+    )
+    if exclude_self:
+        pairs = pairs.filter(F.col("query_id") != F.col("neighbor_id"))
+    return _topk(pairs.select("query_id", "neighbor_id", _cosine().alias("cosine")), k)
 
 
 def lsh_topk(
@@ -275,61 +398,25 @@ def lsh_topk(
     bucketing (see ``lsh_sig_norm``), which is what lets the driver
     carry a full cross-engine SQL oracle for this query."""
     planes = _hyperplanes(dim, n_planes, seed)
-    # materialize the signature once per query row, THEN derive the
-    # multiprobe variants with cheap XORs — never re-invoke the UDF.
-    # General Hamming radius: every bit-subset of size <= multiprobe
-    # (sum of C(n_planes, r) masks — callers choosing large radii are
-    # explicitly buying that probe fan-out)
-    from itertools import combinations
+    # the signature is computed once per query row; the multiprobe
+    # variants are cheap XORs of it. General Hamming radius: every
+    # bit-subset of size <= multiprobe (sum of C(n_planes, r) masks —
+    # callers choosing large radii are explicitly buying that fan-out)
+    masks = [
+        sum(1 << b for b in combo)
+        for r in range(min(multiprobe, n_planes) + 1)
+        for combo in combinations(range(n_planes), r)
+    ]
 
-    base_sig = F.col("__sig")
-    masks = [0]
-    for r in range(1, min(multiprobe, n_planes) + 1):
-        for combo in combinations(range(n_planes), r):
-            m = 0
-            for b in combo:
-                m |= 1 << b
-            masks.append(m)
-    probe_sigs = [base_sig.bitwiseXOR(F.lit(m)) if m else base_sig for m in masks]
-    q = queries.select(
-        F.col(query_id).alias("query_id"),
-        F.col(vec_col).alias("__qv"),
-        lsh_sig_norm(F.col(vec_col), planes, quantize=quantize).alias("__sn"),
-    ).select(
-        "query_id",
-        "__qv",
-        F.col("__sn.norm").alias("__qn"),
-        F.col("__sn.sig").alias("__sig"),
-    ).select(
-        "query_id",
-        "__qv",
-        "__qn",
-        F.explode(F.array_distinct(F.array(*probe_sigs))).alias("__bucket"),
-    )
-    c = corpus.select(
-        F.col(corpus_id).alias("neighbor_id"),
-        F.col(vec_col).alias("__cv"),
-        lsh_sig_norm(F.col(vec_col), planes, quantize=quantize).alias("__sn"),
-    ).select(
-        "neighbor_id",
-        "__cv",
-        F.col("__sn.norm").alias("__cn"),
-        F.col("__sn.sig").alias("__bucket"),
-    )
-    pairs = c.join(q, on="__bucket")
-    if exclude_self:
-        pairs = pairs.filter(F.col("query_id") != F.col("neighbor_id"))
-    sim = pairs.withColumn(
-        "cosine",
-        F.round(pair_dot(F.col("__qv"), F.col("__cv")) / (F.col("__qn") * F.col("__cn")), 6),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        sim.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cosine")
+    def bucket(key: Column, probe: bool) -> Column:
+        sig = key.getField("sig")
+        if not probe:
+            return sig
+        return F.array_distinct(F.array(*[sig.bitwiseXOR(F.lit(m)) if m else sig for m in masks]))
+
+    return _probe_rerank(
+        queries, corpus, k, query_id, corpus_id, vec_col, exclude_self,
+        lambda v, probe: lsh_sig_norm(v, planes, quantize=quantize), bucket,
     )
 
 
@@ -350,90 +437,38 @@ def ivf_topk(
     ``nprobe`` nearest cells and rerank members. Centroid table is tiny
     → broadcast; the only shuffle is the cell-id equi-join."""
     cent = (
-        corpus.select(F.col(vec_col).alias("__cv"))
-        .withColumn("__h", F.abs(F.hash(F.col("__cv").cast("string"), F.lit(seed))))
-        .orderBy("__h")
+        corpus.select(F.col(vec_col).alias("c"))
+        .orderBy(F.abs(F.hash(F.col("c").cast("string"), F.lit(seed))))
         .limit(n_cells)
-        .withColumn("cell", F.monotonically_increasing_id())
-        .select("cell", F.col("__cv").alias("centroid"))
+        .collect()  # n_cells rows — driver-tiny by design
     )
-    cent_rows = cent.collect()  # n_cells rows — driver-tiny by design
-    cell_ids = np.array([int(r["cell"]) for r in cent_rows], dtype=np.int64)
-    cent_mat = np.stack(
-        [np.asarray(r["centroid"], dtype=np.float64) for r in cent_rows]
-    )  # n_cells x dim
+    # cell id = position in the hash order, fixed on the driver
+    cent_mat = np.stack([np.asarray(r["c"], dtype=np.float64) for r in cent])
 
-    def _cells_norm(vec: Column, n: int) -> Column:
-        """``struct(cells: array<long>, norm: double)`` — the ``n``
-        nearest cells (by dot product, descending; ties by descending
-        cell id, matching the previous reversed ``array_sort`` on
-        (d, cell) structs) plus the L2 norm, from one batch matmul
-        against the broadcast-size centroid matrix. The previous form
-        evaluated ``n_cells`` interpreted ``aggregate`` dot expressions
-        PER ROW (CodegenFallback — at 10⁹ corpus rows × 16 cells that
-        dominates index build; the exact pattern NOTES measured 7.6×
-        slower elsewhere, VERDICT r02 #4)."""
-        from pyspark.sql.functions import pandas_udf
+    def cells_norm(vec: Column, probe: bool) -> Column:
+        """``struct(cells: array<long>, norm: double)`` — the nearest
+        cells (``nprobe`` for a query, 1 for a corpus row; dot product
+        descending, ties by descending cell id) plus the L2 norm, from
+        one batch matmul against the centroid matrix. Per-row
+        ``aggregate`` dot expressions over ``n_cells`` centroids would be
+        CodegenFallback — interpreted per element (VERDICT r02 #4)."""
+        cm, nn = cent_mat, nprobe if probe else 1
 
-        cm, cids, nn = cent_mat, cell_ids, n
-
-        def fn(v):
-            if len(v) == 0:
-                return pd.DataFrame(
-                    {"cells": pd.Series([], dtype="object"),
-                     "norm": pd.Series([], dtype="float64")}
-                )
-            m = np.stack(v.to_numpy()).astype(np.float64)
+        def fn(m):
             dots = m @ cm.T  # |batch| x n_cells
-            # primary: dot desc; secondary: cell id desc (lexsort's last
-            # key is primary)
-            order = np.lexsort((-cids[None, :].repeat(len(m), 0), -dots), axis=1)
-            top = cids[order[:, :nn]]
-            return pd.DataFrame(
-                {"cells": list(top), "norm": np.linalg.norm(m, axis=1)}
-            )
+            # lexsort's last key is primary: dot desc, then cell id desc
+            ids = np.broadcast_to(np.arange(len(cm)), dots.shape)
+            order = np.lexsort((-ids, -dots), axis=1)
+            return {
+                "cells": pd.Series(list(order[:, :nn]), dtype=object),
+                "norm": np.linalg.norm(m, axis=1),
+            }
 
-        fn.__annotations__ = {"v": pd.Series, "return": pd.DataFrame}
-        return pandas_udf("struct<cells: array<long>, norm: double>")(fn)(vec)
+        return _vector_udf("struct<cells: array<long>, norm: double>", cm.shape[1], fn)(vec)
 
-    c = corpus.select(
-        F.col(corpus_id).alias("neighbor_id"),
-        F.col(vec_col).alias("__cv"),
-        _cells_norm(F.col(vec_col), 1).alias("__cn_s"),
-    ).select(
-        "neighbor_id",
-        "__cv",
-        F.col("__cn_s.norm").alias("__cn"),
-        F.col("__cn_s.cells")[0].alias("cell"),
-    )
-    q = queries.select(
-        F.col(query_id).alias("query_id"),
-        F.col(vec_col).alias("__qv"),
-        _cells_norm(F.col(vec_col), nprobe).alias("__qn_s"),
-    ).select(
-        "query_id",
-        "__qv",
-        F.col("__qn_s.norm").alias("__qn"),
-        F.explode(F.col("__qn_s.cells")).alias("cell"),
-    )
-    pairs = c.join(q, on="cell")
-    if exclude_self:
-        pairs = pairs.filter(F.col("query_id") != F.col("neighbor_id"))
-    sim = pairs.withColumn(
-        "cosine",
-        F.round(pair_dot(F.col("__qv"), F.col("__cv")) / (F.col("__qn") * F.col("__cn")), 6),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    # no distinct: each corpus row lives in exactly ONE cell (nprobe=1
-    # above), so the cell equi-join yields each (query, neighbor) pair at
-    # most once even when the query probes several cells — a distinct
-    # here would only re-shuffle the already-k-sized output
-    return (
-        sim.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cosine")
+    return _probe_rerank(
+        queries, corpus, k, query_id, corpus_id, vec_col, exclude_self, cells_norm,
+        lambda key, probe: key.getField("cells") if probe else key.getField("cells")[0],
     )
 
 
@@ -450,92 +485,43 @@ def embedding_dup_pairs(
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs (cosine ≥ threshold).
 
-    ``exact`` does the all-pairs O(N²) scan (small N / verification);
-    default blocks by LSH bucket first (near-dup pairs almost surely
+    ``exact`` scores all pairs (small N / verification) through
+    ``dense_block_pairs`` and refuses a corpus over ``max_exact_rows``;
+    the default blocks by LSH bucket first (near-dup pairs almost surely
     agree on all sign bits when threshold is high)."""
     if exact:
-        # broadcast the full corpus matrix; each Arrow batch computes a
-        # block x corpus BLAS matmul and emits only threshold-passing
-        # pairs — O(n) Arrow traffic instead of the n^2/2 pair table.
-        # Exact mode requires a corpus that fits a broadcast — ENFORCED,
-        # not advisory: a silent driver collect of a 10^9-row corpus is
-        # the failure mode this guard exists to prevent.
-        n = df.count()
-        if n > max_exact_rows:
+        # ENFORCED, not advisory: a silent driver collect of a 10^9-row
+        # corpus is the failure mode this guard exists to prevent; the
+        # collect itself stops one row past the bound
+        rows = (
+            df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
+            .limit(max_exact_rows + 1)
+            .collect()
+        )
+        if len(rows) > max_exact_rows:
             raise ValueError(
-                f"embedding_dup_pairs(exact=True) on {n} rows exceeds "
-                f"max_exact_rows={max_exact_rows}; use exact=False (LSH-"
-                "blocked, scales linearly) or raise max_exact_rows "
+                f"embedding_dup_pairs(exact=True) on more than {max_exact_rows} "
+                f"rows exceeds max_exact_rows={max_exact_rows}; use exact=False "
+                "(LSH-blocked, scales linearly) or raise max_exact_rows "
                 "deliberately"
             )
-        rows = df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v")).collect()
-        ids = np.array([r["id"] for r in rows])
         mat = np.stack([np.asarray(r["v"], dtype=np.float64) for r in rows])
-        norm = np.linalg.norm(mat, axis=1)
-        sc = df.sparkSession.sparkContext
-        ball = sc.broadcast((ids, mat, norm))
-        thr = threshold
-
-        from pyspark.sql import types as T
-
-        id_type = df.schema[id_col].dataType
-        out_schema = T.StructType(
-            [
-                T.StructField("id_a", id_type),
-                T.StructField("id_b", id_type),
-                T.StructField("cosine", T.DoubleType()),
-            ]
-        )
-
-        def score(batches):
-            ids_, mat_, norm_ = ball.value
-            for pdf in batches:
-                if pdf.empty:
-                    continue
-                bm = np.stack(pdf["v"].to_numpy()).astype(np.float64)
-                bn = np.linalg.norm(bm, axis=1)
-                bids = pdf["id"].to_numpy()
-                sims = np.round((bm @ mat_.T) / np.outer(bn, norm_), 6)
-                ii, jj = np.nonzero((sims >= thr) & (bids[:, None] < ids_[None, :]))
-                yield pd.DataFrame(
-                    {"id_a": bids[ii], "id_b": ids_[jj], "cosine": sims[ii, jj]}
-                )
-
-        return (
-            df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
-            .mapInPandas(score, out_schema)
+        return dense_block_pairs(
+            df.sparkSession, np.array([r["id"] for r in rows]), mat,
+            np.linalg.norm(mat, axis=1), df.schema[id_col].dataType, "cosine", threshold,
         )
 
     planes = _hyperplanes(dim, n_planes, seed)
-    # signature + norm from ONE batch pass per side (the interpreted
-    # higher-order norm next to a vectorized signature was the r02
-    # CodegenFallback regression, VERDICT r02 #3)
-    a = df.select(
-        F.col(id_col).alias("id_a"),
-        F.col(vec_col).alias("__va"),
+    # signature + norm from ONE batch pass (the interpreted higher-order
+    # norm next to a vectorized signature was the r02 CodegenFallback
+    # regression, VERDICT r02 #3)
+    keyed = df.select(
+        F.col(id_col).alias("id"),
+        F.col(vec_col).alias("v"),
         lsh_sig_norm(F.col(vec_col), planes).alias("__sn"),
-    ).select(
-        "id_a", "__va",
-        F.col("__sn.norm").alias("__na"),
-        F.col("__sn.sig").alias("__bucket"),
-    )
-    b = df.select(
-        F.col(id_col).alias("id_b"),
-        F.col(vec_col).alias("__vb"),
-        lsh_sig_norm(F.col(vec_col), planes).alias("__sn"),
-    ).select(
-        "id_b", "__vb",
-        F.col("__sn.norm").alias("__nb"),
-        F.col("__sn.sig").alias("__bucket"),
-    )
-    pairs = a.join(b, on="__bucket").filter(F.col("id_a") < F.col("id_b"))
+    ).select("id", "v", F.col("__sn.norm").alias("n"), F.col("__sn.sig").alias("bucket"))
     return (
-        pairs.withColumn(
-            "cosine",
-            F.round(
-                pair_dot(F.col("__va"), F.col("__vb")) / (F.col("__na") * F.col("__nb")), 6
-            ),
-        )
+        blocked_self_join(keyed, ["bucket"], ("v", "n"))
+        .select("id_a", "id_b", _cosine().alias("cosine"))
         .filter(F.col("cosine") >= threshold)
-        .select("id_a", "id_b", "cosine")
     )

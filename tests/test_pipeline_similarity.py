@@ -71,20 +71,55 @@ def test_ivf_topk_runs(spark, emb):
     assert (got["rank"] <= 5).all()
 
 
-def test_embedding_dup_pairs_exact_path(spark, emb):
-    got = embedding_dup_pairs(emb, threshold=0.8, exact=True).toPandas()
+def _numpy_dup_pairs(emb, threshold):
     pdf = emb.toPandas()
     mat = np.stack(pdf["embedding"].map(np.asarray).values).astype(np.float64)
     ids = pdf["vec_id"].values
     norm = np.linalg.norm(mat, axis=1)
     sims = (mat @ mat.T) / np.outer(norm, norm)
     iu = np.triu_indices(len(ids), k=1)
-    exp = {
+    return {
         (min(ids[i], ids[j]), max(ids[i], ids[j]))
         for i, j in zip(*iu)
-        if round(sims[i, j], 6) >= 0.8
+        if round(sims[i, j], 6) >= threshold
     }
-    assert set(zip(got["id_a"], got["id_b"])) == exp
+
+
+def test_embedding_dup_pairs_exact_path(spark, emb):
+    # 0.8 pins the empty case (no pair of this corpus is that close);
+    # 0.3 pins a non-empty pair set (920 pairs at sf0.001)
+    sizes = []
+    for threshold in (0.8, 0.3):
+        got = embedding_dup_pairs(emb, threshold=threshold, exact=True).toPandas()
+        exp = _numpy_dup_pairs(emb, threshold)
+        assert len(got) == len(exp)
+        assert set(zip(got["id_a"], got["id_b"])) == exp
+        sizes.append(len(exp))
+    assert sizes[0] == 0 < sizes[1]
+
+
+def test_embedding_dup_pairs_lsh_path_within_exact(spark, emb):
+    """The default LSH-blocked path finds a subset of the exact pairs,
+    each with the exact path's cosine."""
+    exact = embedding_dup_pairs(emb, threshold=0.3, exact=True).toPandas()
+    lsh = embedding_dup_pairs(emb, threshold=0.3).toPandas()
+    assert len(lsh) > 0
+    m = lsh.merge(exact, on=["id_a", "id_b"], how="left", suffixes=("_l", "_e"))
+    assert m["cosine_e"].notna().all()
+    assert (m["cosine_l"] == m["cosine_e"]).all()
+
+
+def test_ivf_topk_probing_every_cell_is_exact(spark, emb):
+    """With ``nprobe == n_cells`` every corpus row is reranked, so IVF
+    returns the brute-force top-k: same neighbors, ranks and cosines."""
+    queries = emb.filter(F.col("vec_id") < 10)
+    cols = ["query_id", "rank", "neighbor_id", "cosine"]
+    exact = brute_force_topk(queries, emb, k=5).toPandas()[cols]
+    ivf = ivf_topk(queries, emb, k=5, n_cells=8, nprobe=8).toPandas()[cols]
+    exact = exact.sort_values(cols[:2]).reset_index(drop=True)
+    ivf = ivf.sort_values(cols[:2]).reset_index(drop=True)
+    assert len(exact) == 50
+    assert exact.equals(ivf), (exact, ivf)
 
 
 def test_multimodal_plumbing(spark):

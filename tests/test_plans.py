@@ -205,3 +205,14 @@ def test_unigram_logprob_totals_are_broadcast_lazy(spark):
     assert after == before
     plan = _plan(df)
     assert "BroadcastNestedLoopJoin" in plan or "BroadcastExchange" in plan
+
+
+def test_simhash_pairs_plan_has_one_join(spark):
+    """The SimHash pair finder joins the segment rows with themselves
+    once and nothing else: no join restoring zero-word documents as NULL
+    signatures it would drop again."""
+    from feast_spark.pipeline.dedup_text import simhash_pairs
+
+    docs = spark.read.parquet(f"{SF}/documents.parquet")
+    plan = _optimized(simhash_pairs(docs))
+    assert len(re.findall(r"\bJoin\b", plan)) == 1, plan
