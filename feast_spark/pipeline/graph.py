@@ -9,12 +9,17 @@
   convergence is O(log(diameter)) — 20 iterations cover diameters up to
   ~2^20, and near-dup graphs are overwhelmingly tiny cliques (3-5
   rounds in practice). If the loop ever exhausts ``max_iters`` with
-  labels still changing it RAISES (never silently returns unconverged
-  labels — a split component would let leakage_safe_split put
-  near-duplicates on both sides of a train/test split).
-* ``kmeans`` — Lloyd iterations over an embedding column: broadcast the
-  centroid matrix, assign each row via one BLAS matmul per Arrow batch
-  (mapInPandas), recompute means with a map-side-combinable aggregate.
+  labels still changing it RAISES (never returns unconverged labels —
+  a split component would let leakage_safe_split put near-duplicates
+  on both sides of a train/test split).
+* ``kmeans`` and ``assign_clusters`` — one nearest-centroid kernel,
+  ``_nearest`` (exact squared distances rounded to 6 digits, the
+  smaller cluster id winning a tie), run on each Arrow batch.
+  ``assign_clusters`` is the E-step against fixed centroids, one
+  vectorized UDF over the corpus. Each Lloyd iteration of ``kmeans`` is
+  one scan whose pandas map emits per-partition ``(cluster, sum,
+  count)`` rows the driver adds up (no join, no shuffle); its returned
+  assignments are ``assign_clusters`` against its returned centroids.
   Deterministic seeded init (hash-ordered sample).
 """
 
@@ -28,13 +33,14 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from feast_spark.pipeline.similarity import _seeded_sample, _stack, _vector_udf
+
 
 def connected_components(
     edges: DataFrame,
     src: str = "id_a",
     dst: str = "id_b",
     max_iters: int = 20,
-    raise_on_nonconverged: bool = True,
 ) -> DataFrame:
     """Label every vertex with the minimum vertex id of its component.
 
@@ -49,8 +55,7 @@ def connected_components(
     self-join) — the shortcutting step that makes long chains collapse
     in O(log diameter) rounds instead of O(diameter). Stops when no
     label changed; raises RuntimeError if ``max_iters`` is exhausted
-    while labels are still changing (pass ``raise_on_nonconverged=False``
-    to get the partial labels plus a warning instead — never silent).
+    while labels are still changing.
 
     The per-round convergence check is FREE: the old label rides along
     and an ``observe()`` metric counts changes during the SAME action
@@ -123,16 +128,11 @@ def connected_components(
             break
     sym_loops.unpersist()
     if changed != 0:
-        msg = (
+        raise RuntimeError(
             f"connected_components did not converge in {max_iters} iterations "
             f"({changed} labels still changing) — components may be split; "
             "raise max_iters"
         )
-        if raise_on_nonconverged:
-            raise RuntimeError(msg)
-        import warnings
-
-        warnings.warn(msg, RuntimeWarning, stacklevel=2)
     return labels
 
 
@@ -156,52 +156,32 @@ def dedup_groups_from_pairs(
     return out.withColumn("keep", F.col(id_col) == F.col("group_id"))
 
 
+def _nearest(m: np.ndarray, c: np.ndarray) -> np.ndarray:
+    """Index of each row's nearest centroid: the exact squared distance
+    per pair (no expansion identity — ``m·m − 2m·c + c·c`` loses ~1e-12
+    and can flip the rounding), rounded to 6 digits, the smaller
+    centroid index winning a tie (``argmin`` takes the first minimum).
+    Any engine computing the same rounded distances — the DuckDB oracle
+    of ``assign_clusters`` — picks the same centroid whatever its float
+    summation order. One centroid at a time keeps the temporary at
+    rows × dim, not rows × k × dim."""
+    d = np.stack([((m - cj) ** 2).sum(axis=1) for cj in c], axis=1)
+    return np.round(d, 6).argmin(axis=1).astype(np.int32)
+
+
 def assign_clusters(
     df: DataFrame,
     centroids: Sequence[Sequence[float]],
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    round_digits: int = 6,
 ) -> DataFrame:
-    """Nearest-centroid assignment given FIXED centroids (the k-means
-    E-step as a standalone, cross-engine-deterministic operator).
-
-    Squared distances are rounded to ``round_digits`` before the argmin
-    and ties break on the smaller cluster id, so any engine computing
-    the same rounded distances (e.g. a DuckDB SQL oracle) produces
-    identical assignments regardless of float summation order. One
-    broadcast + one corpus scan with a per-Arrow-batch BLAS matmul — no
-    shuffle.
-    """
-    from pyspark.sql import types as T
-
+    """``(id, cluster)``: each row's nearest of FIXED centroids (the
+    k-means E-step as a standalone, cross-engine-deterministic
+    operator), ``_nearest`` over each Arrow batch — one corpus scan, no
+    shuffle."""
     c = np.asarray(centroids, dtype=np.float64)
-    bc = df.sparkSession.sparkContext.broadcast(c)
-    rd = round_digits
-    out_schema = T.StructType(
-        [
-            T.StructField(id_col, df.schema[id_col].dataType),
-            T.StructField("cluster", T.IntegerType()),
-        ]
-    )
-
-    def assign(batches):
-        cm = bc.value
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            m = np.stack(pdf["v"].to_numpy()).astype(np.float64)
-            # exact squared distance per pair (no expansion identity —
-            # (m.m - 2m.c + c.c) loses ~1e-12 and can flip the rounding)
-            d = ((m[:, None, :] - cm[None, :, :]) ** 2).sum(axis=2)
-            d = np.round(d, rd)
-            # argmin with smaller-cluster-id tie-break (np.argmin takes
-            # the first minimum, which IS the smallest index)
-            yield pd.DataFrame(
-                {id_col: pdf[id_col], "cluster": d.argmin(axis=1).astype(np.int32)}
-            )
-
-    return df.select(id_col, F.col(vec_col).alias("v")).mapInPandas(assign, out_schema)
+    near = _vector_udf("struct<cluster: int>", c.shape[1], lambda m: {"cluster": _nearest(m, c)})
+    return df.select(id_col, near(F.col(vec_col))["cluster"].alias("cluster"))
 
 
 def kmeans(
@@ -213,95 +193,46 @@ def kmeans(
     seed: int = 42,
 ) -> tuple[DataFrame, list[list[float]]]:
     """Distributed Lloyd k-means. Returns (assignments df (id, cluster),
-    final centroid list). Each iteration: one broadcast + one scan with
-    per-batch BLAS assignment + one aggregate (sum/count per cluster,
-    map-side combinable). Deterministic hash-seeded init."""
-    from pyspark.sql import types as T
+    final centroid list).
 
-    spark = df.sparkSession
-    # deterministic farthest-point init over a hash-ordered sample
-    # (k-means++-style spread without RNG; plain hash-min init splits
-    # true clusters when two seeds land in one — measured 0.90 vs 1.0
-    # purity on separated gaussians)
-    sample = (
-        df.select(F.col(vec_col).alias("v"))
-        .withColumn("__h", F.abs(F.hash(F.col("v").cast("string"), F.lit(seed))))
-        .orderBy("__h")
-        .limit(max(32 * k, 256))
-        .collect()
-    )
-    pool = np.stack([np.asarray(r["v"], dtype=np.float64) for r in sample])
+    Init: farthest-point picks over a hash-ordered seeded sample
+    (k-means++-style spread without RNG; plain hash-min init splits
+    true clusters when two seeds land in one — measured 0.90 vs 1.0
+    purity on separated gaussians). Each iteration is one corpus scan
+    and one Spark job, with no join and no shuffle: a pandas map labels
+    each Arrow batch with ``_nearest`` and emits one ``(cluster, sum,
+    count)`` row per cluster and partition, which the driver adds up.
+    An empty cluster keeps its centroid; the loop stops early once no
+    centroid moves. The assignments are ``assign_clusters`` against the
+    returned centroids."""
+    pool = _seeded_sample(df, vec_col, max(32 * k, 256), seed)
     chosen = [0]
     d2 = ((pool - pool[0]) ** 2).sum(1)
     while len(chosen) < min(k, len(pool)):
-        nxt = int(d2.argmax())
-        chosen.append(nxt)
-        d2 = np.minimum(d2, ((pool - pool[nxt]) ** 2).sum(1))
-    centroids = pool[chosen]
-
-    out_schema = T.StructType(
-        [
-            T.StructField(id_col, df.schema[id_col].dataType),
-            T.StructField("cluster", T.IntegerType()),
-        ]
-    )
-    base = df.select(id_col, F.col(vec_col).alias("v"))
-
-    assign_df = None
+        chosen.append(int(d2.argmax()))
+        d2 = np.minimum(d2, ((pool - pool[chosen[-1]]) ** 2).sum(1))
+    cents = pool[chosen]
+    vecs = df.select(F.col(vec_col).alias("v"))
     for _ in range(iters):
-        bc = spark.sparkContext.broadcast(centroids)
+        c = cents
 
-        def assign(batches):
-            c = bc.value
+        def partial(batches):
+            s, n = np.zeros_like(c), np.zeros(len(c), np.int64)
             for pdf in batches:
-                if pdf.empty:
-                    continue
-                m = np.stack(pdf["v"].to_numpy()).astype(np.float64)
-                d = ((m * m).sum(1)[:, None] - 2 * (m @ c.T) + (c * c).sum(1)[None, :])
-                yield pd.DataFrame(
-                    {id_col: pdf[id_col], "cluster": d.argmin(1).astype(np.int32)}
-                )
+                if len(pdf):
+                    m = _stack(pdf["v"])
+                    hit = _nearest(m, c)[:, None] == np.arange(len(c))
+                    s += hit.T @ m
+                    n += hit.sum(axis=0)
+            yield pd.DataFrame({"cluster": np.arange(len(c)), "s": list(s), "n": n})
 
-        assign_df = base.mapInPandas(assign, out_schema)
-        joined = base.join(assign_df, on=id_col)
-        stats = (
-            joined.select(
-                "cluster", F.posexplode(F.col("v")).alias("pos", "x")
-            )
-            .groupBy("cluster", "pos")
-            .agg(F.sum("x").alias("s"), F.count("x").alias("n"))
-            .collect()
-        )
-        new_c = centroids.copy()
-        sums: dict[int, np.ndarray] = {}
-        counts: dict[int, int] = {}
-        dim = centroids.shape[1]
-        for r in stats:
-            sums.setdefault(r["cluster"], np.zeros(dim))[r["pos"]] = r["s"]
-            counts[r["cluster"]] = r["n"]
-        for c_id, vec in sums.items():
-            if counts.get(c_id):
-                new_c[c_id] = vec / counts[c_id]
-        if np.allclose(new_c, centroids, atol=1e-9):
-            centroids = new_c
+        s, n = np.zeros_like(cents), np.zeros(len(cents))
+        for r in vecs.mapInPandas(partial, "cluster int, s array<double>, n long").collect():
+            s[r["cluster"]] += r["s"]
+            n[r["cluster"]] += r["n"]
+        new = np.where(n[:, None] > 0, s / np.maximum(n, 1)[:, None], cents)
+        moved = not np.allclose(new, cents, atol=1e-9)
+        cents = new
+        if not moved:
             break
-        centroids = new_c
-    # final E-step so the returned assignments are consistent with the
-    # RETURNED centroids (when the loop exhausts `iters` without
-    # converging, the in-loop assign_df was computed against the
-    # previous centroid set)
-    bc_final = spark.sparkContext.broadcast(centroids)
-
-    def assign_final(batches):
-        c = bc_final.value
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            m = np.stack(pdf["v"].to_numpy()).astype(np.float64)
-            d = ((m * m).sum(1)[:, None] - 2 * (m @ c.T) + (c * c).sum(1)[None, :])
-            yield pd.DataFrame(
-                {id_col: pdf[id_col], "cluster": d.argmin(1).astype(np.int32)}
-            )
-
-    assign_df = base.mapInPandas(assign_final, out_schema)
-    return assign_df, [list(map(float, c)) for c in centroids]
+    return assign_clusters(df, cents, id_col, vec_col), [list(map(float, c)) for c in cents]

@@ -7,6 +7,7 @@ import pandas as pd
 from pyspark.sql import functions as F
 
 from feast_spark.pipeline.graph import (
+    assign_clusters,
     connected_components,
     dedup_groups_from_pairs,
     kmeans,
@@ -41,18 +42,22 @@ def test_dedup_groups_from_pairs(spark):
     assert got["keep"].tolist() == [True, False, False, True, True, True, False, True]
 
 
-def test_kmeans_recovers_clusters(spark):
-    # the provided embeddings table is label-unstructured (measured:
-    # same-label pairs are no more similar than random), so test
-    # cluster RECOVERY on properly separated synthetic gaussians
+def _gaussians(spark):
+    """500 rows around 5 well-separated centers, ``true_c`` the center."""
     rng = np.random.default_rng(5)
     centers = rng.normal(0, 10, size=(5, 16))
     rows = []
     for i in range(500):
         c = i % 5
         rows.append((i, (centers[c] + rng.normal(0, 0.5, 16)).tolist(), c))
-    pdf = pd.DataFrame(rows, columns=["vec_id", "embedding", "true_c"])
-    emb = spark.createDataFrame(pdf)
+    return spark.createDataFrame(pd.DataFrame(rows, columns=["vec_id", "embedding", "true_c"]))
+
+
+def test_kmeans_recovers_clusters(spark):
+    # the provided embeddings table is label-unstructured (measured:
+    # same-label pairs are no more similar than random), so test
+    # cluster RECOVERY on properly separated synthetic gaussians
+    emb = _gaussians(spark)
     assign, cents = kmeans(emb, k=5, iters=10)
     got = assign.join(emb.select("vec_id", "true_c"), on="vec_id").toPandas()
     purity = (
@@ -64,6 +69,32 @@ def test_kmeans_recovers_clusters(spark):
     # determinism
     _, cents2 = kmeans(emb, k=5, iters=10)
     assert np.allclose(np.array(cents), np.array(cents2))
+
+
+def test_kmeans_assignments_match_returned_centroids(spark):
+    """Stopped before convergence, the assignments are still the
+    nearest-centroid labels of the centroids it returns."""
+    emb = spark.read.parquet(f"{SF}/embeddings.parquet")
+    assign, cents = kmeans(emb, k=8, iters=2)
+    got = assign.toPandas().sort_values("vec_id").reset_index(drop=True)
+    exp = assign_clusters(emb, cents).toPandas().sort_values("vec_id").reset_index(drop=True)
+    assert len(got) == emb.count()
+    assert got["vec_id"].tolist() == exp["vec_id"].tolist()
+    assert got["cluster"].tolist() == exp["cluster"].tolist()
+
+
+def test_kmeans_one_job_per_iteration(spark):
+    """The init sample is one job and each Lloyd iteration one more,
+    each a single stage: no join and no shuffle in the iteration plan.
+    Two iterations never converge (the first moves every centroid off
+    its sample point), so both run."""
+    emb = _gaussians(spark)
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup(None) or [])
+    kmeans(emb, k=5, iters=2)
+    jobs = set(tracker.getJobIdsForGroup(None) or []) - before
+    assert len(jobs) == 1 + 2, jobs
+    assert all(len(tracker.getJobInfo(j).stageIds) == 1 for j in jobs)
 
 
 def test_connected_components_long_path_pointer_doubling(spark):
@@ -85,19 +116,6 @@ def test_connected_components_raises_on_nonconvergence(spark):
     )
     with _pytest.raises(RuntimeError, match="did not converge"):
         connected_components(edges, max_iters=1)
-
-
-def test_connected_components_warn_mode(spark):
-    import warnings
-
-    edges = spark.createDataFrame(
-        [(i, i + 1) for i in range(59)], "id_a long, id_b long"
-    )
-    with warnings.catch_warnings(record=True) as w:
-        warnings.simplefilter("always")
-        out = connected_components(edges, max_iters=1, raise_on_nonconverged=False)
-        assert out.count() == 60
-        assert any("did not converge" in str(x.message) for x in w)
 
 
 def test_assign_clusters_matches_brute_force(spark):

@@ -26,6 +26,13 @@ def _optimized(df) -> str:
     return df._jdf.queryExecution().optimizedPlan().toString()
 
 
+def _final(df) -> str:
+    """The plan as run: adaptive execution's final plan after an action,
+    where stage reuse shows."""
+    df.collect()
+    return _plan(df).split("== Initial Plan ==")[0]
+
+
 @pytest.fixture(scope="module")
 def ev(spark):
     return spark.read.parquet(f"{SF}/events.parquet")
@@ -216,3 +223,27 @@ def test_simhash_pairs_plan_has_one_join(spark):
     docs = spark.read.parquet(f"{SF}/documents.parquet")
     plan = _optimized(simhash_pairs(docs))
     assert len(re.findall(r"\bJoin\b", plan)) == 1, plan
+
+
+def test_embedding_dup_pairs_reads_corpus_once(spark):
+    """The LSH path's two self-join sides read one bucket shuffle (the
+    second as a ReusedExchange): one corpus scan, one signature pass and
+    one cosine pass."""
+    from feast_spark.pipeline.similarity import embedding_dup_pairs
+
+    emb = spark.read.parquet(f"{SF}/embeddings.parquet")
+    plan = _final(embedding_dup_pairs(emb, threshold=0.3))
+    assert plan.count("FileScan") == 1 and "ReusedExchange" in plan, plan
+    assert plan.count("ArrowEvalPython") == 2, plan
+
+
+@pytest.mark.parametrize("finder", ["lsh_topk", "ivf_topk"])
+def test_topk_index_runs_once_per_side(spark, finder):
+    """The index UDF runs once on the query side and once on the corpus
+    side, the cosine UDF once: no filter re-evaluates a UDF output."""
+    from feast_spark.pipeline import similarity
+
+    emb = spark.read.parquet(f"{SF}/embeddings.parquet")
+    plan = _final(getattr(similarity, finder)(emb.filter(F.col("vec_id") < 20), emb, k=3))
+    assert plan.count("ArrowEvalPython [run(") == 2, plan
+    assert plan.count("ArrowEvalPython [dot_fn(") == 1, plan
