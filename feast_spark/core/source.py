@@ -16,7 +16,9 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-_FILE_FORMATS = {"csv", "json", "parquet", "delta", "avro", "orc"}
+# formats whose schema Spark infers from the files themselves
+_INFERRED_FORMATS = {"csv", "json", "parquet", "avro", "orc"}
+_FILE_FORMATS = _INFERRED_FORMATS | {"delta"}  # delta reads its schema from its log
 
 
 def apply_field_mapping(df: DataFrame, mapping: dict[str, str]) -> DataFrame:
@@ -49,6 +51,8 @@ class SparkSource:
     field_mapping: dict[str, str] = field(default_factory=dict)
     date_partition_column: str | None = None
     read_options: dict[str, str] = field(default_factory=dict)
+    # (format, path, options), input files, schema of the last inferring read
+    _inferred: tuple | None = field(default=None, init=False, repr=False, compare=False)
 
     def __post_init__(self) -> None:
         set_count = sum(x is not None for x in (self.path, self.table, self.query))
@@ -59,12 +63,23 @@ class SparkSource:
 
     def load(self, spark: SparkSession) -> DataFrame:
         """Read and apply ``field_mapping`` renames (source col → feature
-        name; reference reverse-maps in utils.py:145-207)."""
+        name; reference reverse-maps in utils.py:145-207).
+
+        A path in a format whose schema Spark infers from the files
+        (parquet, orc, csv, json, avro) pays one Spark job per inferring
+        read, to open a footer or sample rows. The source keeps the
+        schema of its last inferring read with the file listing it came
+        from (``DataFrame.inputFiles()``) and the format, path and
+        ``read_options`` it was read with; a later load with the same
+        three reads with that schema and starts no job. If the listing
+        differs (a file added, removed or renamed: an overwrite, an
+        append, a stream batch), the load infers again, so it returns
+        what a fresh ``spark.read`` would. A file rewritten in place
+        under the same name is not detected; Spark's own writers never
+        reuse a file name. Session confs that steer inference (say
+        ``spark.sql.parquet.binaryAsString``) are not part of the key."""
         if self.path is not None:
-            reader = spark.read.format(self.file_format)
-            for k, v in self.read_options.items():
-                reader = reader.option(k, v)
-            df = reader.load(self.path)
+            df = self._read_path(spark)
         elif self.table is not None:
             # Iceberg path: ``catalog.db.table`` resolved by the session's
             # SparkCatalog conf (reference repo_config.py:261-268); on a
@@ -74,6 +89,22 @@ class SparkSource:
             df = spark.sql(self.query)
         if self.field_mapping:
             df = apply_field_mapping(df, self.field_mapping)
+        return df
+
+    def _read_path(self, spark: SparkSession) -> DataFrame:
+        def reader():
+            return spark.read.format(self.file_format).options(**self.read_options)
+
+        if self.file_format not in _INFERRED_FORMATS:
+            return reader().load(self.path)
+        key = (self.file_format, self.path, sorted(self.read_options.items()))
+        if self._inferred is not None and self._inferred[0] == key:
+            _, files, schema = self._inferred
+            df = reader().schema(schema).load(self.path)
+            if set(df.inputFiles()) == files:
+                return df
+        df = reader().load(self.path)
+        self._inferred = (key, set(df.inputFiles()), df.schema)
         return df
 
 

@@ -544,26 +544,26 @@ class FeatureStore:
         out = entity_rows
         for view_name, wanted in _group_refs(features).items():
             view = self.get_feature_view(view_name)
-            store = LocalOnlineStore(_os.path.join(online_path, view.name))
+            # one read (and one schema-inference job) per view's snapshot
+            snap = self.spark.read.parquet(_os.path.join(online_path, view.name))
             cols = wanted or view.feature_cols
             if cols is None:
                 # schema-less view: everything in ITS OWN snapshot that
                 # is not a key or timestamp
-                snap_cols = self.spark.read.parquet(store.path).columns
                 excl = set(view.join_keys) | {
                     view.timestamp_field,
                     view.created_timestamp_column,
                     "__bucket",
                 }
-                cols = [c for c in snap_cols if c not in excl]
+                cols = [c for c in snap.columns if c not in excl]
             dup = set(cols) & (set(out.columns) - set(view.join_keys))
             if dup:
                 raise ValueError(
                     f"online feature columns {sorted(dup)} from view "
                     f"{view_name!r} collide with columns already present"
                 )
-            out = store.get_online_features(
-                self.spark,
+            out = LocalOnlineStore.lookup(
+                snap,
                 out,
                 view.join_keys,
                 cols,

@@ -131,7 +131,24 @@ class LocalOnlineStore:
         snapshot row older than ``now - ttl`` serves NULL features, the
         same contract as the reference online path — previously expired
         features were silently served (VERDICT r01 missing #2)."""
-        snap = spark.read.parquet(self.path)
+        return self.lookup(
+            spark.read.parquet(self.path), entity_rows, join_keys, feature_cols,
+            ttl_seconds=ttl_seconds, now=now, ts_col=ts_col,
+        )
+
+    @staticmethod
+    def lookup(
+        snap: DataFrame,
+        entity_rows: DataFrame,
+        join_keys: Sequence[str],
+        feature_cols: Sequence[str] | None = None,
+        *,
+        ttl_seconds: int | None = None,
+        now=None,
+        ts_col: str = "event_timestamp",
+    ) -> DataFrame:
+        """``get_online_features`` over an already-read snapshot frame,
+        for a caller that needed the snapshot's columns first."""
         keys = list(join_keys)
         sel = (
             keys + list(feature_cols)

@@ -151,3 +151,23 @@ def test_store_online_lookup_keeps_request_rows(spark, tmp_path):
     one = store.get_online_features(["va:f1"], req, root, now=now)
     buckets = one.select(F.pmod(F.hash("doc_id"), F.lit(N_BUCKETS))).distinct()
     assert "Join" not in buckets._jdf.queryExecution().optimizedPlan().toString()
+
+
+def test_schemaless_online_lookup_reads_snapshot_once(spark, tmp_path):
+    """A view without a schema serves every snapshot column but its keys
+    and timestamps, from one read of its snapshot: the same columns and
+    the same Spark jobs as naming the feature."""
+    pdf = datagen.token_sequences(n_docs=20, versions_per_doc=3, seed=7)[
+        ["doc_id", "event_timestamp", "n_tok"]
+    ]
+    store = FeatureStore(spark)
+    store.apply(FeatureView(name="v", source=DataFrameSource(df=datagen.to_spark(spark, pdf)),
+                            entities=[Entity("doc_id")]))
+    root = str(tmp_path / "online")
+    store.materialize_online("v", root)
+    req = spark.createDataFrame(pd.DataFrame({"doc_id": ["doc_00000001", "nope"]}))
+    named, named_jobs = _new_jobs(spark, lambda: store.get_online_features(["v:n_tok"], req, root))
+    every, every_jobs = _new_jobs(spark, lambda: store.get_online_features(["v"], req, root))
+    assert every.columns == named.columns == ["doc_id", "n_tok"]
+    assert every_jobs == named_jobs
+    assert sorted(map(tuple, every.collect())) == sorted(map(tuple, named.collect()))

@@ -1,11 +1,13 @@
-"""SparkSource format round-trips (csv/json/parquet/orc), field_mapping,
-query/table sources, RetrievalJob.to_arrow."""
+"""SparkSource format round-trips (csv/json/parquet/orc), the schema
+cache of path sources, field_mapping, query/table sources,
+RetrievalJob.to_arrow."""
 
-import pandas as pd
 import pytest
+from pyspark.sql import functions as F
 
 from feast_spark import datagen
-from feast_spark.core.source import ParquetSource, QuerySource, SparkSource, TableSource
+from feast_spark.core.source import QuerySource, SparkSource, TableSource
+from tests.test_online import _new_jobs
 
 
 @pytest.fixture(scope="module")
@@ -29,6 +31,63 @@ def test_format_round_trip(spark, sample, tmp_path, fmt):
     back = src.load(spark)
     assert back.count() == len(pdf)
     assert set(back.columns) == set(pdf.columns)
+    again, jobs = _new_jobs(spark, lambda: src.load(spark))
+    assert jobs == 0 and again.schema == back.schema and again.count() == len(pdf)
+
+
+def _rows(df):
+    return sorted(map(tuple, df.collect()))
+
+
+def _same_as_fresh(spark, src):
+    got, fresh = src.load(spark), spark.read.parquet(src.path)
+    assert got.schema == fresh.schema
+    assert _rows(got) == _rows(fresh)
+
+
+def test_second_load_of_unchanged_path_starts_no_job(spark, sample, tmp_path):
+    """The first load infers the schema (one job reads a footer); a
+    second load of the same files reads with that schema and starts
+    none."""
+    df, _ = sample
+    path = str(tmp_path / "src")
+    df.write.parquet(path)
+    src = SparkSource(path=path)
+    first, jobs = _new_jobs(spark, lambda: src.load(spark))
+    assert jobs == 1
+    second, jobs = _new_jobs(spark, lambda: src.load(spark))
+    assert jobs == 0
+    assert second.schema == first.schema and _rows(second) == _rows(first)
+
+
+def test_cached_schema_keeps_date_partition_column(spark, sample, tmp_path):
+    """A date-partitioned path: both loads give the inferred partition
+    column, typed ``date`` and last, and the same rows."""
+    df, pdf = sample
+    path = str(tmp_path / "by_day")
+    df.withColumn("day", F.to_date("event_timestamp")).write.partitionBy("day").parquet(path)
+    src = SparkSource(path=path, date_partition_column="day")
+    first, second = src.load(spark), src.load(spark)
+    assert first.schema == second.schema
+    assert second.columns[-1] == "day" and second.schema["day"].dataType.typeName() == "date"
+    assert _rows(second) == _rows(first) and len(_rows(second)) == len(pdf)
+    _same_as_fresh(spark, src)
+
+
+def test_changed_listing_infers_again(spark, sample, tmp_path):
+    """An overwrite that adds a column, then an appended file: each next
+    load equals a fresh ``spark.read``."""
+    df, pdf = sample
+    path = str(tmp_path / "src")
+    df.write.parquet(path)
+    src = SparkSource(path=path)
+    src.load(spark)
+    df.withColumn("extra", F.lit(1)).write.mode("overwrite").parquet(path)
+    _same_as_fresh(spark, src)
+    assert "extra" in src.load(spark).columns
+    df.limit(3).withColumn("extra", F.lit(2)).write.mode("append").parquet(path)
+    _same_as_fresh(spark, src)
+    assert src.load(spark).count() == len(pdf) + 3
 
 
 def test_field_mapping_and_query_sources(spark, sample):

@@ -19,7 +19,7 @@ from feast_spark.core.feature_view import (
     Field,
     OnDemandFeatureView,
 )
-from feast_spark.core.source import DataFrameSource
+from feast_spark.core.source import DataFrameSource, ParquetSource
 from feast_spark.core.store import FeatureStore
 from tests.oracle import expected_pit_df
 
@@ -459,3 +459,41 @@ def test_sql_transformations_leave_no_temp_views(spark):
     after = temp_views()
     assert not {n for n in after if n.startswith(("__view_input_", "__odfv_input_"))}
     assert after == before
+
+
+def test_store_round_trip_compiles_once(spark, fixtures, tmp_path):
+    """A second identical store round trip (three-view retrieval,
+    materialize, online push and lookup, into fresh output paths)
+    compiles no whole-stage-codegen class: the JVM codegen cache holds
+    every class the first one compiled."""
+    _, spine, seqs, stats, glob = fixtures
+    paths = {n: str(tmp_path / n) for n in ("seqs", "stats", "glob")}
+    for n, pdf in zip(paths, (seqs, stats, glob)):
+        datagen.to_spark(spark, pdf).write.parquet(paths[n])
+    store = FeatureStore(spark)
+    store.apply([
+        FeatureView("seqs", ParquetSource(paths["seqs"], created_timestamp_column="created"),
+                    entities=[Entity("doc_id")], ttl=timedelta(days=3)),
+        FeatureView("stats", ParquetSource(paths["stats"]), entities=[Entity("doc_id")],
+                    ttl=timedelta(days=2),
+                    aggregations=[Aggregation("view_count", "sum", timedelta(days=1))]),
+        FeatureView("glob", ParquetSource(paths["glob"], created_timestamp_column="created")),
+    ])
+    spine_df = datagen.to_spark(spark, spine)
+    codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+
+    def round_trip(k):
+        job = store.get_historical_features(
+            spine_df, ["seqs:n_tok", "stats:sum_view_count_86400s", "glob:total_docs"]
+        )
+        rows = job.to_spark_df().collect()
+        store.materialize("seqs", str(tmp_path / f"offline{k}"))
+        online = str(tmp_path / f"online{k}")
+        store.materialize_online("seqs", online)
+        served = store.get_online_features(["seqs:n_tok"], spine_df, online, now=_T0).collect()
+        return sorted(map(str, rows)), sorted(map(str, served))
+
+    first = round_trip(1)
+    compiled = codegen.METRIC_COMPILATION_TIME().getCount()
+    assert round_trip(2) == first
+    assert codegen.METRIC_COMPILATION_TIME().getCount() == compiled
