@@ -229,23 +229,12 @@ class FileRegistry:
     def list_views(self) -> list[str]:
         return sorted(self._doc["views"])
 
-    def get_view_dict(self, name: str) -> dict:
-        return self._doc["views"][name]
-
     def load_view(self, name: str) -> FeatureView:
         return view_from_dict(self._doc["views"][name])
 
     def load_service(self, name: str) -> FeatureService:
         s = self._doc["services"][name]
         return FeatureService(name=s["name"], features=list(s["features"]))
-
-    def list_services(self) -> list[str]:
-        return sorted(self._doc["services"])
-
-    def delete_view(self, name: str) -> None:
-        self._doc["views"].pop(name, None)
-        self._doc["intervals"].pop(name, None)
-        self._flush()
 
     # ---------------------------------------------------------- saved datasets
     def apply_saved_dataset(self, name: str, path: str) -> None:
@@ -254,9 +243,6 @@ class FileRegistry:
 
     def saved_dataset_path(self, name: str) -> str:
         return self._doc["saved_datasets"][name]
-
-    def list_saved_datasets(self) -> list[str]:
-        return sorted(self._doc["saved_datasets"])
 
     # -------------------------------------------------- materialization state
     def apply_materialization(self, view_name: str, start, end) -> None:

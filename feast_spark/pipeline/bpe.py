@@ -42,6 +42,7 @@ defined for this operator.
 from __future__ import annotations
 
 import re
+from functools import partial
 from typing import Iterator, Sequence
 
 import pandas as pd
@@ -50,6 +51,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
 from feast_spark.pipeline.tokenize import PRETOKEN_PATTERN
+from feast_spark.session import collect_bounded
 
 # Static default merge table, rank = list position (lower merges
 # first). Deterministic literal on purpose — a fixed pretrained merge
@@ -73,33 +75,66 @@ DEFAULT_MERGES: tuple[tuple[str, str], ...] = (
     ("c", "u"), ("cu", "st"), ("w", "in"), ("win", "d"),
 )
 
+# ``bpe_learn`` runs its learning loop on the driver when that loop's
+# word re-tokenizations (vocabulary rows x merges) stay within this
+DRIVER_LEARN_BUDGET = 100_000_000
 
-def _learn_local(
-    wf: list[tuple[str, int]], n_merges: int, min_freq: int, mwl: int
-) -> tuple[list[tuple[str, str]], list[int]]:
-    """Driver-side learning loop over a collected (word, freq) vocab —
-    the vocab-gated fast path of ``bpe_learn``. Same inner tokenizer
-    (``_bpe_word``), same pair statistics (ALL adjacent positions,
-    freq-weighted), same argmax ordering (freq desc, then (l, r)
-    lexicographic) and ``min_freq`` early stop as the distributed
-    loop, so the two paths cannot disagree."""
-    merges: list[tuple[str, str]] = []
-    freqs: list[int] = []
-    for _ in range(n_merges):
-        ranks = {p: i for i, p in enumerate(merges)}
-        stats: dict[tuple[str, str], int] = {}
-        for w, f in wf:
-            toks = _bpe_word(w, ranks, mwl)
-            for pair in zip(toks, toks[1:]):
-                stats[pair] = stats.get(pair, 0) + f
-        if not stats:
-            break
-        pair, weight = min(stats.items(), key=lambda kv: (-kv[1], kv[0]))
-        if weight < min_freq:
-            break
-        merges.append(pair)
-        freqs.append(weight)
-    return merges, freqs
+
+def _best_pair_local(
+    wf: list[tuple[str, int]], ranks: dict[tuple[str, str], int], mwl: int
+) -> tuple[tuple[str, str], int] | None:
+    """One learning round over a collected (word, freq) vocab — the
+    vocab-gated fast path of ``bpe_learn``: the heaviest adjacent pair
+    and its weight under ``ranks``, ``None`` when no word has two
+    tokens. Same inner tokenizer (``_bpe_word``), same pair statistics
+    (ALL adjacent positions, freq-weighted) and same argmax ordering
+    (freq desc, then (l, r) lexicographic) as ``_best_pair_distributed``,
+    so the two paths cannot disagree."""
+    stats: dict[tuple[str, str], int] = {}
+    for w, f in wf:
+        toks = _bpe_word(w, ranks, mwl)
+        for pair in zip(toks, toks[1:]):
+            stats[pair] = stats.get(pair, 0) + f
+    return min(stats.items(), key=lambda kv: (-kv[1], kv[0]), default=None)
+
+
+def _best_pair_distributed(
+    words: DataFrame, ranks: dict[tuple[str, str], int], mwl: int
+) -> tuple[tuple[str, str], int] | None:
+    """``_best_pair_local`` over the distributed (word, freq) table: one
+    combinable shuffle + a 1-row collect."""
+    bc = words.sparkSession.sparkContext.broadcast(ranks)
+
+    def tok(ws: pd.Series) -> pd.Series:
+        rk = bc.value
+        return pd.Series([_bpe_word(w, rk, mwl) for w in ws])
+
+    tok.__annotations__ = {"ws": pd.Series, "return": pd.Series}
+    udf = pandas_udf("array<string>")(tok)
+    toked = words.withColumn("toks", udf(F.col("word")))
+    # explode of the empty pair array drops fully-merged
+    # (single-token) words — no separate filter needed
+    pairs = toked.select(
+        "freq",
+        F.explode(
+            F.zip_with(
+                F.slice(F.col("toks"), 1, F.greatest(F.size("toks") - 1, F.lit(0))),
+                F.slice(F.col("toks"), 2, F.greatest(F.size("toks") - 1, F.lit(0))),
+                lambda a, b: F.struct(a.alias("l"), b.alias("r")),
+            )
+        ).alias("pair"),
+    )
+    best = (
+        pairs.groupBy("pair")
+        .agg(F.sum("freq").alias("w"))
+        .orderBy(F.col("w").desc(), F.col("pair.l").asc(), F.col("pair.r").asc())
+        .limit(1)
+        .collect()
+    )
+    # the round's only job has consumed the broadcast — release
+    # its executor blocks instead of leaking one per merge
+    bc.unpersist()
+    return ((best[0]["pair"]["l"], best[0]["pair"]["r"]), int(best[0]["w"])) if best else None
 
 
 def _bpe_word(
@@ -196,7 +231,6 @@ def bpe_learn(
     min_freq: int = 2,
     max_word_len: int = 16,
     with_freqs: bool = False,
-    driver_vocab_rows: int | None = 1_000_000,
 ) -> list[tuple[str, str]] | list[tuple[str, str, int]]:
     """Learn a BPE merge table from a corpus, Spark-side.
 
@@ -217,28 +251,20 @@ def bpe_learn(
     taken over — so a correctness oracle can check the statistics, not
     just the chosen pairs.
 
-    Vocab-gated driver loop: the expensive distributed work is the ONE
-    corpus scan that builds the distinct (word, freq) table; the
-    learning loop itself only ever touches that vocabulary-sized
-    table. When ``vocab_rows * max(n_merges, 1) <= driver_vocab_rows *
-    100`` it is collected once and the loop runs driver-side through
-    the IDENTICAL ``_bpe_word`` + argmax-with-lex-tie-break code,
-    eliminating ``n_merges`` Spark job round-trips (16 rounds: 8.3 s →
-    ~1.5 s at sf0.1, which has a 30-word vocab — the per-round cost was
-    100% scheduler/Arrow overhead). The gate bounds the collect (the
-    default 1M admits a 1M-row vocab ≈ tens of MB, the same pattern as
-    the byte gate in front of ``dedup_text.ngram_jaccard_pairs``'s
-    dense path) and the driver's compute:
-    every driver round re-tokenizes the whole vocab, so the driver runs
-    at most ``driver_vocab_rows * 100`` word re-tokenizations (a 1M
-    vocab at 100 merges, a 10k vocab at 10k merges). Above the gate (or
-    ``driver_vocab_rows=None``) the per-round distributed loop runs: one
-    combinable shuffle + a 1-row collect per merge. Both paths produce
-    identical merges (pinned by a test); exact integer statistics and
-    the same deterministic ordering on both."""
+    Vocab-gated driver loop: the learning loop only ever touches the
+    vocabulary-sized (word, freq) table. When it has at most
+    ``DRIVER_LEARN_BUDGET // max(n_merges, 1)`` rows, one bounded
+    collect (``session.collect_bounded``) brings it to the driver and
+    each round runs there through the IDENTICAL ``_bpe_word`` +
+    argmax-with-lex-tie-break code, without ``n_merges`` Spark job
+    round-trips (16 rounds: 8.3 s → ~1.5 s at sf0.1, a 30-word vocab).
+    Each driver round re-tokenizes the whole vocab, so the driver does
+    at most ``DRIVER_LEARN_BUDGET`` word re-tokenizations (a 1M vocab at
+    100 merges, a 10k vocab at 10k merges). Above the bound each round
+    is one combinable shuffle + a 1-row collect. Both paths produce
+    identical merges (pinned by a test)."""
     if n_merges < 0:
         raise ValueError("n_merges must be >= 0")
-    spark = df.sparkSession
     words = (
         df.select(
             F.explode(
@@ -262,54 +288,22 @@ def bpe_learn(
         .coalesce(max(2, df.sparkSession.sparkContext.defaultParallelism // 8))
         .persist()
     )
-    merges: list[tuple[str, str]] = []
-    freqs: list[int] = []
     try:
-        budget = None if driver_vocab_rows is None else int(driver_vocab_rows) * 100
-        if budget is not None and words.count() * max(int(n_merges), 1) <= budget:
-            wf = [(r["word"], int(r["freq"])) for r in words.collect()]
-            merges, freqs = _learn_local(wf, int(n_merges), int(min_freq), int(max_word_len))
-            if with_freqs:
-                return [(lft, rgt, f) for (lft, rgt), f in zip(merges, freqs)]
-            return merges
+        vocab = collect_bounded(words, DRIVER_LEARN_BUDGET // max(int(n_merges), 1))
+        if vocab is None:
+            best_pair = partial(_best_pair_distributed, words)
+        else:
+            best_pair = partial(
+                _best_pair_local, list(zip(vocab["word"].to_pylist(), vocab["freq"].to_pylist()))
+            )
+        merges: list[tuple[str, str]] = []
+        freqs: list[int] = []
         for _ in range(int(n_merges)):
-            ranks = {pair: i for i, pair in enumerate(merges)}
-            bc = spark.sparkContext.broadcast(ranks)
-            mwl = int(max_word_len)
-
-            def tok(ws: pd.Series) -> pd.Series:
-                rk = bc.value
-                return pd.Series([_bpe_word(w, rk, mwl) for w in ws])
-
-            tok.__annotations__ = {"ws": pd.Series, "return": pd.Series}
-            udf = pandas_udf("array<string>")(tok)
-            toked = words.withColumn("toks", udf(F.col("word")))
-            # explode of the empty pair array drops fully-merged
-            # (single-token) words — no separate filter needed
-            pairs = toked.select(
-                "freq",
-                F.explode(
-                    F.zip_with(
-                        F.slice(F.col("toks"), 1, F.greatest(F.size("toks") - 1, F.lit(0))),
-                        F.slice(F.col("toks"), 2, F.greatest(F.size("toks") - 1, F.lit(0))),
-                        lambda a, b: F.struct(a.alias("l"), b.alias("r")),
-                    )
-                ).alias("pair"),
-            )
-            best = (
-                pairs.groupBy("pair")
-                .agg(F.sum("freq").alias("w"))
-                .orderBy(F.col("w").desc(), F.col("pair.l").asc(), F.col("pair.r").asc())
-                .limit(1)
-                .collect()
-            )
-            # the round's only job has consumed the broadcast — release
-            # its executor blocks instead of leaking one per merge
-            bc.unpersist()
-            if not best or best[0]["w"] < int(min_freq):
+            best = best_pair({p: i for i, p in enumerate(merges)}, int(max_word_len))
+            if best is None or best[1] < int(min_freq):
                 break
-            merges.append((best[0]["pair"]["l"], best[0]["pair"]["r"]))
-            freqs.append(int(best[0]["w"]))
+            merges.append(best[0])
+            freqs.append(best[1])
     finally:
         words.unpersist()
     if with_freqs:

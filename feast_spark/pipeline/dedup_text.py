@@ -62,6 +62,7 @@ from feast_spark.pipeline.text import (
     portable_hash64,
     word_tokens,
 )
+from feast_spark.session import collect_bounded
 
 MERSENNE31 = (1 << 31) - 1  # 2147483647, prime
 
@@ -146,9 +147,10 @@ def _jaccard(common: Column, size_a: Column, size_b: Column) -> Column:
     return F.round(common / (size_a + size_b - common), 6)
 
 
-# the dense n-gram path needs a vocabulary at most this large (besides
-# its docs x vocab byte budget)
+# the dense n-gram path needs a vocabulary at most this large and a
+# docs x vocab float32 incidence matrix at most this many bytes
 GRAM_VOCAB_LIMIT = 20_000
+DENSE_BUDGET_BYTES = 256 * 1024 * 1024
 
 
 def ngram_jaccard_pairs(
@@ -158,7 +160,6 @@ def ngram_jaccard_pairs(
     n: int = 3,
     threshold: float = 0.8,
     max_doc_freq: int | None = None,
-    dense_budget_bytes: int = 256 * 1024 * 1024,
 ) -> DataFrame:
     """Exact Jaccard-similar pairs via an inverted shingle index.
 
@@ -171,7 +172,7 @@ def ngram_jaccard_pairs(
 
     Adaptive dense path: when the distinct-shingle vocabulary is small
     (≤ ``GRAM_VOCAB_LIMIT``) AND the docs×vocab incidence matrix fits
-    ``dense_budget_bytes`` (float32 cells — the gate is on BYTES, not
+    ``DENSE_BUDGET_BYTES`` (float32 cells — the gate is on BYTES, not
     vocab alone, so a 100 TB corpus of short/templated docs with a tiny
     vocabulary can NOT walk into an n_docs-sized driver collect), the
     posting join degenerates (every doc shares shingles with every
@@ -179,7 +180,8 @@ def ngram_jaccard_pairs(
     (``dense_block_pairs``: docs×vocab · vocab×docs, BLAS) computes the
     same exact intersection counts with O(corpus) Arrow traffic instead.
     Chosen automatically from one combined distinct count; over budget
-    it falls back to the posting join regardless of vocabulary size.
+    it falls back to the posting join regardless of vocabulary size, as
+    it does when the dense collect finds more documents than fit.
     """
     # posting index on xxhash64(shingle): joining/shuffling 8-byte longs
     # instead of shingle strings measured ~1.6x faster on the pair-count
@@ -218,16 +220,17 @@ def ngram_jaccard_pairs(
     margin = 1.0 + 4 * _RSD  # 4 sigma of HLL relative error
     n_vocab = int(counts["nv"] * margin)
     n_docs = int(counts["nd"] * margin)
-    if n_vocab <= GRAM_VOCAB_LIMIT and n_docs * n_vocab * 4 <= dense_budget_bytes:
-        out = _jaccard_gram(sh, threshold)
-        # _jaccard_gram collects its input eagerly — the returned plan
-        # only references the broadcast matrix, so the postings cache can
-        # be dropped now (the posting-join path must keep it: the caller's
-        # lazy plan still reads it)
-        sh.unpersist()
-        if sh is not raw:
-            raw.unpersist()
-        return out
+    if n_vocab <= GRAM_VOCAB_LIMIT and n_docs * n_vocab * 4 <= DENSE_BUDGET_BYTES:
+        out = _jaccard_gram(sh, threshold, DENSE_BUDGET_BYTES // (4 * max(n_vocab, 1)))
+        if out is not None:
+            # _jaccard_gram collects its input eagerly — the returned plan
+            # only references the broadcast matrix, so the postings cache
+            # can be dropped now (the posting-join path must keep it: the
+            # caller's lazy plan still reads it)
+            sh.unpersist()
+            if sh is not raw:
+                raw.unpersist()
+            return out
     sizes = sh.groupBy("id").agg(F.count(F.lit(1)).alias("size"))
     common = (
         blocked_self_join(sh, ["shingle"])
@@ -242,20 +245,23 @@ def ngram_jaccard_pairs(
     )
 
 
-def _jaccard_gram(sh: DataFrame, threshold: float) -> DataFrame:
+def _jaccard_gram(sh: DataFrame, threshold: float, max_docs: int) -> DataFrame | None:
     """Dense exact Jaccard for small shingle vocabularies: the doc×vocab
     0/1 incidence matrix goes through ``dense_block_pairs``. Exact — the
     same pairs as the posting join. The matrix is sized from the ACTUAL
     collected vocabulary (the routing gate's count is an HLL estimate —
-    never an array bound)."""
-    rows = sh.groupBy("id").agg(F.collect_list("shingle").alias("hs")).collect()
-    vocab: dict = {}
-    cols = [[vocab.setdefault(h, len(vocab)) for h in r["hs"]] for r in rows]
-    mat = np.zeros((len(rows), len(vocab)), dtype=np.float32)
-    for i, c in enumerate(cols):
-        mat[i, c] = 1.0
+    never an array bound). ``None`` when more than ``max_docs``
+    documents have shingles."""
+    docs = collect_bounded(sh.groupBy("id").agg(F.collect_list("shingle").alias("hs")), max_docs)
+    if docs is None:
+        return None
+    hs = docs["hs"].combine_chunks()
+    row = np.repeat(np.arange(len(hs)), np.diff(hs.offsets.to_numpy()))
+    vocab, col = np.unique(hs.flatten().to_numpy(), return_inverse=True)
+    mat = np.zeros((len(hs), len(vocab)), dtype=np.float32)
+    mat[row, col] = 1.0
     return dense_block_pairs(
-        sh.sparkSession, np.array([r["id"] for r in rows]), mat, mat.sum(axis=1),
+        sh.sparkSession, docs["id"].to_numpy(), mat, mat.sum(axis=1),
         sh.schema["id"].dataType, "jaccard", threshold,
     )
 

@@ -41,12 +41,13 @@ The finders:
   The LSH path hash-partitions its keyed rows on bucket once; both join
   sides read that shuffle, so the corpus is scanned and signed once.
 
-Driver collects: the query set (``brute_force_topk``), ``n_cells``
-centroids (``ivf_topk``), and the matrices ``dense_block_pairs`` scores,
-each bounded by its caller (``max_exact_rows``; the n-gram path's byte
-gate). Brute force is O(Q×N) — fine for Q ≤ ~10³ against any N (one
-scan of the corpus, no shuffle). For Q ≈ N use the bucketed variants,
-whose shuffle is on bucket with bounded bucket sizes.
+Driver collects: the matrices ``dense_block_pairs`` scores, through
+``session.collect_bounded`` (``max_exact_rows``; the n-gram byte gate);
+the query set of ``brute_force_topk`` through Arrow, bounded only by
+its caller; ``_seeded_sample``'s ``n`` rows as ``Row`` objects. Brute
+force is O(Q×N) — fine for Q ≤ ~10³ against any N (one scan of the
+corpus, no shuffle). For Q ≈ N use the bucketed variants, whose
+shuffle is on bucket with bounded bucket sizes.
 """
 
 from __future__ import annotations
@@ -60,6 +61,8 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
+
+from feast_spark.session import collect_bounded
 
 
 def _stack(v: pd.Series) -> np.ndarray:
@@ -126,7 +129,10 @@ def _vector_udf(ret: str, dim: int, fn):
 def _seeded_sample(df: DataFrame, vec_col: str, n: int, seed: int) -> np.ndarray:
     """The first ``n`` vectors of ``df`` in ``hash(vector as string,
     seed)`` order, stacked into a float64 matrix: a rerun-stable seeded
-    sample without RNG state, collected to the driver (``n`` bounds it)."""
+    sample without RNG state, collected to the driver (``n`` bounds it).
+    A ``Row`` collect on purpose: it merges the per-partition top ``n``
+    on the driver, one stage; ``toArrow`` shuffles them to one
+    partition first, a second stage."""
     rows = (
         df.select(F.col(vec_col).alias("v"))
         .orderBy(F.abs(F.hash(F.col("v").cast("string"), F.lit(seed))))
@@ -232,7 +238,7 @@ def brute_force_topk(
     # arrays through Arrow; this moves 2k rows).
     q_rows = queries.select(
         F.col(query_id).alias("query_id"), F.col(query_vec).alias("__qv")
-    ).collect()  # bounded: the broadcast-side query set
+    ).toArrow()  # unbounded: only the caller keeps the query set small
     # schema must match on both paths (actual id types, rank from
     # row_number is int) — a hardcoded long schema breaks unions/joins
     # only in the empty-input case
@@ -240,14 +246,14 @@ def brute_force_topk(
         T.StructField("query_id", queries.schema[query_id].dataType),
         T.StructField("neighbor_id", corpus.schema[corpus_id].dataType),
     ]
-    if not q_rows:
+    if not q_rows.num_rows:
         empty = T.StructType(
             cand_fields
             + [T.StructField("rank", T.IntegerType()), T.StructField("cosine", T.DoubleType())]
         )
         return queries.sparkSession.createDataFrame([], empty)
-    qids = np.array([r["query_id"] for r in q_rows])
-    qmat = np.stack([np.asarray(r["__qv"], dtype=np.float64) for r in q_rows])
+    qids = q_rows["query_id"].to_numpy()
+    qmat = _stack(q_rows["__qv"].to_pandas())
     bq = queries.sparkSession.sparkContext.broadcast(
         (qids, qmat, np.linalg.norm(qmat, axis=1))
     )
@@ -513,23 +519,20 @@ def embedding_dup_pairs(
     agree on all sign bits when threshold is high)."""
     if exact:
         # ENFORCED, not advisory: a silent driver collect of a 10^9-row
-        # corpus is the failure mode this guard exists to prevent; the
-        # collect itself stops one row past the bound
-        rows = (
-            df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
-            .limit(max_exact_rows + 1)
-            .collect()
+        # corpus is the failure mode this guard exists to prevent
+        rows = collect_bounded(
+            df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v")), max_exact_rows
         )
-        if len(rows) > max_exact_rows:
+        if rows is None:
             raise ValueError(
                 f"embedding_dup_pairs(exact=True) on more than {max_exact_rows} "
                 f"rows exceeds max_exact_rows={max_exact_rows}; use exact=False "
                 "(LSH-blocked, scales linearly) or raise max_exact_rows "
                 "deliberately"
             )
-        mat = np.stack([np.asarray(r["v"], dtype=np.float64) for r in rows])
+        mat = _stack(rows["v"].to_pandas())
         return dense_block_pairs(
-            df.sparkSession, np.array([r["id"] for r in rows]), mat,
+            df.sparkSession, rows["id"].to_numpy(), mat,
             np.linalg.norm(mat, axis=1), df.schema[id_col].dataType, "cosine", threshold,
         )
 

@@ -36,12 +36,15 @@ RE2/DuckDB agree byte-for-byte — ``\\s`` itself differs between Java
 from __future__ import annotations
 
 import re
+import sys
 from typing import Iterable, Iterator, Sequence
 
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
+
+from feast_spark.session import collect_bounded
 
 PRETOKEN_PATTERN = r"[a-z0-9]+|[^a-z0-9 \t\n\r\f]"
 
@@ -224,8 +227,8 @@ def build_wordpiece_vocab(
 
     Plan shape: one combinable word-count shuffle over exploded words,
     substring generation via codegen array HOFs over DISTINCT words
-    only, one combinable piece-weight shuffle, one ``vocab_size``-bounded
-    collect."""
+    only, one combinable piece-weight shuffle, one bounded collect of
+    the one-character pieces and the ``vocab_size`` heaviest others."""
     if vocab_size < 1:
         raise ValueError("vocab_size must be >= 1")
     words = (
@@ -268,18 +271,19 @@ def build_wordpiece_vocab(
         .groupBy("piece")
         .agg(F.sum("freq").alias("weight"))
     )
-    chars = pieces.filter(
-        (F.length(F.regexp_replace("piece", "^##", "")) == 1)
-    )
+    piece_len = F.length(F.regexp_replace("piece", "^##", ""))
+    chars = pieces.filter(piece_len == 1).withColumn("char", F.lit(True))
     rest = (
-        pieces.filter(F.length(F.regexp_replace("piece", "^##", "")) >= 2)
-        .filter(F.col("weight") >= int(min_freq))
+        pieces.filter((piece_len >= 2) & (F.col("weight") >= int(min_freq)))
         .orderBy(F.col("weight").desc(), F.col("piece").asc())
+        .limit(vocab_size)
+        .withColumn("char", F.lit(False))
     )
-    base = [r["piece"] for r in chars.collect()]
-    budget = max(0, vocab_size - len(base))
-    top = [r["piece"] for r in rest.limit(budget).collect()]
-    return sorted(set(base) | set(top))
+    # never None: a one-character piece is a code point or "##" + [a-z0-9]
+    rows = collect_bounded(chars.unionByName(rest), vocab_size + sys.maxunicode + 37).to_pylist()
+    base = {r["piece"] for r in rows if r["char"]}
+    top = sorted((r for r in rows if not r["char"]), key=lambda r: (-r["weight"], r["piece"]))
+    return sorted(base | {r["piece"] for r in top[: max(0, vocab_size - len(base))]})
 
 
 def vocab_with_ids(

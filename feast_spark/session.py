@@ -22,7 +22,8 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
 
 
 def get_spark(
@@ -63,3 +64,12 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def collect_bounded(df: DataFrame, max_rows: int) -> pa.Table | None:
+    """``df`` as an Arrow table on the driver, or ``None`` when it has
+    more than ``max_rows`` rows. The collect reads at most one row past
+    the bound, so an oversized input costs ``max_rows + 1`` rows, not
+    its size; an empty input is an empty table with ``df``'s schema."""
+    table = df.limit(max_rows + 1).toArrow()
+    return None if table.num_rows > max_rows else table

@@ -72,13 +72,6 @@ class StreamProcessor:
             self.spark.readStream.schema(schema).format(file_format).load(path)
         )
 
-    def from_rate(self, rows_per_second: int = 100) -> DataFrame:
-        return (
-            self.spark.readStream.format("rate")
-            .option("rowsPerSecond", rows_per_second)
-            .load()
-        )
-
     # ------------------------------------------------------------ transforms
     def prepare(self, df: DataFrame) -> DataFrame:
         """Field-map renames + column pruning + watermark (reference

@@ -43,6 +43,8 @@ from typing import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from feast_spark.session import collect_bounded
+
 
 @dataclass(frozen=True)
 class Expect:
@@ -428,18 +430,12 @@ class DatasetProfiler:
             nul = float(row[f"__nul_{c}"] or 0.0)
             ex.append(Expect("null_ratio_max", column=c, value=min(1.0, nul + self.null_slack)))
             if int(row[f"__acd_{c}"]) <= self.max_value_set_size * 1.2:
-                vals = [
-                    r[0]
-                    for r in df.select(c)
-                    .filter(F.col(c).isNotNull())
-                    .distinct()
-                    .limit(self.max_value_set_size + 1)
-                    .collect()
-                ]
+                got = collect_bounded(df.select(c).dropna().distinct(), self.max_value_set_size)
+                vals = [] if got is None else got.column(0).to_pylist()
                 # all-NULL column -> vals == []: the set is unobservable
                 # (an empty value_set would fail EVERY future non-null
                 # value), mirror the numeric all-NULL skip
-                if vals and len(vals) <= self.max_value_set_size:
+                if vals:
                     ex.append(Expect("values_in_set", column=c, value_set=tuple(sorted(map(str, vals))) if all(isinstance(v, str) for v in vals) else tuple(vals)))
         return ValidationProfile(ex)
 

@@ -12,6 +12,7 @@ from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
+import feast_spark.pipeline.bpe as bpe_mod
 from feast_spark.pipeline.bpe import (
     DEFAULT_MERGES,
     bpe_encode,
@@ -186,7 +187,7 @@ def test_learn_matches_reference_trainer(spark):
     assert got[0] == ("t", "h")  # 'th' dominates this corpus
 
 
-def test_learn_driver_and_distributed_paths_agree(spark):
+def test_learn_driver_and_distributed_paths_agree(spark, monkeypatch):
     texts = [
         "the theme of the thesis",
         "banana bandana and sandbars",
@@ -194,20 +195,17 @@ def test_learn_driver_and_distributed_paths_agree(spark):
     ] * 2
     df = spark.createDataFrame(pd.DataFrame({"text": texts}))
     local = bpe_learn(df, n_merges=10, min_freq=2, with_freqs=True)
-    dist = bpe_learn(
-        df, n_merges=10, min_freq=2, with_freqs=True, driver_vocab_rows=None
-    )
+    monkeypatch.setattr(bpe_mod, "DRIVER_LEARN_BUDGET", 0)
+    dist = bpe_learn(df, n_merges=10, min_freq=2, with_freqs=True)
     assert local == dist
     assert len(local) > 0 and all(f >= 2 for *_, f in local)
 
 
 def test_learn_driver_gate_counts_merges(spark, monkeypatch):
     """The driver path is gated on vocab rows × merges, not rows alone:
-    13 distinct words fit ``driver_vocab_rows=13``, but 13 × 200 merges
-    exceed 13 × 100, so the distributed loop runs — and learns the same
-    merges as ``driver_vocab_rows=None``."""
-    import feast_spark.pipeline.bpe as bpe_mod
-
+    13 distinct words at 200 merges exceed a budget of 13 × 100, so the
+    distributed loop runs — and learns the same merges as a budget of 0,
+    which admits no vocabulary."""
     texts = [
         "the theme of the thesis",
         "banana bandana and sandbars",
@@ -215,17 +213,20 @@ def test_learn_driver_gate_counts_merges(spark, monkeypatch):
     ] * 2
     df = spark.createDataFrame(pd.DataFrame({"text": texts}))
     kw = dict(n_merges=200, min_freq=4, with_freqs=True)
-    dist = bpe_learn(df, driver_vocab_rows=None, **kw)
+    monkeypatch.setattr(bpe_mod, "DRIVER_LEARN_BUDGET", 0)
+    dist = bpe_learn(df, **kw)
 
     def no_driver_loop(*args):
         raise AssertionError("driver path taken")
 
-    monkeypatch.setattr(bpe_mod, "_learn_local", no_driver_loop)
-    assert bpe_learn(df, driver_vocab_rows=13, **kw) == dist
+    monkeypatch.setattr(bpe_mod, "_best_pair_local", no_driver_loop)
+    monkeypatch.setattr(bpe_mod, "DRIVER_LEARN_BUDGET", 13 * 100)
+    assert bpe_learn(df, **kw) == dist
     assert len(dist) > 0
+    # 13 × 200 <= 26 × 100: the same vocab takes the driver path
+    monkeypatch.setattr(bpe_mod, "DRIVER_LEARN_BUDGET", 26 * 100)
     with pytest.raises(AssertionError, match="driver path"):
-        # 13 × 200 <= 26 × 100: the same vocab takes the driver path
-        bpe_learn(df, driver_vocab_rows=26, **kw)
+        bpe_learn(df, **kw)
 
 
 def test_learn_min_freq_stops_early(spark):
